@@ -44,17 +44,32 @@ object MllibExport {
   private def d(x: Double) = x.toString // round-trips bit-exactly
 
   /** Serialize `model` as graft-sk-forest JSON; `classes(i)` is the
-    * original value MLlib class index `i` decodes to. Driver-side work is
-    * model-sized (the node tables), never data-sized. */
+    * original value MLlib class index `i` decodes to. Saves the model into
+    * a temp directory, deleted before returning, to read its node tables;
+    * a caller that has already saved the model uses [[savedToSkForestJson]]
+    * instead. */
   def toSkForestJson(spark: SparkSession,
                      model: RandomForestClassificationModel,
                      classes: Seq[Double]): String = {
+    val tmp = new org.apache.hadoop.fs.Path(java.nio.file.Files
+      .createTempDirectory("graft_mllib_export_").toUri)
+    try {
+      model.write.overwrite().save(tmp.toString)
+      savedToSkForestJson(spark, model, tmp.toString, classes)
+    } finally
+      tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
+  }
+
+  /** [[toSkForestJson]] over the node tables of `model` as already saved
+    * under `savedDir` (`model.write.save(savedDir)`), so nothing is written.
+    * Driver-side work is model-sized (the node tables), never data-sized. */
+  private[ml] def savedToSkForestJson(spark: SparkSession,
+                                      model: RandomForestClassificationModel,
+                                      savedDir: String,
+                                      classes: Seq[Double]): String = {
     require(classes.size == model.numClasses,
       s"export: ${classes.size} class values for ${model.numClasses} classes")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_mllib_export_").toString
-    model.write.overwrite().save(tmp)
-    val rows = spark.read.parquet(s"$tmp/data")
+    val rows = spark.read.parquet(s"$savedDir/data")
       .select("treeID", "nodeData.id", "nodeData.impurityStats",
         "nodeData.leftChild", "nodeData.rightChild",
         "nodeData.split.featureIndex",

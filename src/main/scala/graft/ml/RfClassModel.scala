@@ -136,7 +136,7 @@ final class RfClassModel(
     // ml_fit's +1 R-compat label shift.
     val spark = org.apache.spark.sql.SparkSession.active
     ProbeModels.write(spark, s"$path/skforest.json",
-      MllibExport.toSkForestJson(spark, m,
+      MllibExport.savedToSkForestJson(spark, m, s"$path/model",
         (0 until m.numClasses).map(_ - 1.0)))
   }
 }

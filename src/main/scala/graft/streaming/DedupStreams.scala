@@ -42,9 +42,16 @@ object DedupStreams {
     * plain `mode("append")` sink duplicates rows when a batch retries,
     * silently breaking any downstream hash/count. Deterministic per-batch
     * file names + delete-before-rename make a retry overwrite its own
-    * output instead. */
+    * output instead. The `repartition(1)` exchange keeps a map-only `df`
+    * computed at full parallelism; [[idempotentStatefulBatch]]'s outputs
+    * end in an aggregate, join or cache read and coalesce instead. */
   private[graft] def writeBatchFile(df: DataFrame,
-                                    dst: org.apache.hadoop.fs.Path): Unit = {
+                                    dst: org.apache.hadoop.fs.Path): Unit =
+    writeSingleFile(df.repartition(1), dst)
+
+  /** [[writeBatchFile]] of a frame that already has one partition. */
+  private def writeSingleFile(df: DataFrame,
+                              dst: org.apache.hadoop.fs.Path): Unit = {
     val spark = df.sparkSession
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // The temp dir is a SIBLING on dst's own FileSystem (underscore-
@@ -54,7 +61,7 @@ object DedupStreams {
     // name → a retry overwrites its own leftover.
     val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
       s"_tmp-${dst.getName}")
-    df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
+    df.write.mode("overwrite").parquet(tmp.toString)
     val part = fs.listStatus(tmp)
       .filter(_.getPath.getName.endsWith(".parquet")).headOption
       .getOrElse(sys.error(s"batch sink wrote no parquet part under $tmp"))
@@ -66,16 +73,27 @@ object DedupStreams {
     fs.delete(tmp, true)
   }
 
-  /** One idempotent stateful micro-batch: compute (out, newStoreRows) from
-    * the CURRENT store, then land both as deterministically-named per-batch
-    * files, then a done-marker. At-least-once foreachBatch retry semantics:
+  /** One idempotent stateful micro-batch: build the batch's `shared`
+    * decision frame against the CURRENT store, persist it, `split` it into
+    * (out, newStoreRows), land both as deterministically-named per-batch
+    * files, release the cache, then write a done-marker. At-least-once
+    * foreachBatch retry semantics:
     *  - a marker means the batch fully applied → skip (including its
     *    compaction round — maintenance defers to the next multiple);
     *  - no marker but stale partial files (a failed earlier attempt) →
-    *    delete them BEFORE `compute` reads the store, else the batch's own
+    *    delete them BEFORE `shared` reads the store, else the batch's own
     *    half-appended rows would poison its claim lookup;
-    *  - `compute` is forced (newRows pinned + counted) before either write,
-    *    so the store append never races its own plan-time file listing.
+    *  - `out` is written first and `newStoreRows` second, with no forcing
+    *    job in between. The append cannot race the store read: the store
+    *    DataFrame lists its files once, when the batch creates it before
+    *    either write, and every job of this batch (a recomputed cache block
+    *    included) scans that frozen listing; the new store file is written
+    *    under a `_tmp-` sibling and renamed in only after its own write job
+    *    has finished, when no job of this batch is left to run. The next
+    *    batch lists the store afresh and sees it.
+    * `out` ends in an aggregate or join above the cache, so its write
+    * fills the cache at full parallelism; `newStoreRows` is then a cache
+    * read. Both are coalesced to one partition, which adds no exchange.
     * File names carry `runId` because batchIds alone are NOT a pipeline
     * identity: a restarted or backfill query numbers its batches from 0
     * again, and (runId-less) cleanup would clobber the claims an earlier
@@ -83,7 +101,8 @@ object DedupStreams {
     * parquet readers of either dir skip them. */
   private def idempotentStatefulBatch(spark: SparkSession, runId: String,
       batchId: Long, outDir: String, storeDir: String)
-      (compute: => (DataFrame, DataFrame)): Boolean = {
+      (shared: => DataFrame)
+      (split: DataFrame => (DataFrame, DataFrame)): Boolean = {
     val outFile = new org.apache.hadoop.fs.Path(outDir,
       f"batch-$runId%s-$batchId%05d.parquet")
     val storeFile = new org.apache.hadoop.fs.Path(storeDir,
@@ -92,15 +111,15 @@ object DedupStreams {
       f"_batch-$runId%s-$batchId%05d.done")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) return false
-    // stale-file cleanup MUST precede `compute`: file listing for the
-    // store read can happen eagerly at DataFrame creation
+    // stale-file cleanup MUST precede `shared`: the store read lists its
+    // files eagerly at DataFrame creation
     Seq(outFile, storeFile).foreach(p => if (fs.exists(p)) fs.delete(p, false))
-    val (out, newRows) = compute
-    val pinned = newRows.persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.count()
-    writeBatchFile(out, outFile)
-    writeBatchFile(pinned, storeFile)
-    pinned.unpersist()
+    val pinned = shared.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (out, newRows) = split(pinned)
+      writeSingleFile(out.coalesce(1), outFile)
+      writeSingleFile(newRows.coalesce(1), storeFile)
+    } finally pinned.unpersist(blocking = true)
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()
     true
@@ -137,19 +156,38 @@ object DedupStreams {
     * exactly `min(doc_id)` per unclaimed bucket.
     */
   def dedupStep(sigs: DataFrame, claims: DataFrame,
-                idCol: String = "doc_id"): (DataFrame, DataFrame) = {
-    val old = claims.withColumnRenamed("_owner", "_old")
-    val batchMin = sigs.groupBy("band", "sig").agg(min(col(idCol)).as("_bmin"))
-    val joined = sigs
-      .join(batchMin.hint("shuffle_hash"), Seq("band", "sig"))
-      .join(old.hint("shuffle_hash"), Seq("band", "sig"), "left")
+                idCol: String = "doc_id"): (DataFrame, DataFrame) =
+    dedupSplit(storeJoin(sigs, claims, Seq("band", "sig"), idCol), idCol)
+
+  /** The batch's `rows` left-joined to the store on `keys`, each carrying
+    * its key's batch min (`_bmin`), whether it is the key's one owner row
+    * (`_own`), and the store's owner (`_old`, null when the key is new).
+    * Min and owner come from one window over `keys`, so `rows` is evaluated
+    * once, and the window's `keys` partitioning is the join's, so only the
+    * store side shuffles. `_own` is a row number, not `_bmin == id`: a
+    * redelivered batch row must not claim its key twice. */
+  private def storeJoin(rows: DataFrame, store: DataFrame, keys: Seq[String],
+                        idCol: String): DataFrame = {
+    // ascending id order: the running min over the default frame is
+    // already the key's min at every row
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
+    rows.withColumn("_bmin", min(col(idCol)).over(w))
+      .withColumn("_own", row_number().over(w) === 1)
+      .join(store.withColumnRenamed("_owner", "_old").hint("shuffle_hash"),
+        keys, "left")
+  }
+
+  /** (verdicts, newClaims) of a claim [[storeJoin]]: new claims are its
+    * owner rows the store had not claimed, so the store is scanned once. */
+  private def dedupSplit(joined: DataFrame,
+                         idCol: String): (DataFrame, DataFrame) = {
     val collided = col("_old").isNotNull || col("_bmin") =!= col(idCol)
     val verdicts = joined
       .groupBy(col(idCol))
       .agg(max(collided.cast("int")).as("_dup"))
       .select(col(idCol), (lit(1) - col("_dup")).as("kept"))
-    val newClaims = batchMin
-      .join(old.hint("shuffle_hash"), Seq("band", "sig"), "left_anti")
+    val newClaims = joined
+      .filter(col("_own") && col("_old").isNull)
       .select(col("band"), col("sig"), col("_bmin").as("_owner"))
     (verdicts, newClaims)
   }
@@ -244,12 +282,12 @@ object DedupStreams {
     * incrementally. StreamingSpec pins micro-batch-split ≡ whole-corpus.
     */
   def noveltyStep(grams: DataFrame, store: DataFrame,
-                  idCol: String = "doc_id"): (DataFrame, DataFrame) = {
-    val old = store.withColumnRenamed("_owner", "_old")
-    val batchMin = grams.groupBy("gram").agg(min(col(idCol)).as("_bmin"))
-    val joined = grams
-      .join(batchMin.hint("shuffle_hash"), Seq("gram"))
-      .join(old.hint("shuffle_hash"), Seq("gram"), "left")
+                  idCol: String = "doc_id"): (DataFrame, DataFrame) =
+    noveltySplit(storeJoin(grams, store, Seq("gram"), idCol), idCol)
+
+  /** (scores, newGrams) of a gram [[storeJoin]] ([[dedupSplit]]'s shape). */
+  private def noveltySplit(joined: DataFrame,
+                           idCol: String): (DataFrame, DataFrame) = {
     val first = coalesce(col("_old"), col("_bmin"))
     val scores = joined
       .groupBy(col(idCol))
@@ -259,8 +297,8 @@ object DedupStreams {
       .select(col(idCol), col("n_grams"), col("n_seen"),
         graft.core.Exact.rnd4(lit(1.0) - col("n_seen").cast("double") /
           col("n_grams").cast("double")).as("novelty"))
-    val newGrams = batchMin
-      .join(old.hint("shuffle_hash"), Seq("gram"), "left_anti")
+    val newGrams = joined
+      .filter(col("_own") && col("_old").isNull)
       .select(col("gram"), col("_bmin").as("_owner"))
     (scores, newGrams)
   }
@@ -289,9 +327,9 @@ object DedupStreams {
         val spark = batch.sparkSession
         val applied = idempotentStatefulBatch(spark, rid, batchId, outDir,
             gramsDir) {
-          val grams = Dedup.distinctGrams(batch, w, idCol, textCol)
-          noveltyStep(grams, readGrams(spark, gramsDir), idCol)
-        }
+          storeJoin(Dedup.distinctGrams(batch, w, idCol, textCol),
+            readGrams(spark, gramsDir), Seq("gram"), idCol)
+        }(noveltySplit(_, idCol))
         if (applied && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
           compactGrams(spark, gramsDir)
         ()
@@ -311,12 +349,13 @@ object DedupStreams {
 
   /** Run the stream: per micro-batch, signature the arriving documents,
     * decide against the claim store, append verdicts to `outDir` and new
-    * claims to `claimsDir`. The new-claims frame is materialized BEFORE
-    * either write so the claim-store append never races its own read
-    * (parquet file listing happens at plan time; persisting pins the
-    * result). `compactEvery` > 0 compacts the claim store every that many
-    * micro-batches ([[compactClaims]]), bounding its file count at
-    * `parts + compactEvery` instead of O(batches).
+    * claims to `claimsDir`. Each batch evaluates its signatures once, scans
+    * the store once, and persists that one claim join for both writes; the
+    * store append cannot race the batch's own store read, because that
+    * read's file listing is frozen before the new file is renamed in
+    * ([[idempotentStatefulBatch]]). `compactEvery` > 0 compacts the claim
+    * store every that many micro-batches ([[compactClaims]]), bounding its
+    * file count at `parts + compactEvery` instead of O(batches).
     */
   def nearDupStream(docs: DataFrame, claimsDir: String, outDir: String,
                     idCol: String = "doc_id",
@@ -330,10 +369,10 @@ object DedupStreams {
         val spark = batch.sparkSession
         val applied = idempotentStatefulBatch(spark, rid, batchId, outDir,
             claimsDir) {
-          val sigs = Dedup.minhashSignatures(batch, idCol = idCol,
-            textCol = textCol)
-          dedupStep(sigs, readClaims(spark, claimsDir), idCol)
-        }
+          storeJoin(Dedup.minhashSignatures(batch, idCol = idCol,
+            textCol = textCol), readClaims(spark, claimsDir),
+            Seq("band", "sig"), idCol)
+        }(dedupSplit(_, idCol))
         if (applied && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
           compactClaims(spark, claimsDir)
         ()
@@ -496,9 +535,10 @@ object DedupStreams {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        // the block rows feed the store side and both Hamming joins: the
+        // batch persists them so their signatures are evaluated once
         val applied = idempotentStatefulBatch(spark, rid, batchId, outDir,
-            storeDir) {
-          val blocks = Dedup.simhashBlocks(batch, idCol, textCol)
+            storeDir)(Dedup.simhashBlocks(batch, idCol, textCol)) { blocks =>
           val store = readShStore(spark, storeDir)
           if (maxBucket > 0) {
             val (verdicts, newRows) =

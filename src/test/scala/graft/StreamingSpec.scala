@@ -473,6 +473,14 @@ class StreamingSpec extends SparkSpec {
       val files = new java.io.File(gramsDir)
         .listFiles().count(_.getName.endsWith(".parquet"))
       assert(files <= 10, s"gram store not compacted: $files files")
+      // and it holds exactly one row per gram: its first carrier
+      val stored = graft.streaming.DedupStreams.readGrams(spark, gramsDir)
+      val firstCarriers = graft.dedup.Dedup
+        .distinctGrams(all.toDF("doc_id", "text"), 8, "doc_id", "text")
+        .groupBy("gram").agg(min("doc_id").as("_owner"))
+      assert(stored.exceptAll(firstCarriers).isEmpty &&
+        firstCarriers.exceptAll(stored).isEmpty,
+        "gram store differs from min(doc_id) per gram over the corpus")
       // signal check: earliest doc fully novel, mirrors mostly seen
       val nov = streamed.collect()
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("novelty")).toMap
@@ -622,6 +630,14 @@ class StreamingSpec extends SparkSpec {
         .listFiles().count(_.getName.endsWith(".parquet"))
       assert(claimFiles <= 8,
         s"claim store not compacted: $claimFiles files")
+      // and it holds exactly one row per bucket: its first carrier
+      val stored = graft.streaming.DedupStreams.readClaims(spark, claimsDir)
+      val firstCarriers = graft.dedup.Dedup
+        .minhashSignatures(all.toDF("doc_id", "text"))
+        .groupBy("band", "sig").agg(min("doc_id").as("_owner"))
+      assert(stored.exceptAll(firstCarriers).isEmpty &&
+        firstCarriers.exceptAll(stored).isEmpty,
+        "claim store differs from min(doc_id) per (band, sig) over the corpus")
       // claims survive the rewrite byte-for-byte: a fresh query against
       // the compacted store must drop every redelivered doc
       val out2 = java.nio.file.Files
@@ -712,6 +728,41 @@ class StreamingSpec extends SparkSpec {
       graft.dedup.Dedup.minhashSignatures(b2), c1)
     assert(v2.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq ==
       Seq((2L, 0)), "identical doc in a later batch must be dropped")
+  }
+
+  test("E9 a batch redelivering a document claims each bucket once and " +
+      "keeps its verdicts") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text")).limit(30)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .sortBy(_._1)
+    val all = docs ++ docs.map { case (id, t) => (id + 100000L, t) }
+    def run(batches: Seq[(Long, String)]*) = {
+      val claimsDir = java.nio.file.Files
+        .createTempDirectory("graft_claims_redeliver_").toString
+      val outDir = java.nio.file.Files
+        .createTempDirectory("graft_dedup_redeliver_").toString
+      val ms = MemoryStream[(Long, String)](spark)
+      val q = graft.streaming.DedupStreams.nearDupStream(
+        ms.toDF().toDF("doc_id", "text"), claimsDir, outDir)
+      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      (graft.streaming.DedupStreams.readClaims(spark, claimsDir),
+        spark.read.parquet(outDir))
+    }
+    val (claims, verdicts) = run(all.take(40), all.drop(40))
+    // at-least-once delivery: the first batch carries every row twice, the
+    // second a few of its own rows again
+    val (claimsR, verdictsR) = run(all.take(40) ++ all.take(40),
+      all.drop(40) ++ all.drop(40).take(5))
+    assert(claimsR.count() ==
+      claimsR.select("band", "sig").distinct().count(),
+      "a redelivered row claimed its bucket twice")
+    assert(claimsR.exceptAll(claims).isEmpty &&
+      claims.exceptAll(claimsR).isEmpty, "redelivery changed the claim store")
+    assert(verdictsR.exceptAll(verdicts).isEmpty &&
+      verdicts.exceptAll(verdictsR).isEmpty, "redelivery changed the verdicts")
   }
 
   test("E4 enrich: stream-static broadcast join equals batch join") {
