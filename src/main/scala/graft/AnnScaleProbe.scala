@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Battery.{r3, timed}
 import graft.core.Tables
 import graft.sim.Ann
 
-/** The at-rest ANN scale-point harness (SCALE.md §7): build the IVF-PQ
+/** The at-rest ANN scale-point harness (SCALE.md §5b): build the IVF-PQ
   * and residual-IVF-PQ layouts on a replica corpus at `Ann.nlistFor`-scaled
   * cells — NOT the gate fixtures' pinned nlist=16, which exists for oracle
   * determinism, but the cell count the 100 TB sizing rule would actually
@@ -17,27 +18,15 @@ import graft.sim.Ann
   *
   * Usage: tools/run_local.sh graft.AnnScaleProbe [sfDir]
   * (default .scale/sf2 — the 20x embeddings replica from
-  * tools/make_sf2_emb.py). Prints one JSON line.
+  * tools/make_sf2_emb.py), on `SPARK_GRAFT_CPUS` threads (default 4; the
+  * SCALE.md table ran at 32). Prints one JSON line.
   */
 object AnnScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/.scale/sf2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-ann-scale").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Battery.session()
     try run(spark, sfDir) finally spark.stop()
-  }
-
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = body
-    (a, (System.nanoTime() - t0) / 1e9)
   }
 
   private def run(spark: SparkSession, sfDir: String): Unit = {
@@ -88,6 +77,4 @@ object AnnScaleProbe {
       p => Ann.ivfPqResidualProbe(spark, p, queries, k = 5, nProbe = 4))
     println(s"""{"n":$n,"sf":"$sfDir",$pq,$res}""")
   }
-
-  private def r3(x: Double) = math.rint(x * 1000) / 1000
 }

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import graft.Battery.timed
 
 /** Optimization-round measurement harness (guide §1): for each named query
   * writes `.explain("formatted")` to <outDir>/<key>.txt and, with
@@ -19,25 +19,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor: back on Spark's default (1m) since r15 — the
-      // r14 64k default was measured a net LOSS at the 32-core contract
-      // (dedup family battery 73.8 s @64k vs 60.6 s @1m, per-query cpu
-      // ~25% lower at 1m: keeping ~cores sub-MB post-shuffle partitions
-      // alive burns task overhead without adding useful parallelism).
-      // Still parameterised for cluster-profile experiments:
-      // GRAFT_AQE_MIN_PART overrides.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Battery.session()
     Files.createDirectories(Paths.get(outDir))
-
     val keys =
       if (args.length > 1 && args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq
@@ -65,41 +48,34 @@ object PlanDump {
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[plandump] unknown key: $name")
         case Some(fn) =>
-          try {
-            // tBuild covers the query-builder call INCLUDING any
-            // materializing actions inside it (regime-switch counts,
-            // pinned-intermediate counts, driver training loops); tPlan is
-            // the Catalyst analyze/optimize/plan cost of the RETURNED tree;
-            // tExec the bench's count() action.
-            jobs.set(0); stages.set(0); tasks.set(0)
-            shufRead.set(0L); shufWrite.set(0L); spill.set(0L)
-            val tB0 = System.nanoTime()
-            val df = fn(spark, sfDir)
-            val tBuild = (System.nanoTime() - tB0) / 1e9
-            val tP0 = System.nanoTime()
-            df.queryExecution.executedPlan // force analysis+planning
-            val tPlan = (System.nanoTime() - tP0) / 1e9
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
+          // build covers the query-builder call INCLUDING any materializing
+          // actions inside it (regime-switch counts, pinned-intermediate
+          // counts, driver training loops); plan is the Catalyst
+          // analyze/optimize/plan cost of the RETURNED tree; exec the
+          // bench's count() action.
+          jobs.set(0); stages.set(0); tasks.set(0)
+          shufRead.set(0L); shufWrite.set(0L); spill.set(0L)
+          val r = Battery.timeKey(spark, sfDir, "plandump", name, fn) { df =>
+            // forces analysis + planning
+            val (_, tPlan) = timed(df.queryExecution.executedPlan)
+            Files.writeString(Paths.get(s"$outDir/$name.txt"),
+              df.queryExecution.explainString(
+                org.apache.spark.sql.execution.FormattedMode))
             if (profile) {
-              val t0 = System.nanoTime()
-              val n = df.count()
-              val wall = (System.nanoTime() - t0) / 1e9
+              val (n, wall) = timed(df.count())
               // listener events are async; give the bus a beat to drain
               Thread.sleep(300)
-              System.err.println(f"[plandump] $name%-28s build $tBuild%7.3f  plan $tPlan%6.3f  exec $wall%7.3f s  " +
+              Some((tPlan, wall, n))
+            } else None
+          }
+          r.out.foreach {
+            case Some((tPlan, wall, n)) =>
+              System.err.println(f"[plandump] $name%-28s build ${r.build}%7.3f  plan $tPlan%6.3f  exec $wall%7.3f s  " +
                 f"jobs ${jobs.get}%3d  stages ${stages.get}%4d  tasks ${tasks.get}%5d  " +
                 f"shufR ${shufRead.get / 1e6}%9.1f MB  shufW ${shufWrite.get / 1e6}%9.1f MB  " +
                 f"spill ${spill.get / 1e6}%7.1f MB  rows $n")
-            } else System.err.println(s"[plandump] $name -> $outDir/$name.txt")
-          } catch { case e: Throwable =>
-            System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
+            case None => System.err.println(s"[plandump] $name -> $outDir/$name.txt")
           }
-          graft.core.CacheScope.releaseAll()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
       }
     }
     spark.stop()

@@ -1,92 +1,53 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.Battery.{jobj, jstr, r3, timed}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor: back on Spark's default (1m) since r15 — the
-      // r14 64k default was measured a net LOSS at the 32-core contract
-      // (dedup family battery 73.8 s @64k vs 60.6 s @1m, per-query cpu
-      // ~25% lower at 1m: keeping ~cores sub-MB post-shuffle partitions
-      // alive burns task overhead without adding useful parallelism).
-      // Still parameterised for cluster-profile experiments:
-      // GRAFT_AQE_MIN_PART overrides.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Battery.session()
+    try run(spark, sfDir, outDir, Battery.picked(Battery.only))
+    finally spark.stop()
+  }
+
+  /** Dump each of `queries` to `<outDir>/<key>`, then verify_times.json and
+    * oracle_sql.json. A key's old directory is deleted before the key is
+    * built: `mode("overwrite")` only runs once the build succeeded, so a
+    * key whose builder throws would otherwise leave an earlier run's
+    * parquet for the hash gate to compare. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          queries: Map[String, Battery.Query]): Unit = {
     new java.io.File(outDir).mkdirs()
-    // GRAFT_ONLY=q1,q2 — local-iteration filter; the driver never sets it,
-    // so its gate always dumps the full battery.
-    val only = sys.env.get("GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val picked = only.fold(SparkEntry.queries)(o =>
-      SparkEntry.queries.filter { case (k, _) => o(k) })
     // Per-query wall + loadavg samples land in verify_times.json so runs
     // that already execute the whole battery (the invariance legs run it
     // twice per sf) double as free timing measurements. These are
     // VERIFY-leg numbers — they include the repartition(1) parquet write
     // and run without Bench's warmup/best-of-N machinery — so they rank
     // and diff queries across legs; Bench stays the official wall-clock.
-    val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    var loadSum = 0.0; var loadN = 0
-    val t00 = System.nanoTime()
-    picked.foreach { case (name, fn) =>
+    val (runs, total) = timed(queries.toSeq.map { case (name, fn) =>
+      System.err.println(s"[verify] $name")
+      val dir = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(dir, true)
       // repartition(1), NOT coalesce(1): coalesce collapses every map-only
       // query's entire compute into a single task (no shuffle boundary
       // upstream), which turns the heavier per-doc text/dedup expressions
       // into one-core stragglers at larger SF. The explicit shuffle keeps
       // compute on all cores and still lands one file per query dir.
-      System.err.println(s"[verify] $name")
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      times(name) = (System.nanoTime() - t0) / 1e9
-      val la = osBean.getSystemLoadAverage
-      if (la >= 0) { loadSum += la; loadN += 1 }
-      // the parquet write above is the materialization barrier: release
-      // operator-pinned intermediates (jaccardAuto candidates, ensemble
-      // shingle pass, …) so a 200-query gate doesn't accumulate
-      // corpus-scale cached blocks that tax every later query
-      graft.core.CacheScope.releaseAll()
-    }
-    val total = (System.nanoTime() - t00) / 1e9
-    def r3(x: Double) = math.rint(x * 1000) / 1000
-    val timesJson = times
-      .map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
+      Battery.timeKey(spark, sfDir, "verify", name, fn)(
+        _.repartition(1).write.mode("overwrite").parquet(dir.toString))
+    })
+    val loads = runs.map(_.load).filter(_ >= 0)
     Files.writeString(Paths.get(s"$outDir/verify_times.json"),
-      s"""{"kind":"verify_leg","total":${r3(total)},"cpus":"$cpus",""" +
-        s""""sf":"$sfDir","loadavg_mean":${
-          r3(if (loadN > 0) loadSum / loadN else -1)},""" +
-        s""""queries":$timesJson}""")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+      s"""{"kind":"verify_leg","total":${r3(total)},""" +
+        s""""cpus":"${spark.sparkContext.defaultParallelism}",""" +
+        s""""sf":${jstr(sfDir)},"loadavg_mean":${
+          r3(if (loads.nonEmpty) loads.sum / loads.size else -1)},""" +
+        s""""queries":${jobj(runs.map(r => r.key -> r.wall))}}""")
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   * CacheScope makes that lifetime explicit. Operators `pin` instead of
   * calling `persist` directly; the driver program calls [[releaseAll]] at
   * its natural barrier — after an action materializes the query's result
-  * (Verify does so after each parquet write, Bench between timed queries,
+  * (the battery mains do so between keys, in `graft.Battery.release`;
   * a service between requests). Release order is irrelevant (unpersist is
   * idempotent and non-blocking), and pinning is thread-safe so concurrent
   * query threads can share the scope — releaseAll then releases whatever

@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelationWithTable, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Readers for the driver-generated testdata lake (TESTDATA.md).
@@ -94,6 +96,24 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 
+  /** Estimated scan-split count of `df`'s leaf files, mirroring Spark's
+    * packing rule (each file charged its size plus one open cost, bins of
+    * maxPartitionBytes). The files are the ones `df.inputFiles` names, de-
+    * duplicated by path like it. Over-estimating is safe here: the floor
+    * then skips a repartition that large inputs do not need anyway. */
+  private def estScanSplits(df: DataFrame): Long = {
+    val conf = df.sparkSession.sessionState.conf
+    val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
+    val lens = df.queryExecution.optimizedPlan.collect {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r.location
+    }.flatMap {
+      case i: PartitioningAwareFileIndex => i.allFiles()
+      case i => i.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+    }.map(f => f.getPath.toUri.toString -> f.getLen).toMap
+    val cost = lens.values.map(_ + conf.filesOpenCostInBytes).sum
+    math.max(1L, (cost + maxSplit - 1) / maxSplit)
+  }
+
   /** Scan-parallelism floor for CPU-dense per-row pipelines (tokenize →
     * shingle → md5 chains cost orders of magnitude more CPU per byte than
     * the scan itself). A parquet scan parallelizes at row-group
@@ -119,37 +139,16 @@ object Tables {
     * sizes vs `spark.sql.files.maxPartitionBytes`), never `df.rdd` — the
     * r14 probe materialized an RDD lineage per query build (a fixed
     * driver tax on every sub-second query) and threw on streaming plans.
-    * File sizes are cached per path for the session lifetime (the lake is
-    * immutable during a run), so repeated corpus builds cost zero FS
-    * calls. Streaming inputs pass through untouched: micro-batch
+    * The sizes are the `FileStatus`es the plan's file indexes already
+    * listed, so the decision costs no FS call and has no cache of its own
+    * that could outlive a rewritten file or keep an IO failure as a 0-byte
+    * file. Streaming inputs pass through untouched: micro-batch
     * parallelism is the source's concern, and a static floor computed at
     * plan-build time would be meaningless there. Apply it ONLY on paths
     * whose downstream work is CPU-dense; for a cheap map or a tiny
     * aggregation the exchange is pure cost (the r14 lesson: a blanket
     * floor taxed ~180 sub-second queries and broke the map-only plan
     * pins). */
-  private val fileLenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Estimated scan-split count of `df`'s leaf files, mirroring Spark's
-    * packing rule (each file charged its size plus one open cost, bins of
-    * maxPartitionBytes). Over-estimating is safe here: the floor then
-    * skips a repartition that large inputs do not need anyway. */
-  private def estScanSplits(df: DataFrame): Long = {
-    val conf = df.sparkSession.sessionState.conf
-    val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
-    val openCost = conf.filesOpenCostInBytes
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val cost = df.inputFiles.map { p =>
-      fileLenCache.computeIfAbsent(p, { _ =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        try path.getFileSystem(hconf).getFileStatus(path).getLen
-        catch { case _: java.io.IOException => 0L }
-      }).longValue() + openCost
-    }.sum
-    math.max(1L, (cost + maxSplit - 1) / maxSplit)
-  }
-
   def fanOut(df: DataFrame): DataFrame = {
     if (df.isStreaming) df
     else {

@@ -131,12 +131,7 @@ object MllibExport {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = args.lift(1)
       .getOrElse("src/main/resources/graft/mllib_rf.json")
-    val spark = SparkSession.builder()
-      .appName("graft-mllib-export").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Battery.session()
     try {
       val json = fitAndExport(spark, sfDir)
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

@@ -430,6 +430,38 @@ class PlanSpec extends SparkSpec {
       s"null band must scale within its own group, got ${nulls.toSeq}")
   }
 
+  test("fanOut: one round-robin Exchange over a one-file scan, the same " +
+       "Dataset once the splits reach the target, streams pass through") {
+    val docs = Tables.documents(spark, sfDir)
+    val target = spark.sparkContext.defaultParallelism
+    val p = plan(Tables.fanOut(docs)).split("== Initial Plan ==").head
+    assert("Exchange ".r.findAllIn(p).size == 1 &&
+      p.contains(s"Exchange RoundRobinPartitioning($target)"),
+      s"a one-file scan must fan out once to $target partitions:\n$p")
+
+    // split count = ceil((len + openCost) / maxPartitionBytes); pick the
+    // split size so one copy of documents makes target - 1 splits
+    val file = new org.apache.hadoop.fs.Path(docs.inputFiles.head)
+    val len = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(file).getLen
+    val oneCopy = len + spark.sessionState.conf.filesOpenCostInBytes
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, (oneCopy + target - 2) / (target - 1))
+      // a self-union reads documents twice but counts the file once
+      val twice = docs.unionByName(docs)
+      assert(!(Tables.fanOut(twice) eq twice),
+        "the self-union's one file must not count twice")
+      spark.conf.set(key, oneCopy / target)
+      assert(Tables.fanOut(docs) eq docs,
+        s">= $target splits must need no repartition")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    val stream = spark.readStream.format("rate").load()
+    assert(Tables.fanOut(stream) eq stream)
+  }
+
   test("CacheScope: operator pins are released at the harness barrier") {
     graft.core.CacheScope.releaseAll() // clean slate
     spark.catalog.clearCache()

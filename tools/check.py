@@ -19,8 +19,8 @@ if out:
     print(f"[replay] reusing Verify outputs in {out}", file=sys.stderr)
 else:
     out = tempfile.mkdtemp(prefix="graft_verify_")
-    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS","8"))
-    r = subprocess.run(["tools/run_local.sh","graft.Verify",SFDIR,out], env=env)
+    # thread count: SPARK_GRAFT_CPUS, else graft.Battery's default
+    r = subprocess.run(["tools/run_local.sh","graft.Verify",SFDIR,out])
     if r.returncode != 0:
         sys.exit("Verify failed")
 
