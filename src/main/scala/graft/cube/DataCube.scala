@@ -947,7 +947,7 @@ final case class DataCube(df: DataFrame, valueCol: String = "value",
     }
     def axisDf(tcol: String, out: String): DataFrame = {
       val labels = target.df.select(col(tcol).cast("double"))
-        .distinct().as[Double].collect().toSeq
+        .distinct().as[Double].collect().toSeq // SCALE:cube-resample-labels
       axisRanges(labels).toDF(out, s"_lo_$out", s"_hi_$out")
     }
     val xr = axisDf(txd, "_tx")

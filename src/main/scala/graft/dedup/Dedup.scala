@@ -917,7 +917,7 @@ object Dedup {
       if (sys.env.contains("GRAFT_CC_TRACE"))
         System.err.println(s"[components] local finish at ${edgeSig._1} edges" +
           s" after $rounds rounds")
-      val arr = edges.collect()
+      val arr = edges.collect() // SCALE:dedup-residual-edges
       edges.unpersist(blocking = false)
       spark.sparkContext.parallelize(localComponents(arr),
         math.max(1, math.min(part.numPartitions, arr.length / 65536 + 1)))

@@ -76,7 +76,7 @@ object Bpe {
           .select(explode(shingles(syms, 2)).as("pr"), col("cnt"))
           .groupBy("pr").agg(sum("cnt").as("c"))
           .orderBy(col("c").desc, col("pr").asc)
-          .limit(1).collect()
+          .limit(1).collect() // SCALE:bpe-best-pair
         if (top.isEmpty) return out.result()
         val pair = top(0).getString(0)
         val merged = pair.replace(" ", "")

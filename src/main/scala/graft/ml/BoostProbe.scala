@@ -22,119 +22,62 @@ import org.apache.spark.sql.functions._
   *  - leaf values v = Σr/n and the update r − ν·v are single IEEE
   *    expressions, mirrored operation-for-operation.
   *
-  * Scale shape: like [[TreeProbe]], each level is ONE metadata-sized
-  * histogram aggregation (map-side partials, ≤2^level·k·Bins cells); the
-  * fitted ensemble is pure literals, so scoring — and the residual column
-  * each round trains on — is a zero-shuffle codegen CASE chain. `rounds`
-  * passes over the data total, the same envelope as MLlib's GBT.
+  * Fitting and scoring run on the shared histogram-tree core
+  * ([[HistTree]]), the one [[TreeProbe]] uses: this object supplies the
+  * variance family ([[Variance]]). Each level is ONE metadata-sized
+  * histogram job (≤2^level·k·Bins cells); the fitted ensemble is pure
+  * literals, so scoring — and the residual column each round trains on —
+  * is a zero-shuffle codegen CASE chain. `rounds` passes over the data
+  * total, the same envelope as MLlib's GBT.
   */
 object BoostProbe {
 
-  import TreeProbe.{Bins, Split, bin}
+  import TreeProbe.{Split, bin}
 
   private val Dec = "decimal(38,10)"
 
   /** A fitted regression tree: splits plus per-leaf mean residual. */
   final case class RTree(splits: Seq[Split], leafVal: Map[Int, Double])
 
-  /** Variance-reduction cost (lower = better): −(s_l²/n_l + s_r²/n_r). */
-  private def cost(nl: Long, sl: Double, nr: Long, sr: Double): Double =
-    -(sl * sl / nl.toDouble + sr * sr / nr.toDouble)
+  /** The variance family: cells count rows `n` and sum residuals `s` as
+    * DECIMAL(38,10) (exact, order-independent); a split costs
+    * −(s_l²/n_l + s_r²/n_r), lower = better, in doubles from the decimal
+    * sums; a leaf's value is s/n, one IEEE division. */
+  object Variance extends HistTree.Family[java.math.BigDecimal, Double] {
+    private type D = java.math.BigDecimal
+    def zero = java.math.BigDecimal.ZERO
+    def plus(a: D, b: D) = a add b
+    def minus(a: D, b: D) = a subtract b
+    def cost(nl: Long, sl: D, nr: Long, sr: D): Double =
+      -(sl.doubleValue * sl.doubleValue / nl.toDouble +
+        sr.doubleValue * sr.doubleValue / nr.toDouble)
+    def leaf(n: Long, s: D) = s.doubleValue / n.toDouble
+    val histSql = "count(*) AS n,\n    sum(CAST(r AS DECIMAL(38,10))) AS s"
+    val unpivotSql = "r"
+    val statSql = "s"
+    val zeroSql = "CAST(0 AS DECIMAL(38,10))"
+    val costSql =
+      """-(CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) / CAST(nl AS DOUBLE)
+        |      + CAST(ss - sl AS DOUBLE) * CAST(ss - sl AS DOUBLE)
+        |        / CAST(nn - nl AS DOUBLE))""".stripMargin
+  }
 
   /** Fit one regression tree to residual column `rCol` (an expression
     * over the base columns — literals only, so each histogram pass is
-    * one scan).
-    *
-    * r14: the separate leaf-value pass is gone — final-leaf (n, Σr)
-    * derive from the LAST level's histogram the same way TreeProbe's
-    * batched fit derives its votes: a split node's children are partial
-    * sums over the SPLIT feature's bins (exact decimal adds of the same
-    * cells the extra aggregation used to recompute, so v = Σr/n is the
-    * identical double), an unsplit node's total is its f=1 bins summed.
-    * One job per level instead of depth + 1 per round; BoostProbeSpec
-    * pins derived ≡ direct aggregate on the real corpus. */
+    * one scan). Final-leaf (n, Σr) derive from the last level's
+    * histogram ([[HistTree.fit]]), so v = Σr/n is the identical double a
+    * direct aggregate gives; BoostProbeSpec pins derived ≡ direct on the
+    * real corpus. */
   def fitTree(base: DataFrame, k: Int, depth: Int, rCol: Column): RTree = {
-    var nodeCol: Column = lit(1)
-    val splits = Vector.newBuilder[Split]
-    var lastRows: Seq[(Int, Map[String, AnyRef])] = Seq.empty
-    var lastSplits: Seq[Split] = Seq.empty
-    for (level <- 0 until depth) {
-      val aggs = for { f <- 1 to k; b <- 0 until Bins; p <- Seq(false, true) }
-        yield {
-          if (p) sum(when(col(s"_b$f") === b, rCol.cast(Dec))
-            .otherwise(lit(0.0).cast(Dec))).as(s"_s_${f}_$b")
-          else sum(when(col(s"_b$f") === b, 1L).otherwise(0L)).as(s"_n_${f}_$b")
-        }
-      val hist = base.withColumn("_node", nodeCol)
-        .groupBy("_node").agg(aggs.head, aggs.tail: _*).collect()
-      val lvl = hist.toSeq.sortBy(_.getInt(0)).flatMap { row =>
-        val node = row.getInt(0)
-        def n(f: Int, b: Int) = row.getAs[Long](s"_n_${f}_$b")
-        def s(f: Int, b: Int) = Option(
-          row.getAs[java.math.BigDecimal](s"_s_${f}_$b"))
-          .getOrElse(java.math.BigDecimal.ZERO)
-        val cands = for {
-          f <- 1 to k
-          nn = (0 until Bins).map(n(f, _)).sum
-          ss = (0 until Bins).map(s(f, _)).reduce(_ add _)
-          t <- 0 until Bins - 1
-          nl = (0 to t).map(n(f, _)).sum
-          sl = (0 to t).map(s(f, _)).reduce(_ add _)
-          if nl > 0 && nn - nl > 0
-        } yield (cost(nl, sl.doubleValue,
-          nn - nl, ss.subtract(sl).doubleValue), f, t)
-        if (cands.isEmpty) None else { val (_, f, t) = cands.min; Some(Split(node, f, t)) }
-      }
-      splits ++= lvl
-      val prev = nodeCol
-      nodeCol = lvl.foldLeft(prev) { (acc, sp) =>
-        when(if (level == 0) lit(true) else prev === sp.node,
-          when(col(s"_b${sp.f}") <= sp.t, lit(2 * sp.node))
-            .otherwise(lit(2 * sp.node + 1))).otherwise(acc)
-      }
-      if (level == depth - 1) {
-        lastRows = hist.toSeq.map { row =>
-          val m = scala.collection.mutable.Map.empty[String, AnyRef]
-          for (f <- 1 to k; b <- 0 until Bins) {
-            m(s"_n_${f}_$b") = java.lang.Long.valueOf(
-              row.getAs[Long](s"_n_${f}_$b"))
-            m(s"_s_${f}_$b") = Option(
-              row.getAs[java.math.BigDecimal](s"_s_${f}_$b"))
-              .getOrElse(java.math.BigDecimal.ZERO)
-          }
-          (row.getInt(0), m.toMap)
-        }
-        lastSplits = lvl
-      }
-    }
-    val splitByNode = lastSplits.map(s => s.node -> s).toMap
-    val leafVal = scala.collection.mutable.Map.empty[Int, Double]
-    lastRows.foreach { case (node, m) =>
-      def n(f: Int, b: Int) = m(s"_n_${f}_$b").asInstanceOf[java.lang.Long].longValue
-      def s(f: Int, b: Int) = m(s"_s_${f}_$b").asInstanceOf[java.math.BigDecimal]
-      splitByNode.get(node) match {
-        case Some(sp) =>
-          val nn = (0 until Bins).map(n(sp.f, _)).sum
-          val ss = (0 until Bins).map(s(sp.f, _)).reduce(_ add _)
-          val nl = (0 to sp.t).map(n(sp.f, _)).sum
-          val sl = (0 to sp.t).map(s(sp.f, _)).reduce(_ add _)
-          leafVal(2 * sp.node) = sl.doubleValue / nl.toDouble
-          leafVal(2 * sp.node + 1) =
-            ss.subtract(sl).doubleValue / (nn - nl).toDouble
-        case None =>
-          val nn = (0 until Bins).map(n(1, _)).sum
-          val ss = (0 until Bins).map(s(1, _)).reduce(_ add _)
-          if (nn > 0) leafVal(node) = ss.doubleValue / nn.toDouble
-      }
-    }
-    RTree(splits.result(), leafVal.toMap)
+    val (splits, leafVal) = HistTree.fit(
+      base.withColumn("_w0", lit(1L)).withColumn("_s0", rCol.cast(Dec)),
+      k, depth, Seq(None), Variance).head
+    RTree(splits, leafVal)
   }
 
   /** Leaf-value Column for a fitted regression tree (literal CASE). */
   def valueCol(tree: RTree, leaf: Column): Column =
-    tree.leafVal.toSeq.sortBy(_._1).foldLeft(lit(0.0): Column) {
-      case (acc, (n, v)) => when(leaf === n, lit(v)).otherwise(acc)
-    }
+    HistTree.leafCase(tree.leafVal, leaf, 0.0)
 
   /** Fit the ensemble: returns (F₀, trees). `base` must already expose
     * binned columns _b1.._bk and the label `yCol`. */
@@ -155,20 +98,8 @@ object BoostProbe {
   }
 
   /** Leaf assignment from the materialized _b1.._bk bin columns. */
-  def leafFromBins(tree: RTree, depth: Int): Column = {
-    var node: Column = lit(1)
-    for (level <- 0 until depth) {
-      val lo = 1 << level
-      val lvl = tree.splits.filter(s => s.node >= lo && s.node < 2 * lo)
-      val prev = node
-      node = lvl.foldLeft(prev) { (acc, s) =>
-        when(if (level == 0) lit(true) else prev === s.node,
-          when(col(s"_b${s.f}") <= s.t, lit(2 * s.node))
-            .otherwise(lit(2 * s.node + 1))).otherwise(acc)
-      }
-    }
-    node
-  }
+  def leafFromBins(tree: RTree, depth: Int): Column =
+    HistTree.leafCol(tree.splits, depth, f => col(s"_b$f"))
 
   /** The A15 composed op: quality features → 3 rounds of depth-2 boosted
     * regression trees (ν=0.5) → literal scoring. Output pins each
@@ -221,54 +152,16 @@ object BoostProbe {
   def oracleSql(featsCte: String, idCol: String, k: Int, depth: Int,
                 rounds: Int, nu: Double): String = {
     val bcols = (1 to k).map(f => s"b$f")
-    val binDefs = (1 to k).map(f =>
-      s"least(CAST(floor(x$f * $Bins) AS INTEGER), ${Bins - 1}) AS b$f")
-    val thVals = (0 until Bins - 1).map(t => s"($t)").mkString(",")
     val leafCols = (m: Int) => (1 to m).map(i => s"leaf$i")
 
     val roundCtes = (1 to rounds).map { m =>
       val S = s"_r$m"
-      val carry = (bcols ++ leafCols(m - 1)).map(c => s"d.$c").mkString(", ")
-      val unpivot = (1 to k).map(f =>
-        s"SELECT node, $f AS f, b$f AS b, r FROM a$S%LEVEL%")
-        .mkString("\n    UNION ALL ")
-      val levels = (1 to depth).map { l =>
-        val binPick = s"(CASE s.f ${(1 to k - 1).map(f => s"WHEN $f THEN d.b$f").mkString(" ")} ELSE d.b$k END)"
-        s"""h$S$l AS MATERIALIZED (
-           |  SELECT node, f, b, count(*) AS n,
-           |    sum(CAST(r AS DECIMAL(38,10))) AS s
-           |  FROM (
-           |    ${unpivot.replace("%LEVEL%", l.toString)})
-           |  GROUP BY node, f, b),
-           |t$S$l AS MATERIALIZED (
-           |  SELECT node, f, th.t,
-           |    sum(CASE WHEN b <= th.t THEN n ELSE 0 END) AS nl,
-           |    sum(CASE WHEN b <= th.t THEN s ELSE CAST(0 AS DECIMAL(38,10)) END) AS sl,
-           |    sum(n) AS nn, sum(s) AS ss
-           |  FROM h$S$l
-           |  CROSS JOIN (VALUES $thVals) AS th(t)
-           |  GROUP BY node, f, th.t),
-           |g$S$l AS MATERIALIZED (
-           |  SELECT node, f, t,
-           |    -(CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) / CAST(nl AS DOUBLE)
-           |      + CAST(ss - sl AS DOUBLE) * CAST(ss - sl AS DOUBLE)
-           |        / CAST(nn - nl AS DOUBLE)) AS cost
-           |  FROM t$S$l WHERE nl > 0 AND nn - nl > 0),
-           |s$S$l AS MATERIALIZED (
-           |  SELECT node, f, t FROM (
-           |    SELECT node, f, t, row_number() OVER (
-           |      PARTITION BY node ORDER BY cost ASC, f ASC, t ASC) AS rn
-           |    FROM g$S$l) WHERE rn = 1),
-           |a$S${l + 1} AS MATERIALIZED (
-           |  SELECT d.$idCol, $carry, d.y, d.r,
-           |    CASE WHEN s.node IS NULL THEN d.node
-           |         WHEN $binPick <= s.t THEN d.node * 2
-           |         ELSE d.node * 2 + 1 END AS node
-           |  FROM a$S$l d LEFT JOIN s$S$l s ON d.node = s.node)""".stripMargin
-      }.mkString(",\n")
+      val carry = bcols ++ leafCols(m - 1)
+      val levels = (1 to depth).map(l => HistTree.levelCtes(S, l, k, Variance,
+        idCol +: carry :+ "y" :+ "r", None)).mkString(",\n")
       val prevTerm = if (m == 1) "b0" else s"ar_r${m - 1}"
       s"""a${S}1 AS MATERIALIZED (
-         |  SELECT $idCol, ${(bcols ++ leafCols(m - 1)).mkString(", ")}, y, r,
+         |  SELECT $idCol, ${carry.mkString(", ")}, y, r,
          |    1 AS node
          |  FROM $prevTerm),
          |$levels,
@@ -278,7 +171,7 @@ object BoostProbe {
          |      / CAST(count(*) AS DOUBLE) AS v
          |  FROM a$S${depth + 1} GROUP BY node),
          |ar$S AS MATERIALIZED (
-         |  SELECT d.$idCol, ${(bcols ++ leafCols(m - 1)).map(c => s"d.$c").mkString(", ")},
+         |  SELECT d.$idCol, ${carry.map(c => s"d.$c").mkString(", ")},
          |    d.node AS leaf$m, d.y, d.r - $nu * l.v AS r
          |  FROM a$S${depth + 1} d JOIN lv$S l ON d.node = l.node)""".stripMargin
     }.mkString(",\n")
@@ -288,7 +181,7 @@ object BoostProbe {
        |    count(y) AS n
        |  FROM $featsCte),
        |b0 AS MATERIALIZED (
-       |  SELECT $idCol, ${binDefs.mkString(", ")}, y,
+       |  SELECT $idCol, ${(1 to k).map(HistTree.binSql).mkString(", ")}, y,
        |    y - (SELECT s / n FROM bf0) AS r
        |  FROM $featsCte),
        |$roundCtes,

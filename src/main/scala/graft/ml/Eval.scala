@@ -40,7 +40,7 @@ object Eval {
     val g = scored.groupBy(col(scoreCol).as("score"))
       .agg(count(lit(1)).as("n"),
         sum(col(yCol).cast("long")).as("pos"))
-    val w = Window.orderBy(col("score").asc)
+    val w = Window.orderBy(col("score").asc) // SCALE:eval-auc-cum
       .rowsBetween(Window.unboundedPreceding, -1)
     val c = g.withColumn("cb", coalesce(sum(col("n")).over(w), lit(0L)))
     val a = c.agg(
@@ -94,7 +94,7 @@ object Eval {
     val g = scored.groupBy(col(scoreCol).as("score"))
       .agg(count(lit(1)).as("n"),
         sum(col(yCol).cast("long")).as("pos"))
-    val cum = Window.orderBy(col("score").desc)
+    val cum = Window.orderBy(col("score").desc) // SCALE:eval-pr-cum
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val full = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
@@ -113,7 +113,7 @@ object Eval {
       .otherwise(lit(0.0))
     val ranked = c.withColumn("f1", f1).withColumn("term", term)
       .withColumn("rk", row_number().over(
-        Window.orderBy(col("f1").desc, col("score").desc)))
+        Window.orderBy(col("f1").desc, col("score").desc))) // SCALE:eval-pr-best
     ranked.agg(
       sum(col("n")).as("n"),
       max(col("npos")).as("n_pos"),

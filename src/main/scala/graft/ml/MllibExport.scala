@@ -75,7 +75,7 @@ object MllibExport {
         "nodeData.split.featureIndex",
         "nodeData.split.leftCategoriesOrThreshold",
         "nodeData.split.numCategories")
-      .collect()
+      .collect() // SCALE:mllib-export-nodes
     val trees = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map {
       case (_, nodes) =>
         val byId = nodes.sortBy(_.getInt(1))

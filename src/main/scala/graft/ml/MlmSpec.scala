@@ -84,7 +84,7 @@ object MlmSpec {
     */
   def load(spark: SparkSession, path: String): MlmSpec = {
     val df = spark.read.option("multiLine", true).json(s"$path/mlm.json")
-    val row = df.collect()(0)
+    val row = df.collect()(0) // SCALE:mlm-meta-row
     def strSeq(field: String): Seq[String] =
       row.getAs[scala.collection.Seq[String]](field).toSeq
     def intSeq(field: String): Seq[Int] =

@@ -1,5 +1,7 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.ml.TreeProbe.{Split, Tree}
@@ -45,75 +47,44 @@ object ProbeModels {
     s"""{"framework":"graft-boost","f0":${q(f0.toString)},"nu":${q(nu.toString)},"trees":$ts}"""
   }
 
-  private def parse(json: String) = new ObjectMapper().readTree(json)
+  private type Json = com.fasterxml.jackson.databind.JsonNode
 
-  private def parseSplits(n: com.fasterxml.jackson.databind.JsonNode): Seq[Split] = {
-    val it = n.elements()
-    val b = Vector.newBuilder[Split]
-    while (it.hasNext) {
-      val e = it.next()
-      b += Split(e.path("node").asInt(), e.path("f").asInt(), e.path("t").asInt())
-    }
-    b.result()
+  private def elements(n: Json): Seq[Json] = n.elements().asScala.toSeq
+
+  /** Parse `json`, requiring its framework tag. */
+  private def parse(json: String, framework: String): Json = {
+    val root = new ObjectMapper().readTree(json)
+    require(root.path("framework").asText() == framework,
+      s"load: expected $framework, got ${root.path("framework").asText()}")
+    root
   }
 
-  def treeFromJson(json: String): Tree = {
-    val root = parse(json)
-    require(root.path("framework").asText() == "graft-tree",
-      s"load: expected graft-tree, got ${root.path("framework").asText()}")
-    val lp = {
-      val it = root.path("leaf_pred").elements()
-      val b = Map.newBuilder[Int, Int]
-      while (it.hasNext) {
-        val e = it.next(); b += e.path("n").asInt() -> e.path("p").asInt()
-      }
-      b.result()
-    }
-    Tree(parseSplits(root.path("splits")), lp)
+  /** One tree object: its splits plus the `leaves` list of
+    * {"n": node, `key`: value}. */
+  private def parseTree[V](t: Json, leaves: String, key: String,
+                           value: Json => V): (Seq[Split], Map[Int, V]) =
+    (elements(t.path("splits")).map(e =>
+        Split(e.path("node").asInt(), e.path("f").asInt(), e.path("t").asInt())),
+      elements(t.path(leaves)).map(e => e.path("n").asInt() -> value(e.path(key))).toMap)
+
+  private def voteTree(t: Json): Tree = {
+    val (splits, votes) = parseTree(t, "leaf_pred", "p", _.asInt())
+    Tree(splits, votes)
   }
 
-  def forestFromJson(json: String): Seq[Tree] = {
-    val root = parse(json)
-    require(root.path("framework").asText() == "graft-forest",
-      s"load: expected graft-forest, got ${root.path("framework").asText()}")
-    val it = root.path("trees").elements()
-    val b = Vector.newBuilder[Tree]
-    while (it.hasNext) {
-      val t = it.next()
-      val lp = {
-        val li = t.path("leaf_pred").elements()
-        val m = Map.newBuilder[Int, Int]
-        while (li.hasNext) {
-          val e = li.next(); m += e.path("n").asInt() -> e.path("p").asInt()
-        }
-        m.result()
-      }
-      b += Tree(parseSplits(t.path("splits")), lp)
-    }
-    b.result()
-  }
+  def treeFromJson(json: String): Tree = voteTree(parse(json, "graft-tree"))
+
+  def forestFromJson(json: String): Seq[Tree] =
+    elements(parse(json, "graft-forest").path("trees")).map(voteTree)
 
   def boostFromJson(json: String): (Double, Double, Seq[RTree]) = {
-    val root = parse(json)
-    require(root.path("framework").asText() == "graft-boost",
-      s"load: expected graft-boost, got ${root.path("framework").asText()}")
-    val it = root.path("trees").elements()
-    val b = Vector.newBuilder[RTree]
-    while (it.hasNext) {
-      val t = it.next()
-      val lv = {
-        val li = t.path("leaf_val").elements()
-        val m = Map.newBuilder[Int, Double]
-        while (li.hasNext) {
-          val e = li.next()
-          m += e.path("n").asInt() -> e.path("v").asText().toDouble
-        }
-        m.result()
-      }
-      b += RTree(parseSplits(t.path("splits")), lv)
+    val root = parse(json, "graft-boost")
+    val trees = elements(root.path("trees")).map { t =>
+      val (splits, vals) = parseTree(t, "leaf_val", "v", _.asText().toDouble)
+      RTree(splits, vals)
     }
     (root.path("f0").asText().toDouble, root.path("nu").asText().toDouble,
-      b.result())
+      trees)
   }
 
   /** Write/read one sidecar file through the Hadoop FS (lake-portable). */

@@ -196,13 +196,26 @@ final case class RfUntrained(numTrees: Int, maxVariables: String, seed: Long,
         (col(labelCol) + 1).cast("double").as("label"))
       .repartition(32, col("_f"))
       .sortWithinPartitions(col("_f"), col("label"))
-    // cache: tree training makes one pass per depth level, and the class
-    // list / feature width / holdout metrics add three more — without this
-    // every pass re-reads the source and re-builds the vectors
+    // cache: tree training makes one pass per depth level, and the
+    // class-list / feature-width aggregate and the holdout metrics add two
+    // more — without this every pass re-reads the source and re-builds
+    // the vectors
     val prepared = canon.select(
       array_to_vector(col("_f")).as("features"),
       col("label"),
       size(col("_f")).as("_w")).cache()
+    // sorted class list and width range in one job, before the fit: a
+    // ragged training set fails here instead of taking one row's width
+    val meta = prepared.agg(
+      sort_array(collect_set((col("label") - 1).cast("int"))),
+      min(col("_w")), max(col("_w"))).collect()(0) // SCALE:rf-fit-meta
+    if (meta.isNullAt(1) || meta.getInt(1) != meta.getInt(2)) {
+      prepared.unpersist()
+      throw new IllegalArgumentException("ml_fit: training rows need one " +
+        s"feature width, got ${meta.get(1)} to ${meta.get(2)}")
+    }
+    val classes = meta.getSeq[Int](0)
+    val width = meta.getInt(1)
     val Array(train, test) = prepared.randomSplit(Array(0.85, 0.15), seed)
     val rf = new RandomForestClassifier()
       .setNumTrees(numTrees)
@@ -211,9 +224,6 @@ final case class RfUntrained(numTrees: Int, maxVariables: String, seed: Long,
       .setSeed(seed)
     val m = rf.fit(train)
     val (acc, kappa) = holdoutMetrics(m.transform(test))
-    val classes = prepared.select((col("label") - 1).cast("int"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val width = prepared.select(col("_w")).first().getInt(0)
     prepared.unpersist()
     val spec = MlmSpec(
       name = name,
@@ -229,7 +239,7 @@ final case class RfUntrained(numTrees: Int, maxVariables: String, seed: Long,
   /** Accuracy + Cohen's kappa from one aggregation pass over the holdout
     * (the reference prints the same report after fit). */
   private def holdoutMetrics(pred: DataFrame): (Double, Double) = {
-    val cells = pred.groupBy("label", "prediction").count().collect()
+    val cells = pred.groupBy("label", "prediction").count().collect() // SCALE:rf-holdout-cells
     val n = cells.map(_.getAs[Long]("count")).sum.toDouble
     if (n == 0) return (Double.NaN, Double.NaN)
     val po = cells.filter(r => r.getAs[Double]("label") == r.getAs[Double]("prediction"))

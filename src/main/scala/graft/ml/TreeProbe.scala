@@ -28,15 +28,10 @@ import org.apache.spark.sql.functions._
   *  - per-node feature subsets (forest) rank features by the md5 hex of
   *    "n<node>:f<f>:<salt>" — string order, both engines.
   *
-  * Scale shape (MLlib's own architecture, re-derived): training is
-  * level-synchronous — ONE histogram aggregation per level (`groupBy(node)`
-  * with k·Bins·2 conditional sums: map-side partials collapse each
-  * partition to ≤2^level rows of 48 longs, so the only shuffle is
-  * metadata-sized) and the argmin runs on the driver over ≤2^depth·k·Bins
-  * counts (well inside the repo's driver-metadata budget). The FITTED tree
-  * is pure literals, so scoring — leaf assignment and prediction — is a
-  * zero-shuffle codegen CASE chain that applies to a batch scan or an
-  * ingest stream unchanged.
+  * Training and scoring run on the shared histogram-tree core
+  * ([[HistTree]]): this object supplies the Gini family ([[Gini]]) —
+  * weighted 0/1 label counts per bin, the Gini split cost, majority-vote
+  * leaves — plus the bootstrap weights and feature subsets.
   */
 object TreeProbe {
 
@@ -65,13 +60,31 @@ object TreeProbe {
   def allowedFeatures(node: Int, k: Int, m: Int, salt: String): Seq[Int] =
     (1 to k).sortBy(f => (md5hex(s"n$node:f$f:$salt"), f)).take(m).sorted
 
-  /** Weighted-Gini cost of a split, the exact double DAG the SQL mirrors:
-    * each side pays n − (p² + (n−p)²)/n; integer counts convert exactly,
-    * one division per side, left + right. */
-  private def giniCost(nl: Long, pl: Long, nr: Long, pr: Long): Double = {
-    def side(n: Long, p: Long): Double =
-      n.toDouble - (p * p + (n - p) * (n - p)).toDouble / n.toDouble
-    side(nl, pl) + side(nr, pr)
+  /** The Gini family: cells count weighted rows `n` and weighted
+    * positives `p` (longs); a split costs Σ_side n − (p² + (n−p)²)/n, the
+    * exact double DAG the SQL mirrors (integer counts convert exactly, one
+    * division per side, left + right); a leaf votes 1 iff 2p > n (an
+    * empty-weight leaf votes 0, both engines). */
+  object Gini extends HistTree.Family[Long, Int] {
+    def zero = 0L
+    def plus(a: Long, b: Long) = a + b
+    def minus(a: Long, b: Long) = a - b
+    def cost(nl: Long, pl: Long, nr: Long, pr: Long): Double = {
+      def side(n: Long, p: Long): Double =
+        n.toDouble - (p * p + (n - p) * (n - p)).toDouble / n.toDouble
+      side(nl, pl) + side(nr, pr)
+    }
+    def leaf(n: Long, p: Long) = if (2 * p > n) 1 else 0
+    val histSql = "sum(w) AS n, sum(w * yl) AS p"
+    val unpivotSql = "w, yl"
+    val statSql = "p"
+    val zeroSql = "0"
+    val costSql =
+      """(CAST(nl AS DOUBLE)
+        |       - CAST(pl*pl + (nl-pl)*(nl-pl) AS DOUBLE) / CAST(nl AS DOUBLE))
+        |    + (CAST(nn - nl AS DOUBLE)
+        |       - CAST((pp-pl)*(pp-pl) + ((nn-nl)-(pp-pl))*((nn-nl)-(pp-pl)) AS DOUBLE)
+        |         / CAST(nn - nl AS DOUBLE))""".stripMargin
   }
 
   /** Poisson(1)-shaped bootstrap weight for (id, tree `b`): fold the first
@@ -104,163 +117,36 @@ object TreeProbe {
     fitBatch(feats, xs, yCol, depth, Seq(weight), Seq(featSalt)).head
 
   /** Fit `weights.size` independent trees over the SAME binned base in
-    * ONE histogram job per level (r14, guide §1.2/§2.6): the per-tree
-    * per-level aggregations are independent given the shared base, so a
-    * T-tree depth-d fit that used to block on T·(d+1) sequential driver
-    * jobs (every one a full scheduling + codegen round-trip — the forest
-    * query measured 36 jobs for 0.3 s of execution) now runs d jobs
-    * total. Each level unpivots (tree, node, feature, bin) map-side and
-    * partial-aggregates to ≤T·2^level·k·Bins cells — the same
-    * metadata-sized shuffle as before, T trees wide.
-    *
-    * The separate leaf-stats pass is gone too: final-leaf (n, p) derive
-    * from the LAST level's histogram — a split node's children are
-    * partial sums over the split feature's bins (left = Σ_{b≤t}, right =
-    * rest), an unsplit node's total is Σ_b over any one feature — pure
-    * long adds of the same cells, so the derived stats are the integers
-    * the extra pass used to recompute. Split choice, tie-breaks and leaf
-    * votes are bit-identical to the per-tree form (TreeProbeSpec pins
-    * batch ≡ sequential on the real corpus). */
+    * ONE histogram job per level (r14, guide §1.2/§2.6): a T-tree depth-d
+    * fit that used to block on T·(d+1) sequential driver jobs (the forest
+    * query measured 36 jobs for 0.3 s of execution) runs d jobs total,
+    * final leaves included ([[HistTree.fit]]). Split choice, tie-breaks
+    * and leaf votes are bit-identical to the per-tree form (TreeProbeSpec
+    * pins batch ≡ sequential on the real corpus). */
   def fitBatch(feats: DataFrame, xs: Seq[String], yCol: String, depth: Int,
                weights: Seq[Column], featSalts: Seq[Option[String]]): Seq[Tree] = {
     val k = xs.size
-    val nT = weights.size
     require(k >= 1 && k <= 8, s"histogram CART supports 1..8 features, got $k")
-    require(featSalts.size == nT, "one featSalt per tree")
-    val base0 = xs.zipWithIndex.foldLeft(
+    require(featSalts.size == weights.size, "one featSalt per tree")
+    val binned = xs.zipWithIndex.foldLeft(
       feats.withColumn("_yl", col(yCol).cast("long"))) {
       case (df, (c, i)) => df.withColumn(s"_b${i + 1}", bin(col(c)))
     }
-    val base = weights.zipWithIndex.foldLeft(base0) {
-      case (df, (w, ti)) => df.withColumn(s"_w$ti", w.cast("long"))
+    val base = weights.zipWithIndex.foldLeft(binned) { case (df, (w, ti)) =>
+      df.withColumn(s"_w$ti", w.cast("long"))
+        .withColumn(s"_s$ti", col(s"_w$ti") * col("_yl"))
     }
-
-    val nodeCols = Array.fill[Column](nT)(lit(1))
-    val splits = Vector.fill(nT)(Vector.newBuilder[Split])
-    // last level's full histogram + splits, for the leaf derivation below
-    var lastCells: Map[(Int, Int, Int), Array[(Long, Long)]] = Map.empty
-    var lastSplits: Seq[Seq[Split]] = Seq.empty
-    for (level <- 0 until depth) {
-      // one job: unpivot (tree, node, f, bin) map-side over materialized
-      // node/weight COLUMNS (never expressions inlined into the Generate —
-      // the simhashBlocks no-CSE lesson) and partial-aggregate
-      val withNodes = (0 until nT).foldLeft(base) { (df, ti) =>
-        df.withColumn(s"_node$ti", nodeCols(ti))
-      }
-      val entries = for (ti <- 0 until nT; f <- 1 to k) yield
-        struct(lit(ti).as("t"), col(s"_node$ti").as("node"),
-          lit(f).as("f"), col(s"_b$f").as("b"), col(s"_w$ti").as("w"),
-          (col(s"_w$ti") * col("_yl")).as("wy"))
-      val hist = withNodes
-        .select(explode(array(entries: _*)).as("e"))
-        .groupBy(col("e.t").as("t"), col("e.node").as("node"),
-          col("e.f").as("f"), col("e.b").as("b"))
-        .agg(sum(col("e.w")).as("n"), sum(col("e.wy")).as("p"))
-        .collect()
-      // (tree, node, f) -> per-bin (n, p); canonical node order below
-      // (collect() row order is partition-dependent)
-      val cells = hist.map { r =>
-        (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
-          r.getLong(4), r.getLong(5))
-      }
-      val byTreeNodeF = cells.groupBy(c => (c._1, c._2, c._3))
-      def binArr(t: Int, node: Int, f: Int): Array[(Long, Long)] = {
-        val a = Array.fill(Bins)((0L, 0L))
-        byTreeNodeF.getOrElse((t, node, f), Array.empty)
-          .foreach(c => a(c._4) = (c._5, c._6))
-        a
-      }
-      val lvlSplits = (0 until nT).map { ti =>
-        val nodes = cells.iterator.filter(_._1 == ti).map(_._2)
-          .toSeq.distinct.sorted
-        nodes.flatMap { node =>
-          val fs = featSalts(ti)
-            .fold(1 to k: Seq[Int])(s => allowedFeatures(node, k, 2, s))
-          val cands = for {
-            f <- fs
-            arr = binArr(ti, node, f)
-            nn = arr.map(_._1).sum
-            pp = arr.map(_._2).sum
-            t <- 0 until Bins - 1
-            nl = (0 to t).map(b => arr(b)._1).sum
-            pl = (0 to t).map(b => arr(b)._2).sum
-            if nl > 0 && nn - nl > 0
-          } yield (giniCost(nl, pl, nn - nl, pp - pl), f, t)
-          if (cands.isEmpty) None
-          else { val (_, f, t) = cands.min; Some(Split(node, f, t)) }
-        }
-      }
-      (0 until nT).foreach { ti =>
-        splits(ti) ++= lvlSplits(ti)
-        val prev = nodeCols(ti)
-        nodeCols(ti) = lvlSplits(ti).foldLeft(prev) { (acc, s) =>
-          when(if (level == 0) lit(true) else prev === s.node,
-            when(col(s"_b${s.f}") <= s.t, lit(2 * s.node))
-              .otherwise(lit(2 * s.node + 1))).otherwise(acc)
-        }
-      }
-      if (level == depth - 1) {
-        lastCells = byTreeNodeF.map { case (key, cs) =>
-          val a = Array.fill(Bins)((0L, 0L))
-          cs.foreach(c => a(c._4) = (c._5, c._6))
-          key -> a
-        }
-        lastSplits = lvlSplits
-      }
-    }
-
-    // final leaves from the last level's histogram: children of a split
-    // are partial sums over the SPLIT feature's bins; an unsplit node's
-    // total is its f=1 bins summed (bins partition the node's rows)
-    (0 until nT).map { ti =>
-      val leafPred = scala.collection.mutable.Map.empty[Int, Int]
-      val splitByNode = lastSplits(ti).map(s => s.node -> s).toMap
-      lastCells.keysIterator
-        .collect { case (t, node, 1) if t == ti => node }
-        .foreach { node =>
-          splitByNode.get(node) match {
-            case Some(s) =>
-              val arr = lastCells((ti, node, s.f))
-              val nn = arr.map(_._1).sum; val pp = arr.map(_._2).sum
-              val nl = (0 to s.t).map(b => arr(b)._1).sum
-              val pl = (0 to s.t).map(b => arr(b)._2).sum
-              leafPred(2 * s.node) = if (2 * pl > nl) 1 else 0
-              leafPred(2 * s.node + 1) =
-                if (2 * (pp - pl) > (nn - nl)) 1 else 0
-            case None =>
-              val a = lastCells((ti, node, 1))
-              val nn = a.map(_._1).sum; val pp = a.map(_._2).sum
-              leafPred(node) = if (2 * pp > nn) 1 else 0
-          }
-        }
-      Tree(splits(ti).result(), leafPred.toMap)
-    }
+    HistTree.fit(base, k, depth, featSalts, Gini)
+      .map { case (splits, votes) => Tree(splits, votes) }
   }
 
-  /** Leaf-assignment Column for a fitted tree: the level-by-level CASE
-    * chain over the binned features — pure literals, zero shuffle. */
-  def leafCol(tree: Tree, xs: Seq[String], depth: Int): Column = {
-    val bins = xs.map(c => bin(col(c)))
-    var node: Column = lit(1)
-    for (level <- 0 until depth) {
-      val lo = 1 << level
-      val lvl = tree.splits.filter(s => s.node >= lo && s.node < 2 * lo)
-      val prev = node
-      node = lvl.foldLeft(prev) { (acc, s) =>
-        when(if (level == 0) lit(true) else prev === s.node,
-          when(bins(s.f - 1) <= s.t, lit(2 * s.node))
-            .otherwise(lit(2 * s.node + 1))).otherwise(acc)
-      }
-    }
-    node
-  }
+  /** Leaf-assignment Column for a fitted tree over raw features `xs`. */
+  def leafCol(tree: Tree, xs: Seq[String], depth: Int): Column =
+    HistTree.leafCol(tree.splits, depth, f => bin(col(xs(f - 1))))
 
-  /** Majority-vote prediction for a leaf Column (empty-weight leaves
-    * default to 0 — `2p > n` is false at 0/0, both engines). */
+  /** Majority-vote prediction for a leaf Column (unknown leaves vote 0). */
   def predCol(tree: Tree, leaf: Column): Column =
-    tree.leafPred.toSeq.sortBy(_._1).foldLeft(lit(0): Column) {
-      case (acc, (n, p)) => when(leaf === n, lit(p)).otherwise(acc)
-    }
+    HistTree.leafCase(tree.leafPred, leaf, 0)
 
   private val qualityXs = Seq("x1", "x2", "x3")
 
@@ -277,14 +163,22 @@ object TreeProbe {
     // but the plan stays the Exchange-free literal map PlanSpec pins.
     val featsT = RidgeProbe.qualityFeatures(
       graft.core.Tables.fanOut(docs)).persist()
-    val tree = fit(featsT, qualityXs, "y", depth = 3, lit(1L), None)
-    val feats = RidgeProbe.qualityFeatures(docs)
-    val out = feats.withColumn("leaf", leafCol(tree, qualityXs, 3))
+    val tree = treeFit(featsT)
+    featsT.unpersist(false)
+    treeScore(RidgeProbe.qualityFeatures(docs), tree)
+  }
+
+  /** The training half of [[treeQuery]]: depth-3 CART over the quality
+    * features. */
+  def treeFit(feats: DataFrame): Tree =
+    fit(feats, qualityXs, "y", depth = 3, lit(1L), None)
+
+  /** The scoring half of [[treeQuery]], shared with `ml_tree_roundtrip`
+    * (which scores the tree it reloaded): per-row leaf and vote. */
+  def treeScore(feats: DataFrame, tree: Tree): DataFrame =
+    feats.withColumn("leaf", leafCol(tree, qualityXs, 3))
       .withColumn("pred", predCol(tree, col("leaf")))
       .select("doc_id", "x1", "x2", "x3", "y", "leaf", "pred")
-    featsT.unpersist(false)
-    out
-  }
 
   /** The training half of [[forestQuery]]: 4-tree md5-bootstrap forest
     * with per-node 2-of-3 feature subsets over the quality features —
@@ -339,73 +233,16 @@ object TreeProbe {
 
   /** CTE chain replaying one tree's training; terminal CTE `pr<S>` has
     * (idCol, leaf, pred) per input row. `featsCte` must expose idCol,
-    * x1..xk on the rnd4 grid, and 0/1 label y. All CTEs are MATERIALIZED —
-    * DuckDB inlines by default and each level references its parent
-    * several times (the ann_ivf lesson). */
+    * x1..xk on the rnd4 grid, and 0/1 label y. */
   def oracleSql(featsCte: String, idCol: String, k: Int, depth: Int,
                 suffix: String, weightSql: String,
                 featSalt: Option[String]): String = {
     val S = suffix
     val bcols = (1 to k).map(f => s"b$f")
-    val binDefs = (1 to k).map(f =>
-      s"least(CAST(floor(x$f * $Bins) AS INTEGER), ${Bins - 1}) AS b$f")
-    val unpivot = (1 to k).map(f =>
-      s"SELECT node, $f AS f, b$f AS b, w, yl FROM a$S%LEVEL%")
-      .mkString("\n    UNION ALL ")
-    val thVals = (0 until Bins - 1).map(t => s"($t)").mkString(",")
-    val fVals = (1 to k).map(f => s"($f)").mkString(",")
-
-    val levels = (1 to depth).map { l =>
-      val fsCte = featSalt.map { salt =>
-        s"""fs$S$l AS MATERIALIZED (
-           |  SELECT node, f FROM (
-           |    SELECT nd.node, ff.f,
-           |      row_number() OVER (PARTITION BY nd.node
-           |        ORDER BY md5('n' || CAST(nd.node AS VARCHAR) || ':f' || CAST(ff.f AS VARCHAR) || ':$salt'), ff.f) AS rn
-           |    FROM (SELECT DISTINCT node FROM h$S$l) nd
-           |    CROSS JOIN (VALUES $fVals) AS ff(f))
-           |  WHERE rn <= 2),
-           |""".stripMargin
-      }.getOrElse("")
-      val fsJoin = if (featSalt.isDefined) s"\n  JOIN fs$S$l USING (node, f)" else ""
-      val binPick = s"(CASE s.f ${(1 to k - 1).map(f => s"WHEN $f THEN d.b$f").mkString(" ")} ELSE d.b$k END)"
-      s"""h$S$l AS MATERIALIZED (
-         |  SELECT node, f, b, sum(w) AS n, sum(w * yl) AS p
-         |  FROM (
-         |    ${unpivot.replace("%LEVEL%", l.toString)})
-         |  GROUP BY node, f, b),
-         |$fsCte""".stripMargin +
-      s"""t$S$l AS MATERIALIZED (
-         |  SELECT node, f, th.t,
-         |    sum(CASE WHEN b <= th.t THEN n ELSE 0 END) AS nl,
-         |    sum(CASE WHEN b <= th.t THEN p ELSE 0 END) AS pl,
-         |    sum(n) AS nn, sum(p) AS pp
-         |  FROM h$S$l$fsJoin
-         |  CROSS JOIN (VALUES $thVals) AS th(t)
-         |  GROUP BY node, f, th.t),
-         |g$S$l AS MATERIALIZED (
-         |  SELECT node, f, t,
-         |    (CAST(nl AS DOUBLE)
-         |       - CAST(pl*pl + (nl-pl)*(nl-pl) AS DOUBLE) / CAST(nl AS DOUBLE))
-         |    + (CAST(nn - nl AS DOUBLE)
-         |       - CAST((pp-pl)*(pp-pl) + ((nn-nl)-(pp-pl))*((nn-nl)-(pp-pl)) AS DOUBLE)
-         |         / CAST(nn - nl AS DOUBLE)) AS cost
-         |  FROM t$S$l WHERE nl > 0 AND nn - nl > 0),
-         |s$S$l AS MATERIALIZED (
-         |  SELECT node, f, t FROM (
-         |    SELECT node, f, t, row_number() OVER (
-         |      PARTITION BY node ORDER BY cost ASC, f ASC, t ASC) AS rn
-         |    FROM g$S$l) WHERE rn = 1),
-         |a$S${l + 1} AS MATERIALIZED (
-         |  SELECT d.$idCol, ${bcols.map(b => s"d.$b").mkString(", ")}, d.w, d.yl,
-         |    CASE WHEN s.node IS NULL THEN d.node
-         |         WHEN $binPick <= s.t THEN d.node * 2
-         |         ELSE d.node * 2 + 1 END AS node
-         |  FROM a$S$l d LEFT JOIN s$S$l s ON d.node = s.node)""".stripMargin
-    }.mkString(",\n")
-
+    val levels = (1 to depth).map(l => HistTree.levelCtes(S, l, k, Gini,
+      idCol +: bcols :+ "w" :+ "yl", featSalt)).mkString(",\n")
     s"""a${S}1 AS MATERIALIZED (
-       |  SELECT $idCol, ${binDefs.mkString(", ")},
+       |  SELECT $idCol, ${(1 to k).map(HistTree.binSql).mkString(", ")},
        |    $weightSql AS w, CAST(y AS BIGINT) AS yl, 1 AS node
        |  FROM $featsCte),
        |$levels,

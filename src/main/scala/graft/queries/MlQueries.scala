@@ -347,17 +347,19 @@ object MlQueries {
     // score IDENTICALLY, proven by sharing ml_tree_fit's hash oracle.
     "ml_tree_roundtrip" -> { (s, d) =>
       import graft.ml.{ProbeModels, RidgeProbe, TreeProbe}
-      val xs = Seq("x1", "x2", "x3")
       val feats = RidgeProbe.qualityFeatures(Tables.documents(s, d)).persist()
-      val fitted = TreeProbe.fit(feats, xs, "y", depth = 3, lit(1L), None)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_tree_model_").toString + "/probe.json"
-      ProbeModels.write(s, path, ProbeModels.treeJson(fitted))
-      val tree = ProbeModels.treeFromJson(ProbeModels.read(s, path))
+      val fitted = TreeProbe.treeFit(feats)
+      val dir = new org.apache.hadoop.fs.Path(java.nio.file.Files
+        .createTempDirectory("graft_tree_model_").toUri)
+      val path = s"$dir/probe.json"
+      // the sidecar is read eagerly, so the directory goes right after
+      val tree = try {
+        ProbeModels.write(s, path, ProbeModels.treeJson(fitted))
+        ProbeModels.treeFromJson(ProbeModels.read(s, path))
+      } finally
+        dir.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dir, true)
       require(tree == fitted, "tree roundtrip must be lossless")
-      val out = feats.withColumn("leaf", TreeProbe.leafCol(tree, xs, 3))
-        .withColumn("pred", TreeProbe.predCol(tree, col("leaf")))
-        .select("doc_id", "x1", "x2", "x3", "y", "leaf", "pred")
+      val out = TreeProbe.treeScore(feats, tree)
       feats.unpersist(false)
       out
     },

@@ -49,7 +49,7 @@ object TextQueries {
       .orderBy(col("cnt").desc, col("term").asc)
       .limit(topK)
       .withColumn("rank", row_number().over(
-        Window.orderBy(col("cnt").desc, col("term").asc)))
+        Window.orderBy(col("cnt").desc, col("term").asc))) // SCALE:topngrams-rank
       .select(log(col("rank").cast("double")).as("x"),
         log(col("cnt").cast("double")).as("y"))
     val m = ranked.agg(
@@ -122,7 +122,7 @@ object TextQueries {
       .orderBy(col("lift").desc, col("bigram").asc)
       .limit(32)
       .withColumn("rank", row_number().over(
-        Window.orderBy(col("lift").desc, col("bigram").asc)))
+        Window.orderBy(col("lift").desc, col("bigram").asc))) // SCALE:collocations-rank
       .select(col("rank"), col("bigram"), col("cab"), col("ca"),
         col("cb"), col("lift"))
   }
@@ -875,7 +875,7 @@ object TextQueries {
         .orderBy(col("chi2").desc, col("term").asc)
         .limit(32)
         .withColumn("rank", row_number().over(
-          Window.orderBy(col("chi2").desc, col("term").asc)))
+          Window.orderBy(col("chi2").desc, col("term").asc))) // SCALE:chi2-rank
         .select(col("rank"), col("term"), col("a").as("en_docs"),
           (col("ab") - col("a")).as("other_docs"), col("chi2"))
     },

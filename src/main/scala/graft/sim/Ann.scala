@@ -308,7 +308,7 @@ object Ann {
       .limit(sampleN)
       .select("id", "e")
       .as[(Long, Array[Float])]
-      .collect()
+      .collect() // SCALE:ann-seed-sample
     require(sample.nonEmpty, "seededCentroids: empty corpus")
     val k = math.min(nlist, sample.length)
     val dims = sample(0)._2.length
@@ -414,7 +414,7 @@ object Ann {
     // trainer's `sample.take(k)`; O(k · dims) driver metadata
     var cents: Array[Array[Double]] = sampleDf
       .orderBy(col("_r"), col("id")).limit(k)
-      .select("e").as[Array[Float]].collect()
+      .select("e").as[Array[Float]].collect() // SCALE:ann-lloyd-init
       .map(_.map(_.toDouble))
     val dims = cents(0).length
     val members = sampleDf.select("id", "e").as[(Long, Array[Float])]
@@ -437,7 +437,7 @@ object Ann {
           }
           (cell, sums, ms.length.toLong)
         }
-        .collect()
+        .collect() // SCALE:ann-lloyd-fold
       val sums = Array.fill(k)(null: Array[Double])
       val counts = new Array[Long](k)
       folded.foreach { case (j, s, n) => sums(j) = s; counts(j) = n }
@@ -632,7 +632,7 @@ object Ann {
     import spark.implicits._
     spark.read.parquet(s"$path/codebooks")
       .select(col("book"), col("code"), col("centroid").cast("array<double>"))
-      .as[(Int, Int, Array[Double])].collect()
+      .as[(Int, Int, Array[Double])].collect() // SCALE:ann-pq-codebooks
       .groupBy(_._1).toArray.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3))
   }
@@ -716,7 +716,7 @@ object Ann {
     import spark.implicits._
     spark.read.parquet(s"$path/centroids")
       .select(col("cell"), col("centroid").cast("array<double>"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2) // SCALE:ann-centroids
   }
 
   /** The pruned corpus scan a probe performs: probed cell ids → IN-filter
@@ -731,7 +731,7 @@ object Ann {
     import spark.implicits._
     val probed = queries
       .select(explode(probesOf(cents, col(embCol), nProbe)).as("cell"))
-      .distinct().as[Int].collect()
+      .distinct().as[Int].collect() // SCALE:ann-probed-cells
     val scan = spark.read.parquet(s"$path/data")
       .filter(col("cell").isin(probed.toSeq: _*))
     tombstones(spark, path).fold(scan)(t =>
@@ -1226,7 +1226,7 @@ object Ann {
     val rows = corpus
       .select(posexplode(col(embCol).cast("array<double>")))
       .groupBy("pos").agg(min("col").as("mn"), max("col").as("mx"))
-      .orderBy("pos").collect()
+      .orderBy("pos").collect() // SCALE:ann-sq8-stats
     (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
   }
 

@@ -71,7 +71,7 @@ object Retrieval {
     // term) — corpus-scale for common terms — so the rank must lower to
     // TakeOrderedAndProject; the row_number window then sees only topN
     // rows (identical deterministic ties: same total order both steps)
-    val w = Window.orderBy(col("_score").desc, col("id").asc)
+    val w = Window.orderBy(col("_score").desc, col("id").asc) // SCALE:lexical-rank
     comp.groupBy("id").agg(score.as("_score"))
       .orderBy(col("_score").desc, col("id").asc)
       .limit(topN)

@@ -108,7 +108,7 @@ object SemDedup {
     val bench = benchmark
       .select(col(idCol).cast("long").as("id"),
         col(embCol).cast("array<float>").as("e"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
+      .as[(Long, Array[Float])].collect().sortBy(_._1) // SCALE:semdedup-centroids
     require(bench.nonEmpty, "semanticDecontaminate: empty benchmark")
     val benchIds = bench.map(_._1).toSet
     val sims = bench.map { case (_, e) =>

@@ -52,7 +52,7 @@ object Rasters {
     val others = cube.dims.filterNot(d => d == xd || d == yd)
     def axis(d: String): Array[Long] =
       cube.df.select(col(d).cast("long")).distinct().orderBy(col(d))
-        .collect().map(_.getLong(0))
+        .collect().map(_.getLong(0)) // SCALE:raster-slice-keys
     GridPlan(xd, yd, others, axis(xd), axis(yd))
   }
 
@@ -447,7 +447,7 @@ object Rasters {
          |"order":"C","filters":null}""".stripMargin.replace("\n", "")
     val sliceKeys =
       if (gp.sliceDims.isEmpty) Seq(Seq.empty[Any])
-      else cube.df.select(sliceCols: _*).distinct().collect()
+      else cube.df.select(sliceCols: _*).distinct().collect() // SCALE:raster-axis-labels
         .map(_.toSeq).toSeq
     sliceKeys.foreach { k =>
       writeFile(spark, s"$path/${sliceName(gp.sliceDims, k)}/.zarray",

@@ -59,7 +59,7 @@ object Sinks {
     val yd = cube.requireDim(cube.yDim, "y")
     val others = cube.dims.filterNot(d => d == xd || d == yd)
     val xs = cube.df.select(col(xd)).distinct().orderBy(col(xd))
-      .collect().map(_.get(0)).toSeq
+      .collect().map(_.get(0)).toSeq // SCALE:sinks-grid-cells
     val wide = cube.df.groupBy((others :+ yd).map(col): _*)
       .pivot(xd, xs)
       .agg(first(col(cube.valueCol)))

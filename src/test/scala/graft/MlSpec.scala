@@ -151,6 +151,17 @@ class MlSpec extends SparkSpec {
       ex.getCause != null)
   }
 
+  test("fit rejects a training set with unequal feature widths") {
+    import spark.implicits._
+    val ragged = Seq((Array(0.1, 0.2), 0), (Array(0.3), 1))
+      .toDF("embedding", "label")
+    val ex = intercept[IllegalArgumentException] {
+      MlProcesses.mlFit(MlProcesses.mlmClassRandomForest(numTrees = 2), ragged)
+    }
+    assert(ex.getMessage.contains("ml_fit: training rows need one feature " +
+      "width, got 1 to 2"), ex.getMessage)
+  }
+
   test("mlm.json survives a spec round-trip including scaling") {
     val spec = MlmSpec(name = "t", bands = Seq("a", "b"),
       inputShape = Seq(-1, 2), scaling = Some(ValueScaling("z-score", 0.5, 2.0)),

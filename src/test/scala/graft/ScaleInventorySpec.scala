@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Mechanical enforcement of SCALE.md's contract: every driver-side
   * `.collect()` and every unpartitioned window (`Window.orderBy` with no
-  * partitionBy) in main sources must appear in SCALE.md's inventory tables
-  * at its CURRENT file:line, and every inventoried line must still carry
-  * the construct. A new undocumented site is a scale regression (it has no
-  * reviewed budget); a stale line is inventory rot — either way the build
-  * fails instead of relying on a review convention.
+  * partitionBy) in main sources carries ONE trailing `// SCALE:<id>`
+  * anchor, and every id has exactly one budget row in SCALE.md's
+  * inventory tables naming its file. Ids instead of line numbers: a site
+  * keeps its id when code above it moves. A new undocumented site is a
+  * scale regression (it has no reviewed budget); a row with no live site
+  * is inventory rot — either way the build fails instead of relying on a
+  * review convention.
   */
 class ScaleInventorySpec extends AnyFunSuite {
 
@@ -23,18 +25,31 @@ class ScaleInventorySpec extends AnyFunSuite {
     new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
   }
 
-  /** Every `some/File.scala:12[,:34…]` reference in SCALE.md. */
-  private lazy val documented: Set[(String, Int)] = {
-    val ref = """([A-Za-z0-9_/]+\.scala):(\d+(?:,:\d+)*)""".r
-    ref.findAllMatchIn(scaleMd).flatMap { m =>
-      m.group(2).split(",:").map(l => (m.group(1), l.toInt))
-    }.toSet
+  private val Patterns = Seq(".collect()", "Window.orderBy")
+  private val Anchor = """// SCALE:([a-z0-9-]+)""".r
+  private val RowId = """SCALE:([a-z0-9-]+)""".r
+  private val RowFile = """`([A-Za-z0-9_/]+\.scala)`""".r
+
+  /** (id, files named in its row) for every id in a SCALE.md table row;
+    * an id listed twice appears twice. */
+  private lazy val rows: Seq[(String, Seq[String])] =
+    scaleMd.split("\n").toSeq.filter(_.startsWith("|")).flatMap { row =>
+      val files = RowFile.findAllMatchIn(row).map(_.group(1)).toSeq
+      RowId.findAllMatchIn(row).map(m => (m.group(1), files))
+    }
+
+  /** One main-source line that holds a construct or an anchor. */
+  private final case class Line(file: String, no: Int, text: String) {
+    def anchors: Seq[String] = Anchor.findAllMatchIn(text).map(_.group(1)).toSeq
+    /** The construct, in code before the first anchor (not in a comment). */
+    def construct: Boolean = {
+      val code = Anchor.findFirstMatchIn(text).fold(text)(m => text.take(m.start))
+      !code.trim.startsWith("//") && Patterns.exists(code.contains)
+    }
+    def at: String = s"$file:$no"
   }
 
-  private val Patterns = Seq(".collect()", "Window.orderBy")
-
-  /** (relative path, 1-based line) of every non-comment occurrence. */
-  private def sites(pattern: String): Seq[(String, Int)] = {
+  private lazy val lines: Seq[Line] = {
     val stream = java.nio.file.Files.walk(mainSrc)
     try {
       stream.iterator().asScala
@@ -42,59 +57,72 @@ class ScaleInventorySpec extends AnyFunSuite {
         .flatMap { p =>
           val rel = mainSrc.relativize(p).toString
           java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (ln, i)
-                if ln.contains(pattern) && !ln.trim.startsWith("//") =>
-              (rel, i + 1)
+            case (ln, i) if Patterns.exists(ln.contains) || ln.contains("// SCALE:") =>
+              Line(rel, i + 1, ln)
           }
         }
         .toSeq
     } finally stream.close()
   }
 
-  /** SCALE.md refs omit the `graft/` package root; resolve to the exact
-    * relative path. EXACT equality, not endsWith — a suffix match would
-    * let a same-suffix file (`foo/sub/dedup/Dedup.scala`) silently
-    * satisfy a `dedup/Dedup.scala` inventory row. */
-  private def sameFile(rel: String, documentedFile: String): Boolean =
-    rel == documentedFile || rel == s"graft/$documentedFile"
+  /** SCALE.md names files without the `graft/` package root. EXACT
+    * equality, not endsWith — a suffix match would let a same-suffix file
+    * (`foo/sub/dedup/Dedup.scala`) satisfy a `dedup/Dedup.scala` row. */
+  private def sameFile(rel: String, documented: String): Boolean =
+    rel == documented || rel == s"graft/$documented"
 
-  private def assertInventoried(found: Seq[(String, Int)],
-                                what: String): Unit = {
-    val missing = found.filterNot { case (f, l) =>
-      documented.exists { case (df, dl) => sameFile(f, df) && dl == l }
-    }
+  private lazy val anchored: Seq[(String, Line)] =
+    lines.flatMap(l => l.anchors.map(_ -> l))
+
+  /** Every `pattern` site carries exactly one anchor whose id has a
+    * SCALE.md row naming the site's file. */
+  private def assertInventoried(pattern: String, what: String): Unit = {
+    val sites = lines.filter(l => l.construct && l.text.contains(pattern))
+    assert(sites.nonEmpty, s"expected at least one $what site")
+    val rowFiles = rows.toMap
+    val missing = sites.filterNot(l => l.anchors match {
+      case Seq(id) => rowFiles.get(id).exists(_.exists(sameFile(l.file, _)))
+      case _       => false
+    })
     assert(missing.isEmpty,
-      s"$what sites NOT in SCALE.md's inventory (a new site is a scale " +
-        "regression until it has a reviewed budget row; a moved site is " +
-        "stale inventory): " +
-        missing.map { case (f, l) => s"$f:$l" }.mkString(", "))
+      s"$what sites NOT in SCALE.md's inventory (need exactly one " +
+        "`// SCALE:<id>` anchor whose id has a row naming the file; a new " +
+        "site is a scale regression until it has a reviewed budget row): " +
+        missing.map(l => s"${l.at} ${l.anchors.mkString(",")}").mkString("; "))
   }
 
   test("every driver-side collect() in main sources is inventoried") {
-    val found = sites(".collect()")
-    assert(found.nonEmpty, "expected at least one collect site")
-    assertInventoried(found, "collect()")
+    assertInventoried(".collect()", "collect()")
   }
 
   test("every unpartitioned window in main sources is inventoried") {
-    val found = sites("Window.orderBy")
-    assert(found.nonEmpty, "expected at least one unpartitioned window")
-    assertInventoried(found, "unpartitioned-window")
+    assertInventoried("Window.orderBy", "unpartitioned-window")
   }
 
   test("SCALE.md inventory lines are current: each still carries its " +
        "construct") {
-    documented.foreach { case (f, l) =>
-      val file = java.nio.file.Files.walk(mainSrc).iterator().asScala
-        .find(p => sameFile(mainSrc.relativize(p).toString, f))
-      assert(file.isDefined, s"SCALE.md references $f which no longer exists")
-      val lines = java.nio.file.Files.readAllLines(file.get)
-      assert(l >= 1 && l <= lines.size(),
-        s"SCALE.md references $f:$l beyond end of file")
-      val ln = lines.get(l - 1)
-      assert(Patterns.exists(ln.contains),
-        s"SCALE.md references $f:$l but that line carries no inventoried " +
-          s"construct anymore (rot): '${ln.trim}'")
+    val stray = lines.filter(l => l.anchors.nonEmpty && !l.construct)
+    assert(stray.isEmpty,
+      "anchors on lines that carry no collect()/Window.orderBy (rot): " +
+        stray.map(l => s"${l.at} '${l.text.trim}'").mkString(", "))
+    val noRow = anchored.filterNot { case (id, _) => rows.exists(_._1 == id) }
+    assert(noRow.isEmpty, "anchor ids with no SCALE.md row: " +
+      noRow.map { case (id, l) => s"$id (${l.at})" }.mkString(", "))
+    val dead = rows.map(_._1).toSet -- anchored.map(_._1)
+    assert(dead.isEmpty,
+      s"SCALE.md rows whose id has no live site (rot): ${dead.mkString(", ")}")
+    val lineRefs = """[A-Za-z0-9_/]+\.scala:\d+""".r.findAllIn(scaleMd).toSeq
+    assert(lineRefs.isEmpty,
+      s"SCALE.md cites sites by anchor id, not file:line: ${lineRefs.mkString(", ")}")
+  }
+
+  test("each SCALE id is anchored once and listed once") {
+    val dupSites = anchored.groupBy(_._1).collect {
+      case (id, ls) if ls.size > 1 => s"$id at ${ls.map(_._2.at).mkString(", ")}"
     }
+    val dupRows = rows.groupBy(_._1).collect { case (id, rs) if rs.size > 1 => id }
+    assert(dupSites.isEmpty && dupRows.isEmpty,
+      s"duplicate ids: anchored twice [${dupSites.mkString("; ")}], " +
+        s"listed twice in SCALE.md [${dupRows.mkString(", ")}]")
   }
 }
