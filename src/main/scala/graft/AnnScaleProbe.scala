@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Battery.{r3, timed}
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.sim.Ann
 
 /** The at-rest ANN scale-point harness (SCALE.md §5b): build the IVF-PQ
@@ -38,8 +38,7 @@ object AnnScaleProbe {
 
     def measure(tag: String, build: String => Unit,
                 probe: String => org.apache.spark.sql.DataFrame): String = {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft_annscale_${tag}_").toString
+      val path = Fixtures.dir(s"annscale_$tag")
       val (_, buildS) = timed(build(path))
       // two timed probe passes (first pays JIT/codegen; report both)
       val (r1, p1) = timed(probe(path).count())

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.core.Tables.{TwinShift, TwinShift2}
 import graft.dedup.{Dedup, GraphRank}
 
@@ -31,24 +32,18 @@ object DedupQueries {
     * REAL document, silently corrupting the near-dup corpora on BOTH
     * engines at once — the hash gates would stay green on wrong
     * semantics. So every twin-id builder asserts the ceiling, once per
-    * (dir, id column) per JVM: one single-column max scan, cached
-    * thereafter. The shift lives in [[graft.core.Tables.TwinShift]]
-    * (10⁹ since r14 — the r13 10⁵ ceiling sat exactly at a 20× docs
-    * replica); the same ceiling is documented in tools/make_sf2_docs.py. */
-  private val twinHeadroomOk =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    * (dir, id column) per JVM: one single-column max scan. The shift
+    * lives in [[graft.core.Tables.TwinShift]] (10⁹ since r14 — the r13
+    * 10⁵ ceiling sat exactly at a 20× docs replica); the same ceiling is
+    * documented in tools/make_sf2_docs.py. */
   private def assertTwinHeadroom(df: DataFrame, d: String, idCol: String,
-                                 shift: Long = TwinShift): Unit = {
-    val key = s"$d#$idCol#$shift"
-    if (!twinHeadroomOk.contains(key)) {
+                                 shift: Long = TwinShift): Unit =
+    Fixtures.once(s"twin_headroom:$d#$idCol#$shift") {
       val mx = Option(df.agg(max(col(idCol))).head().get(0))
         .map(_.toString.toLong).getOrElse(-1L)
       require(mx < shift,
         s"twin-id shift $shift collides with real ids: max($idCol)=$mx in $d")
-      twinHeadroomOk.add(key)
-      ()
     }
-  }
 
   /** documents ∪ tail-truncated copy (drop last 5 words, keep ≥ 3) —
     * near-dups for MinHash/SimHash/Jaccard. */
@@ -230,102 +225,54 @@ object DedupQueries {
        | * sqrt(list_sum(list_transform(generate_series(1, len($b)),
        |     i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))))""".stripMargin
 
-  /** The streamed first-wins verdicts for `dedup_online_stream` (E9
-    * through the gate), materialized once per (JVM, sf dir) like
-    * SimQueries.invStreamIndex: the near-dup corpus is staged as
-    * contiguous doc_id-range files whose modification times encode
-    * arrival order (repartitionByRange part files are already in range
-    * order; distinct mtimes make the file source's oldest-first pick
-    * deterministic), then replayed through a REAL micro-batched
-    * Structured Streaming file source (one file per trigger) into
-    * [[graft.streaming.DedupStreams.nearDupStream]]'s claim-store
-    * foreachBatch — including a MID-STREAM [[graft.streaming.DedupStreams
-    * .compactClaims]] rewrite (compactEvery=2 over 4 batches), so the
-    * store's maintenance compaction is inside the hash gate too. Arrival
-    * respecting id order is exactly the precondition under which the
-    * stream equals batch [[graft.dedup.Dedup.firstWinsKept]], so this key
-    * reuses `dedup_online`'s oracle VERBATIM — the whole streamed
-    * lifecycle (batch splits, claim appends, compaction swap) is
-    * hash-gated, not just spec-pinned. No driver-side corpus collect
-    * anywhere. */
-  private val onlineStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def onlineStreamVerdicts(s: SparkSession, d: String): DataFrame = {
-    val path = onlineStreamCache.getOrElseUpdate(d, {
-      val corpus = nearCorpus(s, d).select(col("doc_id"), col("text"))
-      val stage = stageIdOrderedArrivals(s, corpus, parts = 4)
-      val claimsDir = java.nio.file.Files
-        .createTempDirectory("graft_online_claims_").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_online_out_").toString
-      val q = graft.streaming.DedupStreams.nearDupStream(
-        s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage),
-        claimsDir, outDir, compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      outDir
-    })
-    s.read.parquet(path)
+  /** The shared lifecycle of the id-ordered stream keys (E9, E12, E18):
+    * `corpus` arrives as 4 contiguous doc_id-range files, one per trigger,
+    * into the store-backed stream `start(arrivals, storeDir, outDir)`.
+    * Id-ordered arrival is the precondition under which each store-backed
+    * stream equals its batch anchor, and `compactEvery = 2` over the 4
+    * batches puts a mid-stream store compaction inside the hash gate.
+    * Returns `outDir`. */
+  private def idOrderedStream(name: String, corpus: DataFrame)(
+      start: (DataFrame, String, String) => StreamingQuery): String = {
+    val (arrivals, stage) =
+      Fixtures.stage(corpus.repartitionByRange(4, col("doc_id")))
+    val store = Fixtures.dir(s"${name}_store")
+    val out = Fixtures.dir(s"${name}_out")
+    Fixtures.drain(start(arrivals, store, out), stage, store)
+    out
   }
 
-  /** Stage `df` as `parts` contiguous doc_id-range files whose
-    * modification times encode arrival order (repartitionByRange part
-    * files are already in range order; distinct mtimes make the file
-    * source's oldest-first pick deterministic) — the shared staging step
-    * of every id-ordered stream gate key (E9/E12). */
-  private def stageIdOrderedArrivals(s: SparkSession, df: DataFrame,
-                                     parts: Int,
-                                     byCol: String = "doc_id"): String = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stage_tmp_").toString
-    df.repartitionByRange(parts, col(byCol))
-      .write.mode("overwrite").parquet(tmp)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_stage_arrivals_").toString
-    val tmpP = new org.apache.hadoop.fs.Path(tmp)
-    val fs = tmpP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val base = System.currentTimeMillis() - 86400000L
-    fs.listStatus(tmpP).filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).zipWithIndex.foreach { case (f, k) =>
-        val dst = new org.apache.hadoop.fs.Path(stage,
-          f"arrival-$k%05d.parquet")
-        fs.rename(f.getPath, dst)
-        fs.setTimes(dst, base + k * 60000L, -1)
+  /** The streamed first-wins verdicts for `dedup_online_stream` (E9
+    * through the gate): the near-dup corpus through
+    * [[graft.streaming.DedupStreams.nearDupStream]]'s claim store, with a
+    * mid-stream [[graft.streaming.DedupStreams.compactClaims]] rewrite.
+    * Under id-ordered arrival the stream equals batch
+    * [[graft.dedup.Dedup.firstWinsKept]], so this key reuses
+    * `dedup_online`'s oracle VERBATIM — the whole streamed lifecycle
+    * (batch splits, claim appends, compaction swap) is hash-gated. */
+  def onlineStreamVerdicts(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"online_stream:$d") {
+      idOrderedStream("online",
+          nearCorpus(s, d).select(col("doc_id"), col("text"))) {
+        graft.streaming.DedupStreams.nearDupStream(_, _, _, compactEvery = 2)
       }
-    stage
-  }
+    })
 
   /** The streamed novelty scores for `text_novelty_stream` (E12 through
-    * the gate), materialized once per (JVM, sf dir) like
-    * [[onlineStreamVerdicts]]: the near corpus arrives as a real
-    * id-ordered micro-batched file-source stream (one file per trigger)
-    * into [[graft.streaming.DedupStreams.noveltyStream]]'s gram-store
-    * foreachBatch — including a MID-STREAM [[graft.streaming.DedupStreams
-    * .compactGrams]] rewrite (compactEvery=2 over 4 batches). Under
-    * id-ordered arrival the incremental min-carrier scores equal batch
-    * [[graft.dedup.Dedup.noveltyScores]] exactly, so this key reuses
-    * `text_novelty`'s oracle VERBATIM — the whole streamed lifecycle
-    * (batch splits, gram-store appends, compaction swap) is hash-gated,
-    * not just spec-pinned. No driver-side corpus collect anywhere. */
-  private val noveltyStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def noveltyStreamScores(s: SparkSession, d: String): DataFrame = {
-    val path = noveltyStreamCache.getOrElseUpdate(d, {
-      val corpus = nearCorpus(s, d).select(col("doc_id"), col("text"))
-      val stage = stageIdOrderedArrivals(s, corpus, parts = 4)
-      val gramsDir = java.nio.file.Files
-        .createTempDirectory("graft_novelty_grams_").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_novelty_out_").toString
-      val q = graft.streaming.DedupStreams.noveltyStream(
-        s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage),
-        gramsDir, outDir, w = 8, compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      outDir
+    * the gate): the near corpus through
+    * [[graft.streaming.DedupStreams.noveltyStream]]'s gram store, with a
+    * mid-stream [[graft.streaming.DedupStreams.compactGrams]] rewrite.
+    * Under id-ordered arrival the incremental min-carrier scores equal
+    * batch [[graft.dedup.Dedup.noveltyScores]] exactly, so this key reuses
+    * `text_novelty`'s oracle VERBATIM. */
+  def noveltyStreamScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"novelty_stream:$d") {
+      idOrderedStream("novelty",
+          nearCorpus(s, d).select(col("doc_id"), col("text"))) {
+        graft.streaming.DedupStreams.noveltyStream(_, _, _, w = 8,
+          compactEvery = 2)
+      }
     })
-    s.read.parquet(path)
-  }
 
   /** E18 slice corpus: every 20th document plus its tail-truncated twin —
     * [[nearCorpus]] restricted so no (blk, key) SimHash bucket can approach
@@ -346,22 +293,15 @@ object DedupQueries {
   }
 
   /** The streamed first-wins SimHash verdicts for `dedup_simhash_stream`
-    * (E18 through the gate), materialized once per (JVM, sf dir) like
-    * [[onlineStreamVerdicts]]: the cap-free slice corpus arrives as a real
-    * id-ordered micro-batched file-source stream (one file per trigger)
-    * into [[graft.streaming.DedupStreams.simhashDedupStream]]'s
-    * signature-store foreachBatch — including a MID-STREAM
-    * [[graft.streaming.DedupStreams.compactShStore]] rewrite
-    * (compactEvery=2 over 4 batches). On a corpus where the batch anchor's
+    * (E18 through the gate): the cap-free slice corpus through
+    * [[graft.streaming.DedupStreams.simhashDedupStream]]'s signature
+    * store, with a mid-stream [[graft.streaming.DedupStreams
+    * .compactShStore]] rewrite. On a corpus where the batch anchor's
     * `maxBucket` guard never binds (required loudly below), the causal
     * store consultation IS the banded-Hamming pair set, so this key reuses
-    * `dedup_simhash_online`'s oracle RESTRICTED to the slice — the whole
-    * streamed lifecycle (batch splits, store appends, compaction swap) is
-    * hash-gated. No driver-side corpus collect anywhere. */
-  private val simhashStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def simhashStreamVerdicts(s: SparkSession, d: String): DataFrame = {
-    val path = simhashStreamCache.getOrElseUpdate(d, {
+    * `dedup_simhash_online`'s oracle RESTRICTED to the slice. */
+  def simhashStreamVerdicts(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"simhash_stream:$d") {
       val corpus = nearCorpusSlice(s, d)
       val mb = Dedup.simhashBlocks(corpus).groupBy("blk", "key")
         .agg(count(lit(1)).as("_n")).agg(max(col("_n"))).head()
@@ -370,20 +310,11 @@ object DedupQueries {
         s"simhash stream slice: largest (blk, key) bucket $maxBucket " +
           "exceeds the batch anchor's maxBucket=1024 — stream/batch parity " +
           "does not hold on capped corpora; widen the slice modulus")
-      val stage = stageIdOrderedArrivals(s, corpus, parts = 4)
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_simhash_store_").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_simhash_out_").toString
-      val q = graft.streaming.DedupStreams.simhashDedupStream(
-        s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage),
-        storeDir, outDir, maxDist = 3, compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
-      outDir
+      idOrderedStream("simhash", corpus) {
+        graft.streaming.DedupStreams.simhashDedupStream(_, _, _,
+          maxDist = 3, compactEvery = 2)
+      }
     })
-    s.read.parquet(path)
-  }
 
   /** E18 capped-mode flood fixture: `SimhashFloodK` copies of one fixed
     * template sentence at ids ≥ TwinShift2 (after every slice doc), so all
@@ -418,8 +349,8 @@ object DedupQueries {
   /** The streamed CAPPED-mode SimHash verdicts for
     * `dedup_simhash_stream_capped` (the `maxBucket > 0` path of
     * [[graft.streaming.DedupStreams.simhashDedupStream]] through the gate —
-    * the one r13 semantics the driver gate did not key). Same staging and
-    * mid-stream compaction as [[simhashStreamVerdicts]], but on the flood
+    * the one r13 semantics the hash gate did not key). Same id-ordered
+    * lifecycle as [[simhashStreamVerdicts]], but on the flood
     * corpus with `maxBucket = SimhashStreamCap`, so saturation BINDS and
     * the quarantine bookkeeping is exercised for real.
     *
@@ -438,10 +369,8 @@ object DedupQueries {
     * one window + HAVING in the oracle. Decided verdicts then equal the
     * cap-free first-wins anchor restricted to the decided subset (the
     * simhashStepCapped contract, spec-pinned in StreamingSpec). */
-  private val simhashStreamCappedCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def simhashStreamCappedVerdicts(s: SparkSession, d: String): DataFrame = {
-    val path = simhashStreamCappedCache.getOrElseUpdate(d, {
+  def simhashStreamCappedVerdicts(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"simhash_capped_stream:$d") {
       val slice = nearCorpusSlice(s, d)
       val mb = Dedup.simhashBlocks(slice).groupBy("blk", "key")
         .agg(count(lit(1)).as("_n")).agg(max(col("_n"))).head()
@@ -451,25 +380,15 @@ object DedupQueries {
           s"exceeds cap $SimhashStreamCap — slice docs would quarantine and " +
           "the boundary-free oracle derivation no longer holds; widen the " +
           "slice modulus or the cap")
-      val corpus = cappedStreamCorpus(s, d)
-      val stage = stageIdOrderedArrivals(s, corpus, parts = 4)
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_simhash_capstore_").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_simhash_capout_").toString
-      val q = graft.streaming.DedupStreams.simhashDedupStream(
-        s.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage),
-        storeDir, outDir, maxDist = 3, compactEvery = 2,
-        maxBucket = SimhashStreamCap)
-      try q.processAllAvailable() finally q.stop()
-      val nq = s.read.parquet(outDir).filter(col("quarantined")).count()
+      val out = idOrderedStream("simhash_cap", cappedStreamCorpus(s, d)) {
+        graft.streaming.DedupStreams.simhashDedupStream(_, _, _,
+          maxDist = 3, compactEvery = 2, maxBucket = SimhashStreamCap)
+      }
+      val nq = s.read.parquet(out).filter(col("quarantined")).count()
       require(nq > 0, "simhash capped stream: cap never bound — the " +
         "fixture must exercise the quarantine path (flood too small?)")
-      outDir
+      out
     })
-    s.read.parquet(path)
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

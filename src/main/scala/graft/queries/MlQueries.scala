@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.ml.MlProcesses
 
 /** ML process queries (SURVEY.md §2A) on the `embeddings` table. Rows-only
@@ -22,74 +22,58 @@ object MlQueries {
     * emits its metric report from the predictions it already holds at
     * fit time. `ml_nb_fit` itself still runs the full fit+score chain.
     */
-  private val nbScoredCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def nbScored(s: SparkSession, d: String): DataFrame = {
-    val path = nbScoredCache.getOrElseUpdate(d, {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_nb_scored_").toString
+  def nbScored(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"nb_scored:$d") {
+      val p = Fixtures.dir("nb_scored")
       graft.ml.NaiveBayesProbe.fitScore(Tables.documents(s, d))
         .write.mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+
+  /** The documents as 3 arrival files (one per trigger) scored batch by
+    * batch with `score`; each batch lands in its own batchId-named file
+    * (tmp+rename), so an at-least-once foreachBatch retry overwrites its
+    * own output instead of duplicating it. Returns the output dir. */
+  private[queries] def scoreOnStream(name: String, docs: DataFrame)(
+      score: DataFrame => DataFrame): String = {
+    val (arrivals, stage) = Fixtures.stage(docs.repartition(3, col("doc_id")))
+    val out = Fixtures.dir(s"${name}_out")
+    Fixtures.drain(arrivals.writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.streaming.DedupStreams.writeBatchFile(score(batch),
+          new org.apache.hadoop.fs.Path(out, f"batch-$batchId%05d.parquet"))
+        ()
+      }.start(), stage)
+    out
   }
 
   /** The streamed forest verdicts for `ml_forest_stream` (E15 through the
-    * gate), materialized once per (JVM, sf dir): the A14 forest is fitted
-    * ONCE in batch (the offline trainer), then the corpus arrives as a
-    * real micro-batched file-source stream whose foreachBatch scores each
-    * batch with [[graft.ml.TreeProbe.forestScore]] — fitted trees are
-    * pure plan literals, so the streamed votes reproduce `ml_forest_fit`'s
-    * oracle VERBATIM (the E13 train-offline / score-on-stream split for
-    * tree models, hash-gated). Stateless per batch; no driver-side corpus
-    * collect anywhere. */
-  private val forestStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def forestStreamScores(s: SparkSession, d: String): DataFrame = {
-    val path = forestStreamCache.getOrElseUpdate(d, {
+    * gate): the A14 forest is fitted ONCE in batch (the offline trainer),
+    * then each micro-batch is scored with [[graft.ml.TreeProbe
+    * .forestScore]] — fitted trees are pure plan literals, so the streamed
+    * votes reproduce `ml_forest_fit`'s oracle VERBATIM (the E13
+    * train-offline / score-on-stream split for tree models, hash-gated). */
+  def forestStreamScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"forest_stream:$d") {
       import graft.ml.TreeProbe
       val feats = TreeProbe.forestFeatures(Tables.documents(s, d)).persist()
       val trees = TreeProbe.forestFit(feats)
       feats.unpersist(false)
-      val arrivals = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_forest_stream_").toString
-      arrivals.repartition(3, col("doc_id")).write
-        .mode("overwrite").parquet(stage)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_forest_out_").toString
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batchId-named file (tmp+rename): idempotent under at-least-once
-          // foreachBatch retries — a retry overwrites, never duplicates
-          graft.streaming.DedupStreams.writeBatchFile(
-            TreeProbe.forestScore(TreeProbe.forestFeatures(batch), trees),
-            new org.apache.hadoop.fs.Path(outDir,
-              f"batch-$batchId%05d.parquet"))
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      outDir
+      scoreOnStream("forest",
+          Tables.documents(s, d).select(col("doc_id"), col("text"))) { b =>
+        TreeProbe.forestScore(TreeProbe.forestFeatures(b), trees)
+      }
     })
-    s.read.parquet(path)
-  }
 
   /** The streamed NB routing verdicts for `ml_nb_stream` (E17 through the
-    * gate), materialized once per (JVM, sf dir): the A20 router's model
-    * tables are built ONCE in batch ([[graft.ml.NaiveBayesProbe.fit]],
-    * pinned across micro-batches), then the corpus arrives as a real
-    * micro-batched file-source stream whose foreachBatch runs the
-    * stateless score join — the per-doc argmax is a per-batch window and
-    * each doc arrives exactly once, so the streamed routing reproduces
-    * `ml_nb_fit`'s oracle VERBATIM. The multi-class routing twin of the
-    * E13/E15 gate keys. */
-  private val nbStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def nbStreamScores(s: SparkSession, d: String): DataFrame = {
-    val path = nbStreamCache.getOrElseUpdate(d, {
+    * gate): the A20 router's model tables are built ONCE in batch
+    * ([[graft.ml.NaiveBayesProbe.fit]], pinned across micro-batches), then
+    * each micro-batch runs the stateless score join — the per-doc argmax
+    * is a per-batch window and each doc arrives exactly once, so the
+    * streamed routing reproduces `ml_nb_fit`'s oracle VERBATIM. The
+    * multi-class routing twin of the E13/E15 gate keys. */
+  def nbStreamScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"nb_stream:$d") {
       import graft.ml.NaiveBayesProbe
       import org.apache.spark.storage.StorageLevel
       val docsDf = Tables.documents(s, d)
@@ -101,34 +85,13 @@ object MlQueries {
         docC = m0.docC.persist(StorageLevel.MEMORY_AND_DISK),
         nTot = m0.nTot.persist(StorageLevel.MEMORY_AND_DISK))
       m.grid.count(); m.docC.count(); m.nTot.count()
-      val arrivals = docsDf.select(col("doc_id"), col("lang"), col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_nb_stream_").toString
-      arrivals.repartition(3, col("doc_id")).write
-        .mode("overwrite").parquet(stage)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_nb_out_").toString
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batchId-named file (tmp+rename): idempotent under at-least-once
-          // foreachBatch retries — a retry overwrites, never duplicates
-          graft.streaming.DedupStreams.writeBatchFile(
-            NaiveBayesProbe.score(batch, m),
-            new org.apache.hadoop.fs.Path(outDir,
-              f"batch-$batchId%05d.parquet"))
-          ()
-        }.start()
-      try q.processAllAvailable()
-      finally {
-        q.stop()
+      try scoreOnStream("nb",
+          docsDf.select(col("doc_id"), col("lang"), col("text"))) {
+        NaiveBayesProbe.score(_, m)
+      } finally {
         m.grid.unpersist(); m.docC.unpersist(); m.nTot.unpersist()
       }
-      outDir
     })
-    s.read.parquet(path)
-  }
 
   /** A STAC-MLM item fixture for the external-execution path: 64-band 1-D
     * input with per-band z-score scaling, 8-wide embedding output, batch
@@ -177,7 +140,7 @@ object MlQueries {
          |    "roles": ["mlm:model", "mlm:weights"],
          |    "mlm:artifact_type": "onnx"}}
          |}""".stripMargin
-    val p = java.nio.file.Files.createTempFile("graft_mlm_item_", ".json")
+    val p = java.nio.file.Paths.get(Fixtures.dir("mlm_item"), "item.json")
     java.nio.file.Files.write(p,
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     p.toString
@@ -185,25 +148,17 @@ object MlQueries {
 
   /** The committed sklearn-converter fixture routed ONCE per JVM through
     * the A4/A5 ProbeModels save→load surface (the asset round-trip the
-    * reference's load_ml_model performs) — Bench's warmup + timed runs
-    * reuse one deleteOnExit temp dir instead of accumulating one per
-    * invocation. */
-  private val skForestCache =
-    new java.util.concurrent.atomic.AtomicReference[graft.ml.SkForest.Forest]()
-  private def skFixtureForest(s: SparkSession): graft.ml.SkForest.Forest = {
-    val cached = skForestCache.get()
-    if (cached != null) cached
-    else {
-      val dir = java.nio.file.Files.createTempDirectory("graft_sk_model_")
-      val path = dir.toString + "/probe.json"
-      graft.ml.ProbeModels.write(s, path, graft.ml.SkForest.fixtureJson())
-      val f = graft.ml.SkForest.fromJson(graft.ml.ProbeModels.read(s, path))
-      Option(dir.toFile.listFiles()).foreach(_.foreach(_.deleteOnExit()))
-      dir.toFile.deleteOnExit()
-      skForestCache.compareAndSet(null, f)
-      skForestCache.get()
+    * reference's load_ml_model performs); the model is read eagerly, so
+    * its dir goes right after. */
+  private def skFixtureForest(s: SparkSession): graft.ml.SkForest.Forest =
+    Fixtures.once("sk_forest") {
+      val dir = Fixtures.dir("sk_model")
+      val path = dir + "/probe.json"
+      try {
+        graft.ml.ProbeModels.write(s, path, graft.ml.SkForest.fixtureJson())
+        graft.ml.SkForest.fromJson(graft.ml.ProbeModels.read(s, path))
+      } finally Fixtures.drop(dir)
     }
-  }
 
   /** A STAC-MLM item whose `mlm:model` asset IS the committed
     * graft-sk-forest JSON, written next to the item — the exact
@@ -212,7 +167,7 @@ object MlQueries {
     * scikit_learn_model.py:53 loads and predicts). `load_stac_ml` →
     * `ml_predict` consume it in the process_graph_sklearn twin. */
   lazy val skItemPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sk_item_")
+    val dir = java.nio.file.Paths.get(Fixtures.dir("sk_item"))
     java.nio.file.Files.write(dir.resolve("sk_forest.json"),
       graft.ml.SkForest.fixtureJson()
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -246,8 +201,6 @@ object MlQueries {
     val p = dir.resolve("item.json")
     java.nio.file.Files.write(p,
       item.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Option(dir.toFile.listFiles()).foreach(_.foreach(_.deleteOnExit()))
-    dir.toFile.deleteOnExit()
     p.toString
   }
 
@@ -268,7 +221,7 @@ object MlQueries {
   val mlpB2: IndexedSeq[Double] = (0 until 4).map(k => (k - 2) / 10.0)
 
   lazy val mlpItemPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlp_item_")
+    val dir = java.nio.file.Paths.get(Fixtures.dir("mlp_item"))
     def mat(m: IndexedSeq[IndexedSeq[Double]]): String =
       m.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val weights =
@@ -349,15 +302,13 @@ object MlQueries {
       import graft.ml.{ProbeModels, RidgeProbe, TreeProbe}
       val feats = RidgeProbe.qualityFeatures(Tables.documents(s, d)).persist()
       val fitted = TreeProbe.treeFit(feats)
-      val dir = new org.apache.hadoop.fs.Path(java.nio.file.Files
-        .createTempDirectory("graft_tree_model_").toUri)
+      val dir = Fixtures.dir("tree_model")
       val path = s"$dir/probe.json"
       // the sidecar is read eagerly, so the directory goes right after
       val tree = try {
         ProbeModels.write(s, path, ProbeModels.treeJson(fitted))
         ProbeModels.treeFromJson(ProbeModels.read(s, path))
-      } finally
-        dir.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dir, true)
+      } finally Fixtures.drop(dir)
       require(tree == fitted, "tree roundtrip must be lossless")
       val out = TreeProbe.treeScore(feats, tree)
       feats.unpersist(false)
@@ -492,8 +443,7 @@ object MlQueries {
       val emb = Tables.embeddings(s, d)
       val model = MlProcesses.mlFit(
         MlProcesses.mlmClassRandomForest(numTrees = 20), emb)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_mlm_").toString
+      val dir = Fixtures.dir("mlm")
       MlProcesses.saveMlModel(model, dir)
       val loaded = MlProcesses.loadMlModel(s, dir)
       MlProcesses.mlPredict(loaded, emb)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, Tables}
+import graft.core.{Exact, Fixtures, Tables}
 import graft.multimodal.Multimodal
 import graft.plans.ProcessGraph
 import graft.sources.StacCatalog
@@ -30,7 +30,7 @@ object PipelineQueries {
   val encB2: IndexedSeq[Double] = (0 until 4).map(k => (k - 1) / 7.0)
 
   lazy val encItemPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlp_enc_")
+    val dir = java.nio.file.Paths.get(Fixtures.dir("mlp_enc"))
     def mat(m: IndexedSeq[IndexedSeq[Double]]): String =
       m.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
     val weights =
@@ -163,15 +163,11 @@ object PipelineQueries {
       |  }
       |}""".stripMargin
 
-  /** sfDir → path of a materialized weekly-sliced STAC fixture catalog. */
-  private val stacFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build (once per sfDir) a 4-week asset-slice fixture + ItemCollection
     * JSON for the `stac_load` query, returning the catalog path. */
   def stacFixture(s: SparkSession, d: String): String =
-    stacFixtures.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_stac_")
+    Fixtures.once(s"stac:$d") {
+      val dir = Fixtures.dir("stac")
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "event_type", "value")
       val weeks = Seq(
@@ -193,15 +189,15 @@ object PipelineQueries {
         items.mkString("{\"type\": \"FeatureCollection\", \"features\": [",
           ",\n", "]}"))
       s"$dir/catalog.json"
-    })
+    }
 
   /** Build (once per sfDir) a spatially-tiled STAC fixture: the 64×64 grid
     * cube split into four 32×32 tile assets, each item carrying its
     * (inclusive) `bbox` — the layout a tiled raster catalog has, so bbox
     * item pruning is observable at the file level. */
   def stacSpatialFixture(s: SparkSession, d: String): String =
-    stacFixtures.computeIfAbsent("bbox:" + d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_stac_sp_")
+    Fixtures.once(s"stac_bbox:$d") {
+      val dir = Fixtures.dir("stac_sp")
       import graft.core.Exact
       val cube = Tables.lineitem(s, d)
         .select(pmod(col("l_partkey"), lit(64)).as("x"),
@@ -228,7 +224,7 @@ object PipelineQueries {
         items.mkString("{\"type\": \"FeatureCollection\", \"features\": [",
           ",\n", "]}"))
       s"$dir/catalog.json"
-    })
+    }
 
   /** Graph exercising the safe child-graph callbacks: spatial_extent at
     * load, two expression `apply` nodes, an expression overlap resolver,
@@ -285,8 +281,7 @@ object PipelineQueries {
           expr("(event_id div 128) % 128").as("x"))
         .agg(Exact.rnd4(Exact.esum(col("value"))).as("value"))
       val cube = graft.cube.DataCube(grid)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_raster_rt_").toString
+      val base = Fixtures.dir("raster_rt")
       Rasters.saveGeoTiff(cube, s"$base/tif")
       Rasters.saveNetcdf(cube, s"$base/nc")
       Rasters.saveZarr(cube, s"$base/zarr", chunkY = 32, chunkX = 32)

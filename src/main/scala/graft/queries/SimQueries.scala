@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, Tables}
+import graft.core.{Exact, Fixtures, Tables}
 import graft.sim.{Ann, InvertedIndex, Retrieval, SemDedup}
 
 /** Similarity-search queries over the `embeddings` table (SURVEY.md
@@ -29,15 +29,12 @@ object SimQueries {
     * dir) — index construction is the reusable build step of the layout
     * (SURVEY §2D7c), not per-query work; Bench pre-builds it outside the
     * timed region exactly like the STAC fixtures. */
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def ivfIndex(s: SparkSession, d: String): String =
-    ivfIndexCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivf_idx_").toString
+    Fixtures.once(s"ivf_idx:$d") {
+      val path = Fixtures.dir("ivf_idx")
       Ann.ivfBuild(Tables.embeddings(s, d), path, nlist = 16)
       path
-    })
+    }
 
   /** Shared deterministic quantizers, trained once per (JVM, sf dir) —
     * the FAISS train/add separation: ann_ivf, ann_pq, ann_ivfpq and the
@@ -45,81 +42,62 @@ object SimQueries {
     * codebooks instead of re-deriving them per query. Determinism makes
     * the cache transparent: the trained arrays are a pure function of
     * the table. */
-  private val coarseCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
   private def coarse16(s: SparkSession, d: String): Array[Array[Double]] =
-    coarseCache.getOrElseUpdate(d,
-      Ann.seededCentroids(Tables.embeddings(s, d), nlist = 16))
-  private val coarse128Cache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
+    Fixtures.once(s"coarse16:$d") {
+      Ann.seededCentroids(Tables.embeddings(s, d), nlist = 16)
+    }
   private def coarse128(s: SparkSession, d: String): Array[Array[Double]] =
-    coarse128Cache.getOrElseUpdate(d,
-      Ann.seededCentroids(Tables.embeddings(s, d), nlist = 128))
-  private val booksCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Double]]]]
+    Fixtures.once(s"coarse128:$d") {
+      Ann.seededCentroids(Tables.embeddings(s, d), nlist = 128)
+    }
   private def books4x16(s: SparkSession, d: String)
       : Array[Array[Array[Double]]] =
-    booksCache.getOrElseUpdate(d,
-      Ann.pqCodebooks(Tables.embeddings(s, d), m = 4, ksub = 16, dims = 64))
-  private val resBooksCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Double]]]]
+    Fixtures.once(s"books4x16:$d") {
+      Ann.pqCodebooks(Tables.embeddings(s, d), m = 4, ksub = 16, dims = 64)
+    }
   private def resBooks4x16(s: SparkSession, d: String)
       : Array[Array[Array[Double]]] =
-    resBooksCache.getOrElseUpdate(d,
+    Fixtures.once(s"res_books4x16:$d") {
       Ann.pqResidualCodebooks(Tables.embeddings(s, d), coarse16(s, d),
-        m = 4, ksub = 16, dims = 64))
+        m = 4, ksub = 16, dims = 64)
+    }
 
   /** The on-disk IVF-PQ layout for `ann_ivfpq_probe`, built once per
     * (JVM, sf dir) like [[ivfIndex]]. */
-  private val ivfPqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def ivfPqIndex(s: SparkSession, d: String): String =
-    ivfPqIndexCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_idx_").toString
+    Fixtures.once(s"ivfpq_idx:$d") {
+      val path = Fixtures.dir("ivfpq_idx")
       Ann.ivfPqBuild(Tables.embeddings(s, d), path, nlist = 16,
         m = 4, ksub = 16, dims = 64)
       path
-    })
+    }
 
   /** The stream-ingested IVF-PQ layout for `ann_ivfpq_stream` (E11
-    * through the gate), built once per (JVM, sf dir) like
-    * [[invStreamIndex]]: quantizers trained on the day-0 snapshot (the
+    * through the gate): quantizers trained on the day-0 snapshot (the
     * shared deterministic [[coarse16]]/[[books4x16]] — the FAISS train
-    * step), the base quarter indexed one-shot, the rest micro-batched
-    * through a file-source stream (one staged file per trigger — no
-    * driver-side corpus collect) whose foreachBatch appends via
-    * [[graft.sim.Ann.ivfPqAdd]] with the STORED quantizers (add never
-    * retrains). Cell assignment and codes are pure functions of the
+    * step), the base quarter indexed one-shot, the rest micro-batched in
+    * through [[graft.sim.Ann.ivfPqAdd]] with the STORED quantizers (add
+    * never retrains). Cell assignment and codes are pure functions of the
     * stored quantizers, so the final layout's logical content equals the
     * one-shot [[ivfPqIndex]] exactly and the probe reuses
     * `ann_ivfpq_probe`'s hash oracle VERBATIM — batch splits and append
     * bookkeeping are hash-gated, not just spec-pinned. */
-  private val ivfPqStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def ivfPqStreamIndex(s: SparkSession, d: String): String =
-    ivfPqStreamCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_stream_").toString
+    Fixtures.once(s"ivfpq_stream:$d") {
+      val path = Fixtures.dir("ivfpq_stream")
       val emb = Tables.embeddings(s, d)
       Ann.ivfPqBuild(emb.filter(col("vec_id") % 4 === 0), path, nlist = 16,
         m = 4, ksub = 16, dims = 64,
         coarse = Some(coarse16(s, d)), books = Some(books4x16(s, d)))
-      val arrivals = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_ivfpq_stream_arrivals_").toString
-      arrivals.repartition(3, col("vec_id")).write
-        .mode("overwrite").parquet(stage)
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream.outputMode("append")
+      val (arrivals, stage) = Fixtures.stage(
+        emb.filter(col("vec_id") % 4 =!= 0).select(col("vec_id"), col("embedding"))
+          .repartition(3, col("vec_id")))
+      Fixtures.drain(arrivals.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Ann.ivfPqAdd(batch, path)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+        }.start(), stage)
       path
-    })
+    }
 
   /** Exact per-dim vector moments in ONE mergeable aggregate — count +
     * 64 exact decimal element sums ([[graft.functions.VecESum]]), the
@@ -138,86 +116,54 @@ object SimQueries {
   }
 
   /** The stream-maintained moments for `embed_moments_stream` (E14
-    * through the gate), materialized once per (JVM, sf dir): the
-    * embeddings staged as files and replayed through a real micro-batched
-    * file-source stream into a COMPLETE-mode global [[momentsRow]]
-    * aggregate — Spark partial-aggregates each micro-batch and MERGES
-    * into the state store with VecESum's own merge(), so the online
-    * moments reproduce `embed_moments`' hash oracle verbatim (exact
-    * decimal adds commute across arbitrary batch splits). The state an
-    * online standardizer or periodic PCA refresh reads between batches. */
-  private val momentsStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def momentsStream(s: SparkSession, d: String): DataFrame = {
-    val path = momentsStreamCache.getOrElseUpdate(d, {
-      val arrivals = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_moments_stream_").toString
-      arrivals.repartition(3, col("vec_id")).write
-        .mode("overwrite").parquet(stage)
-      // per-invocation unique suffix (the sketchStream convention): avoids
-      // queryName collisions from dir-hash collisions or a double-evaluated
-      // getOrElseUpdate builder
-      val name = "graft_moments_stream_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = momentsRow(
-          s.readStream.schema(arrivals.schema)
-            .option("maxFilesPerTrigger", 1).parquet(stage))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_moments_out_").toString
-      try {
-        q.processAllAvailable()
-        s.table(name).write.mode("overwrite").parquet(out)
-      } finally q.stop()
-      out
+    * through the gate): the embeddings replayed into a COMPLETE-mode
+    * global [[momentsRow]] aggregate — Spark partial-aggregates each
+    * micro-batch and MERGES into the state store with VecESum's own
+    * merge(), so the online moments reproduce `embed_moments`' hash oracle
+    * verbatim (exact decimal adds commute across arbitrary batch splits).
+    * The state an online standardizer or periodic PCA refresh reads
+    * between batches. */
+  def momentsStream(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"moments_stream:$d") {
+      val (arrivals, stage) = Fixtures.stage(Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding")).repartition(3, col("vec_id")))
+      Fixtures.drainComplete(momentsRow(arrivals), "moments_out", stage)(
+        identity)
     })
-    s.read.parquet(path)
-  }
 
   /** The on-disk RESIDUAL-encoded IVF-PQ layout for
     * `ann_ivfpq_residual_probe`, built once per (JVM, sf dir) with the
     * shared deterministic quantizers — the FAISS-default encoding as the
     * at-rest index. */
-  private val ivfPqResIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def ivfPqResIndex(s: SparkSession, d: String): String =
-    ivfPqResIndexCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfpqres_idx_").toString
+    Fixtures.once(s"ivfpqres_idx:$d") {
+      val path = Fixtures.dir("ivfpqres_idx")
       Ann.ivfPqResidualBuild(Tables.embeddings(s, d), path, nlist = 16,
         m = 4, ksub = 16, dims = 64,
         coarse = Some(coarse16(s, d)), books = Some(resBooks4x16(s, d)))
       path
-    })
+    }
 
   /** The DELETE-lifecycle IVF index for `ann_ivf_delete`, built once per
     * (JVM, sf dir): build on the full table, delete ids ≡3 (mod 7), FOLD
     * that delete in via compaction (physical rewrite), then delete ids
     * ≡5 (mod 11) left as LIVE tombstones — so one probe exercises both
     * halves of the FAISS remove_ids analog at the hash gate. */
-  private val ivfDelIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def ivfDelIndex(s: SparkSession, d: String): String =
-    ivfDelIndexCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_ivfdel_idx_").toString
+    Fixtures.once(s"ivfdel_idx:$d") {
+      val path = Fixtures.dir("ivfdel_idx")
       val emb = Tables.embeddings(s, d)
       Ann.ivfBuild(emb, path, nlist = 16)
       Ann.ivfDelete(s, path, emb.filter(col("vec_id") % 7 === 3))
       Ann.ivfCompactDeletes(s, path)
       Ann.ivfDelete(s, path, emb.filter(col("vec_id") % 11 === 5))
       path
-    })
+    }
 
   /** Per-dim SQ8 stats, trained once per (JVM, sf dir) like [[coarse16]]. */
-  private val sq8Cache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Double], Array[Double])]
   private def sq8Stats(s: SparkSession, d: String)
       : (Array[Double], Array[Double]) =
-    sq8Cache.getOrElseUpdate(d, Ann.sq8Stats(Tables.embeddings(s, d)))
+    Fixtures.once(s"sq8:$d")(Ann.sq8Stats(Tables.embeddings(s, d)))
 
   /** Exact top-10 with label-match relevance — the shared ranked input of
     * the A24/A25 ranking metrics ([[graft.ml.Eval.labelRanked]]). */
@@ -566,54 +512,39 @@ object SimQueries {
   /** The on-disk inverted index for `search_index_probe`, built once per
     * (JVM, sf dir) like [[ivfIndex]] — construction is the reusable build
     * step of the layout, not per-query work. */
-  private val invIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def invIndex(s: SparkSession, d: String): String =
-    invIndexCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_inv_idx_").toString
+    Fixtures.once(s"inv_idx:$d") {
+      val path = Fixtures.dir("inv_idx")
       InvertedIndex.build(Tables.documents(s, d), path, nBuckets = 16)
       path
-    })
+    }
 
-  /** The stream-ingested index for `search_index_stream`, built once per
-    * (JVM, sf dir): base quarter one-shot, the rest micro-batched through
-    * a file-source stream (one staged file per trigger — no driver-side
-    * corpus collect) whose foreachBatch appends via [[InvertedIndex.add]].
-    */
-  private val invStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The stream-ingested index for `search_index_stream`: base quarter
+    * one-shot, the rest micro-batched in through [[InvertedIndex.add]],
+    * which appends postings and one stats partial per batch and never
+    * rewrites — so the final layout answers exactly like a one-shot build
+    * of the whole corpus. */
   def invStreamIndex(s: SparkSession, d: String): String =
-    invStreamCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_inv_stream_").toString
+    Fixtures.once(s"inv_stream:$d") {
+      val path = Fixtures.dir("inv_stream")
       val docs = Tables.documents(s, d)
       InvertedIndex.build(docs.filter(col("doc_id") % 4 === 0), path,
         nBuckets = 16)
-      val arrivals = docs.filter(col("doc_id") % 4 =!= 0)
-        .select(col("doc_id"), col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_inv_stream_arrivals_").toString
-      arrivals.repartition(3, col("doc_id")).write
-        .mode("overwrite").parquet(stage)
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream.outputMode("append")
+      val (arrivals, stage) = Fixtures.stage(
+        docs.filter(col("doc_id") % 4 =!= 0).select(col("doc_id"), col("text"))
+          .repartition(3, col("doc_id")))
+      Fixtures.drain(arrivals.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           InvertedIndex.add(batch, path)
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+        }.start(), stage)
       path
-    })
+    }
 
   /** The add→delete→compact exercised index for `search_index_lifecycle`,
     * built once per (JVM, sf dir). */
-  private val invLifeCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   def invLifecycleIndex(s: SparkSession, d: String): String =
-    invLifeCache.getOrElseUpdate(d, {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_inv_life_").toString
+    Fixtures.once(s"inv_life:$d") {
+      val path = Fixtures.dir("inv_life")
       val docs = Tables.documents(s, d)
       InvertedIndex.build(docs.filter(col("doc_id") % 3 =!= 2), path,
         nBuckets = 16)
@@ -622,7 +553,7 @@ object SimQueries {
         docs.filter(col("doc_id") % 7 === 0).select("doc_id"))
       InvertedIndex.compact(s, path)
       path
-    })
+    }
 
   private def cosSql(a: String, b: String): String =
     s"""list_sum(list_transform(generate_series(1, len($a)),

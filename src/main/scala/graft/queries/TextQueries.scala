@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Exact, Tables}
+import graft.core.{Exact, Fixtures, Tables}
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over the `documents` table (SURVEY.md §2D8–D11).
@@ -127,147 +127,79 @@ object TextQueries {
         col("cb"), col("lift"))
   }
 
-  /** The streamed shard manifest for `corpus_shards_stream`, materialized
-    * once per (JVM, sf dir): the corpus staged as files, replayed as a
-    * micro-batched stream into the complete-mode manifest aggregation,
-    * final store dumped to parquet (the invIndex/nbScored at-rest-fixture
-    * convention — no driver-side corpus collect anywhere). */
-  private val shardStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def shardManifestStream(s: SparkSession, d: String): DataFrame = {
-    val path = shardStreamCache.getOrElseUpdate(d, {
-      val arrivals = docs(s, d).select(col("doc_id"), col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_shard_stream_").toString
-      arrivals.repartition(3, col("doc_id")).write
-        .mode("overwrite").parquet(stage)
-      val name = "graft_shard_manifest_" +
-        java.lang.Integer.toHexString(d.hashCode & 0x7fffffff)
-      val q = graft.sources.Shards.manifest(
-          s.readStream.schema(arrivals.schema)
-            .option("maxFilesPerTrigger", 1).parquet(stage),
-          nShards = 8, seed = "s42")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_shard_manifest_").toString
-      try {
-        q.processAllAvailable()
-        s.table(name).write.mode("overwrite").parquet(out)
-      } finally q.stop()
-      out
+  /** The streamed shard manifest for `corpus_shards_stream`: the corpus
+    * replayed into the complete-mode manifest aggregation. Its counts,
+    * token sums, xor checksum and min_by first doc all merge across
+    * micro-batches, so the final state equals one batch pass and the key
+    * shares the batch manifest's oracle. */
+  def shardManifestStream(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"shard_stream:$d") {
+      val (arrivals, stage) = Fixtures.stage(docs(s, d)
+        .select(col("doc_id"), col("text")).repartition(3, col("doc_id")))
+      Fixtures.drainComplete(graft.sources.Shards.manifest(arrivals,
+        nShards = 8, seed = "s42"), "shard_manifest", stage)(identity)
     })
-    s.read.parquet(path)
-  }
 
   /** The stream-merged KMV sketches for `text_sketch_stream` (E10 through
-    * the gate), materialized once per (JVM, sf dir) like
-    * [[shardManifestStream]]: the corpus staged as files and replayed as a
-    * real micro-batched file-source stream into a COMPLETE-mode
-    * groupBy(source) over the mergeable bottom-k aggregate — Spark
-    * partial-aggregates each micro-batch map-side and MERGES into the
-    * state store, the same merge() the batch plan runs, so the final
-    * sketches are bit-identical to one batch pass. Only the
-    * mergeable-state columns ride (kth_hash + estimate): the exact
-    * distinct-count companion of the batch anchor is not streaming state
-    * (multiple/distinct aggregates are a rescan, not a merge), which is
-    * precisely the sketch's reason to exist at 100 TB ingest. Arrival
-    * order is immaterial — bottom-k of a union is order-free. */
-  private val sketchStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def sketchStream(s: SparkSession, d: String): DataFrame = {
-    val path = sketchStreamCache.getOrElseUpdate(d, {
+    * the gate): the corpus replayed into a COMPLETE-mode groupBy(source)
+    * over the mergeable bottom-k aggregate — Spark partial-aggregates each
+    * micro-batch map-side and MERGES into the state store, the same
+    * merge() the batch plan runs, so the final sketches are bit-identical
+    * to one batch pass. Only the mergeable-state columns ride (kth_hash +
+    * estimate): the exact distinct-count companion of the batch anchor is
+    * not streaming state (multiple/distinct aggregates are a rescan, not a
+    * merge), which is precisely the sketch's reason to exist at 100 TB
+    * ingest. Arrival order is immaterial — bottom-k of a union is
+    * order-free. */
+  def sketchStream(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"sketch_stream:$d") {
       val k = 64
-      val arrivals = docs(s, d).select(col("doc_id"), col("source"),
-        col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_sketch_stream_").toString
-      arrivals.repartition(3, col("doc_id")).write
-        .mode("overwrite").parquet(stage)
-      // per-invocation unique suffix: two sf dirs can hash-collide, and
-      // getOrElseUpdate may evaluate this builder twice under concurrent
-      // first access — a reused queryName would throw on the second start
-      val name = "graft_sketch_stream_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
+      val (arrivals, stage) = Fixtures.stage(docs(s, d)
+        .select(col("doc_id"), col("source"), col("text"))
+        .repartition(3, col("doc_id")))
+      Fixtures.drainComplete(arrivals
         .select(col("source"),
           explode(graft.functions.TextFunctions.shingles(
             tokens(col("text")), 4)).as("g"))
         .groupBy("source")
-        .agg(graft.functions.Sketch.bottomK(md5(col("g")), k).as("_sk"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_sketch_out_").toString
-      try {
-        q.processAllAvailable()
-        s.table(name)
-          .select(col("source"),
-            when(size(col("_sk")) >= k, element_at(col("_sk"), k))
-              .as("kth_hash"),
-            Exact.rnd4(graft.functions.Sketch.kmvEstimate(col("_sk"), k))
-              .as("est_distinct"))
-          .write.mode("overwrite").parquet(out)
-      } finally q.stop()
-      out
+        .agg(graft.functions.Sketch.bottomK(md5(col("g")), k).as("_sk")),
+        "sketch_out", stage) {
+        _.select(col("source"),
+          when(size(col("_sk")) >= k, element_at(col("_sk"), k))
+            .as("kth_hash"),
+          Exact.rnd4(graft.functions.Sketch.kmvEstimate(col("_sk"), k))
+            .as("est_distinct"))
+      }
     })
-    s.read.parquet(path)
-  }
 
   /** The stream-scored quality verdicts for `text_quality_stream` (E13
-    * through the gate), materialized once per (JVM, sf dir): the D58
-    * ridge probe's weights are fitted ONCE in batch (the offline trainer),
-    * then the corpus arrives as a real micro-batched file-source stream
-    * whose foreachBatch scores each batch with [[graft.ml.RidgeProbe
-    * .applyWeights]] — the identical broadcast-join DAG the batch
-    * `fitScore` runs, so the streamed verdicts reproduce `text_quality_
-    * fit`'s oracle VERBATIM. The train-offline / score-on-stream split
-    * every production quality filter runs, now hash-gated end to end.
-    * Stateless per batch: the weight table is 1 row, pinned before the
-    * stream starts; no driver-side corpus collect anywhere. */
-  private val qualityStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def qualityStreamScores(s: SparkSession, d: String): DataFrame = {
-    val path = qualityStreamCache.getOrElseUpdate(d, {
+    * through the gate): the D58 ridge probe's weights are fitted ONCE in
+    * batch (the offline trainer), then each micro-batch is scored with
+    * [[graft.ml.RidgeProbe.applyWeights]] — the identical broadcast-join
+    * DAG the batch `fitScore` runs, so the streamed verdicts reproduce
+    * `text_quality_fit`'s oracle VERBATIM. The train-offline /
+    * score-on-stream split every production quality filter runs,
+    * hash-gated end to end. */
+  def qualityStreamScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"quality_stream:$d") {
       val xs = Seq("x1", "x2", "x3")
       val w = graft.ml.RidgeProbe.fit(
         graft.ml.RidgeProbe.qualityFeatures(docs(s, d)), xs, "y",
         lambda = 0.001)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       w.count()
-      val arrivals = docs(s, d).select(col("doc_id"), col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_quality_stream_").toString
-      arrivals.repartition(3, col("doc_id")).write
-        .mode("overwrite").parquet(stage)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_quality_out_").toString
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batchId-named file via tmp+rename: a retried batch (foreachBatch
-          // is at-least-once) overwrites its own output instead of appending
-          // a duplicate that would break the hash gate
-          graft.streaming.DedupStreams.writeBatchFile(
-            graft.ml.RidgeProbe.applyWeights(
-              graft.ml.RidgeProbe.qualityFeatures(batch), w, xs, "y",
-              threshold = 0.5),
-            new org.apache.hadoop.fs.Path(outDir,
-              f"batch-$batchId%05d.parquet"))
-          ()
-        }.start()
-      try q.processAllAvailable() finally { q.stop(); w.unpersist() }
-      outDir
+      try MlQueries.scoreOnStream("quality",
+          docs(s, d).select(col("doc_id"), col("text"))) { b =>
+        graft.ml.RidgeProbe.applyWeights(
+          graft.ml.RidgeProbe.qualityFeatures(b), w, xs, "y",
+          threshold = 0.5)
+      } finally w.unpersist()
     })
-    s.read.parquet(path)
-  }
 
   /** The stream-TRAINED logistic verdicts for `text_gd_stream` (E16
-    * through the gate), materialized once per (JVM, sf dir): model
-    * TRAINING on a stream — the corpus staged as 3 deterministic chunks
-    * (doc_id % 3, arrival order by mtime), each micro-batch folding ONE
+    * through the gate): model TRAINING on a stream — chunk c holds the
+    * docs with doc_id % 3 = c, and the chunks arrive in order of c, each
+    * micro-batch folding ONE
     * decimal-exact [[graft.ml.LogisticProbe.step]] into the driver-held
     * weights (foreachBatch is the documented home of batch-shaped
     * training state, the E9/E16 convention), then the whole corpus scored
@@ -276,53 +208,31 @@ object TextQueries {
     * oracle REPLAYS the entire online training as 3 unrolled chunk-step
     * CTEs — online learning itself is hash-gated, not just spec-pinned.
     * The weights held on the driver are k+1 doubles (metadata-sized). */
-  private val gdStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  def gdStreamScores(s: SparkSession, d: String): DataFrame = {
-    val path = gdStreamCache.getOrElseUpdate(d, {
+  def gdStreamScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Fixtures.once(s"gd_stream:$d") {
       val xs = Seq("x1", "x2", "x3")
       val arrivals = docs(s, d).select(col("doc_id"), col("text"))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_gd_stream_").toString
-      val stageP = new org.apache.hadoop.fs.Path(stage)
-      val fs = stageP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis() - 86400000L
-      (0 until 3).foreach { c =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory(s"graft_gd_chunk${c}_").toString
-        arrivals.filter(col("doc_id") % 3 === c).repartition(1)
-          .write.mode("overwrite").parquet(tmp)
-        val tmpP = new org.apache.hadoop.fs.Path(tmp)
-        val part = fs.listStatus(tmpP)
-          .filter(_.getPath.getName.endsWith(".parquet")).headOption
-          .getOrElse(sys.error(
-            s"gd stream stage: chunk $c wrote no parquet part under $tmp"))
-        val dst = new org.apache.hadoop.fs.Path(stageP,
-          f"arrival-$c%05d.parquet")
-        fs.rename(part.getPath, dst)
-        fs.setTimes(dst, base + c * 60000L, -1)
-      }
+      // partition c of the RDD union is chunk c (a Dataset union may zip
+      // identically partitioned children into one partition)
+      val chunks = s.sparkContext.union((0 until 3).map(c =>
+        arrivals.filter(col("doc_id") % 3 === c).repartition(1).rdd))
+      val (chunkStream, stage) =
+        Fixtures.stage(s.createDataFrame(chunks, arrivals.schema))
       @volatile var w: Seq[Double] = Vector.fill(xs.size + 1)(0.0)
-      val q = s.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream.outputMode("append")
+      Fixtures.drain(chunkStream.writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           w = graft.ml.LogisticProbe.step(
             graft.ml.RidgeProbe.qualityFeatures(batch), xs, "y",
             lr = 4.0, w)
           ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_gd_out_").toString
+        }.start(), stage)
+      val outDir = Fixtures.dir("gd_out")
       graft.ml.LogisticProbe.scoreWithWeights(
           graft.ml.RidgeProbe.qualityFeatures(docs(s, d)), xs, "y", w,
           threshold = 0.5)
         .write.mode("overwrite").parquet(outDir)
       outDir
     })
-    s.read.parquet(path)
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

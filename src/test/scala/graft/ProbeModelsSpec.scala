@@ -43,9 +43,9 @@ class ProbeModelsSpec extends SparkSpec {
   }
 
   test("ml_tree_roundtrip deletes its sidecar directory after the read") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val tmp = graft.core.Fixtures.root.toFile
     def dirs = Option(tmp.list()).toSeq.flatten
-      .filter(_.startsWith("graft_tree_model_")).toSet
+      .filter(_.startsWith("tree_model_")).toSet
     val before = dirs
     graft.queries.MlQueries.queries("ml_tree_roundtrip")(spark, sfDir)
     assert((dirs -- before).isEmpty, s"leaked: ${dirs -- before}")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixtures
 import graft.cube.{Crs, DataCube}
 import graft.sources.Rasters
 
@@ -77,8 +78,7 @@ class RasterPropertySpec extends SparkSpec {
         }
       }
 
-      def tmp(tag: String): String = java.nio.file.Files
-        .createTempDirectory(s"graft_rprop_${tag}_$iter").toString
+      def tmp(tag: String): String = Fixtures.dir(s"rprop_${tag}_$iter")
 
       val tif = tmp("tif")
       Rasters.saveGeoTiff(cube, tif)

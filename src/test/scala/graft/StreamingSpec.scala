@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.streaming.{Event, EventStreams}
 
 /** Streaming ↔ batch parity: the exact transforms graded by the DuckDB
@@ -89,8 +89,7 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 4 === 0)
     val cents = graft.sim.Ann.seededCentroids(base, nlist = 16)
     val books = graft.sim.Ann.pqCodebooks(base, m = 4, ksub = 16, dims = 64)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_idx_").toString
+    val path = Fixtures.dir("stream_idx")
     graft.sim.Ann.ivfPqBuild(base, path, nlist = 16, m = 4, ksub = 16,
       dims = 64, coarse = Some(cents), books = Some(books))
     val arrivals = emb.filter(col("vec_id") % 4 =!= 0)
@@ -126,8 +125,7 @@ class StreamingSpec extends SparkSpec {
     val cents = graft.sim.Ann.seededCentroids(base, nlist = 16)
     val books = graft.sim.Ann.pqResidualCodebooks(base, cents, m = 4,
       ksub = 16, dims = 64)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_residx_").toString
+    val path = Fixtures.dir("stream_residx")
     graft.sim.Ann.ivfPqResidualBuild(base, path, nlist = 16, m = 4,
       ksub = 16, dims = 64, coarse = Some(cents), books = Some(books))
     val arrivals = emb.filter(col("vec_id") % 4 =!= 0)
@@ -164,8 +162,7 @@ class StreamingSpec extends SparkSpec {
     // indexing the whole corpus at once
     val docs = Tables.documents(spark, sfDir)
     val base = docs.filter(col("doc_id") % 4 === 0)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_inv_").toString
+    val path = Fixtures.dir("stream_inv")
     graft.sim.InvertedIndex.build(base, path, nBuckets = 8)
     val arrivals = docs.filter(col("doc_id") % 4 =!= 0)
       .select(col("doc_id"), col("text"))
@@ -184,8 +181,7 @@ class StreamingSpec extends SparkSpec {
     val terms = Seq("hash", "merge", "window")
     val streamed = graft.sim.InvertedIndex.query(spark, path, terms,
       topN = 20)
-    val oneShotPath = java.nio.file.Files
-      .createTempDirectory("graft_oneshot_inv_").toString
+    val oneShotPath = Fixtures.dir("oneshot_inv")
     graft.sim.InvertedIndex.build(docs, oneShotPath, nBuckets = 8)
     val oneShot = graft.sim.InvertedIndex.query(spark, oneShotPath, terms,
       topN = 20)
@@ -344,7 +340,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source ingest: windowed stats over incrementally arriving files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_").toString
+    val dir = Fixtures.dir("stream")
     val ev = Tables.events(spark, sfDir)
       .filter(col("user_id") < 40)
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -404,10 +400,8 @@ class StreamingSpec extends SparkSpec {
       (id + 100000L, w.take(math.max(w.length - 5, 3)).mkString(" "))
     }
     val all = docs ++ variants
-    val claimsDir = java.nio.file.Files
-      .createTempDirectory("graft_claims_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_dedup_out_").toString
+    val claimsDir = Fixtures.dir("claims")
+    val outDir = Fixtures.dir("dedup_out")
     val ms = MemoryStream[(Long, String)](spark)
     val q = graft.streaming.DedupStreams.nearDupStream(
       ms.toDF().toDF("doc_id", "text"), claimsDir, outDir)
@@ -451,10 +445,8 @@ class StreamingSpec extends SparkSpec {
       (id + 100000L, w.take(math.max(w.length - 5, 3)).mkString(" "))
     }
     val all = docs ++ variants
-    val gramsDir = java.nio.file.Files
-      .createTempDirectory("graft_grams_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_novelty_out_").toString
+    val gramsDir = Fixtures.dir("grams")
+    val outDir = Fixtures.dir("novelty_out")
     val ms = MemoryStream[(Long, String)](spark)
     // compactEvery=2 exercises a mid-stream store rewrite: parity must
     // hold straight through the compaction
@@ -503,10 +495,8 @@ class StreamingSpec extends SparkSpec {
       (id + 100000L, t.split(" ").drop(2).mkString(" "))
     }
     val all = docs ++ variants
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_sh_store_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_sh_out_").toString
+    val storeDir = Fixtures.dir("sh_store")
+    val outDir = Fixtures.dir("sh_out")
     val ms = MemoryStream[(Long, String)](spark)
     val q = graft.streaming.DedupStreams.simhashDedupStream(
       ms.toDF().toDF("doc_id", "text"), storeDir, outDir,
@@ -546,10 +536,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).limit(6)
       .collect().map(r => (r.getLong(0) + 1000L, r.getString(1))).toSeq
     val all = (boiler ++ distinctDocs).sortBy(_._1)
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_shcap_store_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_shcap_out_").toString
+    val storeDir = Fixtures.dir("shcap_store")
+    val outDir = Fixtures.dir("shcap_out")
     val ms = MemoryStream[(Long, String)](spark)
     val q = graft.streaming.DedupStreams.simhashDedupStream(
       ms.toDF().toDF("doc_id", "text"), storeDir, outDir, maxBucket = 4)
@@ -602,10 +590,8 @@ class StreamingSpec extends SparkSpec {
       (id + 100000L, w.take(math.max(w.length - 5, 3)).mkString(" "))
     }
     val all = docs ++ variants
-    val claimsDir = java.nio.file.Files
-      .createTempDirectory("graft_claims_compact_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_dedup_outc_").toString
+    val claimsDir = Fixtures.dir("claims_compact")
+    val outDir = Fixtures.dir("dedup_outc")
     val ms = MemoryStream[(Long, String)](spark)
     // compact every 2 micro-batches: batch 2's decisions read a store that
     // has already been rewritten once — compaction must be invisible to
@@ -640,8 +626,7 @@ class StreamingSpec extends SparkSpec {
         "claim store differs from min(doc_id) per (band, sig) over the corpus")
       // claims survive the rewrite byte-for-byte: a fresh query against
       // the compacted store must drop every redelivered doc
-      val out2 = java.nio.file.Files
-        .createTempDirectory("graft_dedup_outc2_").toString
+      val out2 = Fixtures.dir("dedup_outc2")
       val redelivered = docs.map { case (id, t) => (id + 200000L, t) }
       val ms2 = MemoryStream[(Long, String)](spark)
       val q2 = graft.streaming.DedupStreams.nearDupStream(
@@ -661,12 +646,9 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).limit(20)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
     val redelivered = docs.map { case (id, t) => (id + 100000L, t) }
-    val claimsDir = java.nio.file.Files
-      .createTempDirectory("graft_claims_restart_").toString
-    val out1 = java.nio.file.Files
-      .createTempDirectory("graft_dedup_o1_").toString
-    val out2 = java.nio.file.Files
-      .createTempDirectory("graft_dedup_o2_").toString
+    val claimsDir = Fixtures.dir("claims_restart")
+    val out1 = Fixtures.dir("dedup_o1")
+    val out2 = Fixtures.dir("dedup_o2")
     val ms1 = MemoryStream[(Long, String)](spark)
     val q1 = graft.streaming.DedupStreams.nearDupStream(
       ms1.toDF().toDF("doc_id", "text"), claimsDir, out1)
@@ -688,10 +670,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).limit(20)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
-    val claimsDir = java.nio.file.Files
-      .createTempDirectory("graft_claims_replay_").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_dedup_replay_").toString
+    val claimsDir = Fixtures.dir("claims_replay")
+    val outDir = Fixtures.dir("dedup_replay")
     def runOnce(): Unit = {
       val ms = MemoryStream[(Long, String)](spark)
       val q = graft.streaming.DedupStreams.nearDupStream(
@@ -739,10 +719,8 @@ class StreamingSpec extends SparkSpec {
       .sortBy(_._1)
     val all = docs ++ docs.map { case (id, t) => (id + 100000L, t) }
     def run(batches: Seq[(Long, String)]*) = {
-      val claimsDir = java.nio.file.Files
-        .createTempDirectory("graft_claims_redeliver_").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_dedup_redeliver_").toString
+      val claimsDir = Fixtures.dir("claims_redeliver")
+      val outDir = Fixtures.dir("dedup_redeliver")
       val ms = MemoryStream[(Long, String)](spark)
       val q = graft.streaming.DedupStreams.nearDupStream(
         ms.toDF().toDF("doc_id", "text"), claimsDir, outDir)

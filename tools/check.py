@@ -15,6 +15,7 @@ TABLES = ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]
 
 out = os.environ.get("GRAFT_VERIFY_OUT")
+made_out = not out
 if out:
     print(f"[replay] reusing Verify outputs in {out}", file=sys.stderr)
 else:
@@ -116,5 +117,9 @@ print(f"\nPASS ({len(passes)}):", *passes)
 if fails:
     print(f"\nFAIL ({len(fails)}):")
     for n, why in fails: print(f"  {n}: {why}")
+    print(f"\nVerify outputs kept in {out}")
     sys.exit(1)
+if made_out:  # a green run's outputs are not needed again
+    import shutil
+    shutil.rmtree(out)
 print("\nALL GREEN")
