@@ -55,7 +55,7 @@ object AnnScaleProbe {
         s"cell IN-list must be a partition filter:\n$scan")
       val readFiles = scan.metrics("numFiles").value
       val cellsRead = scan.metrics.get("numPartitions").map(_.value)
-      val totalFiles = spark.read.parquet(s"$path/data").inputFiles.length
+      val totalFiles = Tables.parquet(spark, s"$path/data").inputFiles.length
       System.err.println(f"[ann-scale] $tag build $buildS%.1f s, " +
         f"probe $p1%.2f/$p2%.2f s ($r1 rows), " +
         f"cells ${cellsRead.getOrElse(-1L)}/$nlist, " +

@@ -8,7 +8,8 @@ import graft.Battery.timed
 /** Optimization-round measurement harness (guide §1): for each named query
   * writes `.explain("formatted")` to <outDir>/<key>.txt and, with
   * GRAFT_PROFILE=1, executes the query with the bench's count() action and
-  * records job/stage/task counts, shuffle bytes and spill from a listener —
+  * records job/stage/task counts (and, as `build`, the jobs the query
+  * builder itself ran), shuffle bytes and spill from a listener —
   * the plan-shape evidence OPTIMIZATION_r14.md cites. Never part of the
   * timed bench; a pure read-side instrument.
   *
@@ -56,6 +57,8 @@ object PlanDump {
           jobs.set(0); stages.set(0); tasks.set(0)
           shufRead.set(0L); shufWrite.set(0L); spill.set(0L)
           val r = Battery.timeKey(spark, sfDir, "plandump", name, fn) { df =>
+            // the builder's own jobs, read once the async bus has drained
+            val built = if (profile) { Thread.sleep(300); jobs.get } else 0
             // forces analysis + planning
             val (_, tPlan) = timed(df.queryExecution.executedPlan)
             Files.writeString(Paths.get(s"$outDir/$name.txt"),
@@ -65,13 +68,13 @@ object PlanDump {
               val (n, wall) = timed(df.count())
               // listener events are async; give the bus a beat to drain
               Thread.sleep(300)
-              Some((tPlan, wall, n))
+              Some((tPlan, wall, n, built))
             } else None
           }
           r.out.foreach {
-            case Some((tPlan, wall, n)) =>
+            case Some((tPlan, wall, n, built)) =>
               System.err.println(f"[plandump] $name%-28s build ${r.build}%7.3f  plan $tPlan%6.3f  exec $wall%7.3f s  " +
-                f"jobs ${jobs.get}%3d  stages ${stages.get}%4d  tasks ${tasks.get}%5d  " +
+                f"jobs ${jobs.get}%3d (build $built%3d)  stages ${stages.get}%4d  tasks ${tasks.get}%5d  " +
                 f"shufR ${shufRead.get / 1e6}%9.1f MB  shufW ${shufWrite.get / 1e6}%9.1f MB  " +
                 f"spill ${spill.get / 1e6}%7.1f MB  rows $n")
             case None => System.err.println(s"[plandump] $name -> $outDir/$name.txt")

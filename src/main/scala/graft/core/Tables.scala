@@ -1,9 +1,15 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelationWithTable, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Readers for the driver-generated testdata lake (TESTDATA.md).
   *
@@ -27,7 +33,54 @@ object Tables {
   val TwinShift2: Long = 2 * TwinShift
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The one parquet reader of graft: `spark.read.parquet(paths)` with the
+    * data schema taken from ONE footer read on the driver, so a read runs
+    * no Spark job. Without a schema, `spark.read.parquet` runs a job to read
+    * one footer (Spark's non-merging inference touches one file too), a
+    * fixed cost paid by every lake, index, sidecar and fixture read.
+    *
+    * The footer is the first data file found under the paths in order: a
+    * path that is a file, else the first file by name below it, skipping
+    * `_`- and `.`-prefixed names and descending into `k=v` partition dirs.
+    * The schema follows Spark's own rule: the Spark row-metadata JSON when
+    * the footer carries it, else the footer schema through the session's
+    * converter (so `nanosAsLong` and friends apply). Partition columns
+    * still come from Spark's path inference. Paths with no data file (a
+    * missing path, an empty dir, a glob) go to `spark.read.parquet`, so the
+    * caller gets Spark's own error or inference. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.iterator.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      try firstDataFile(fs, fs.getFileStatus(path))
+      catch { case _: java.io.FileNotFoundException => None }
+    }.nextOption() match {
+      case Some(f) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        val meta = try reader.getFooter.getFileMetaData finally reader.close()
+        val schema = Option(meta.getKeyValueMetaData
+            .get(ParquetReadSupport.SPARK_METADATA_KEY))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+          .getOrElse(new ParquetToSparkSchemaConverter(
+            spark.sessionState.conf).convert(meta.getSchema))
+        spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  private def firstDataFile(fs: FileSystem,
+                            st: FileStatus): Option[FileStatus] =
+    if (st.isFile) Some(st)
+    else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
+      .filterNot { c =>
+        val n = c.getPath.getName
+        n.startsWith("_") || n.startsWith(".") ||
+          (c.isDirectory && !n.contains("="))
+      }
+      .flatMap(firstDataFile(fs, _)).nextOption()
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")

@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Tables
+
 /** Export an MLlib [[RandomForestClassificationModel]] to the
   * `graft-sk-forest` JSON format (the A29 interop format), closing the
   * reference's save→score seam for MLlib-fitted forests: the reference's
@@ -69,7 +71,7 @@ object MllibExport {
                                       classes: Seq[Double]): String = {
     require(classes.size == model.numClasses,
       s"export: ${classes.size} class values for ${model.numClasses} classes")
-    val rows = spark.read.parquet(s"$savedDir/data")
+    val rows = Tables.parquet(spark, s"$savedDir/data")
       .select("treeID", "nodeData.id", "nodeData.impurityStats",
         "nodeData.leftChild", "nodeData.rightChild",
         "nodeData.split.featureIndex",

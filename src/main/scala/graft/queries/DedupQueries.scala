@@ -251,7 +251,7 @@ object DedupQueries {
     * `dedup_online`'s oracle VERBATIM — the whole streamed lifecycle
     * (batch splits, claim appends, compaction swap) is hash-gated. */
   def onlineStreamVerdicts(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"online_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"online_stream:$d") {
       idOrderedStream("online",
           nearCorpus(s, d).select(col("doc_id"), col("text"))) {
         graft.streaming.DedupStreams.nearDupStream(_, _, _, compactEvery = 2)
@@ -266,7 +266,7 @@ object DedupQueries {
     * batch [[graft.dedup.Dedup.noveltyScores]] exactly, so this key reuses
     * `text_novelty`'s oracle VERBATIM. */
   def noveltyStreamScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"novelty_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"novelty_stream:$d") {
       idOrderedStream("novelty",
           nearCorpus(s, d).select(col("doc_id"), col("text"))) {
         graft.streaming.DedupStreams.noveltyStream(_, _, _, w = 8,
@@ -301,7 +301,7 @@ object DedupQueries {
     * store consultation IS the banded-Hamming pair set, so this key reuses
     * `dedup_simhash_online`'s oracle RESTRICTED to the slice. */
   def simhashStreamVerdicts(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"simhash_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"simhash_stream:$d") {
       val corpus = nearCorpusSlice(s, d)
       val mb = Dedup.simhashBlocks(corpus).groupBy("blk", "key")
         .agg(count(lit(1)).as("_n")).agg(max(col("_n"))).head()
@@ -370,7 +370,7 @@ object DedupQueries {
     * cap-free first-wins anchor restricted to the decided subset (the
     * simhashStepCapped contract, spec-pinned in StreamingSpec). */
   def simhashStreamCappedVerdicts(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"simhash_capped_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"simhash_capped_stream:$d") {
       val slice = nearCorpusSlice(s, d)
       val mb = Dedup.simhashBlocks(slice).groupBy("blk", "key")
         .agg(count(lit(1)).as("_n")).agg(max(col("_n"))).head()
@@ -384,7 +384,7 @@ object DedupQueries {
         graft.streaming.DedupStreams.simhashDedupStream(_, _, _,
           maxDist = 3, compactEvery = 2, maxBucket = SimhashStreamCap)
       }
-      val nq = s.read.parquet(out).filter(col("quarantined")).count()
+      val nq = Tables.parquet(s, out).filter(col("quarantined")).count()
       require(nq > 0, "simhash capped stream: cap never bound — the " +
         "fixture must exercise the quarantine path (flood too small?)")
       out

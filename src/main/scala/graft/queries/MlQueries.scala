@@ -23,7 +23,7 @@ object MlQueries {
     * fit time. `ml_nb_fit` itself still runs the full fit+score chain.
     */
   def nbScored(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"nb_scored:$d") {
+    Tables.parquet(s, Fixtures.once(s"nb_scored:$d") {
       val p = Fixtures.dir("nb_scored")
       graft.ml.NaiveBayesProbe.fitScore(Tables.documents(s, d))
         .write.mode("overwrite").parquet(p)
@@ -54,7 +54,7 @@ object MlQueries {
     * votes reproduce `ml_forest_fit`'s oracle VERBATIM (the E13
     * train-offline / score-on-stream split for tree models, hash-gated). */
   def forestStreamScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"forest_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"forest_stream:$d") {
       import graft.ml.TreeProbe
       val feats = TreeProbe.forestFeatures(Tables.documents(s, d)).persist()
       val trees = TreeProbe.forestFit(feats)
@@ -73,7 +73,7 @@ object MlQueries {
     * streamed routing reproduces `ml_nb_fit`'s oracle VERBATIM. The
     * multi-class routing twin of the E13/E15 gate keys. */
   def nbStreamScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"nb_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"nb_stream:$d") {
       import graft.ml.NaiveBayesProbe
       import org.apache.spark.storage.StorageLevel
       val docsDf = Tables.documents(s, d)

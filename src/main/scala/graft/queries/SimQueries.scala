@@ -124,7 +124,7 @@ object SimQueries {
     * The state an online standardizer or periodic PCA refresh reads
     * between batches. */
   def momentsStream(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"moments_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"moments_stream:$d") {
       val (arrivals, stage) = Fixtures.stage(Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding")).repartition(3, col("vec_id")))
       Fixtures.drainComplete(momentsRow(arrivals), "moments_out", stage)(

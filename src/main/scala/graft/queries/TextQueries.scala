@@ -20,10 +20,15 @@ object TextQueries {
   /** Corpus with the scan-parallelism floor applied ([[Tables.fanOut]]).
     * Wired ONLY into the operators whose downstream per-row work is heavy
     * enough to repay the exchange (token-explosion aggregations, shingle/
-    * winnow chains — each verified faster at BOTH bench core counts).
-    * Map-only and sub-second queries keep the plain scan: the r14 round
-    * proved a blanket floor taxes every cheap query with an Exchange it
-    * cannot amortize and breaks the map-only plan contracts (PlanSpec). */
+    * winnow chains). Eight of its 11 sites were measured faster at BOTH
+    * bench core counts (`count()`-timed, OPTIMIZATION_r15.md): text_tfidf,
+    * text_distinct_sketch, text_distinct_hll, text_bloom_overlap,
+    * text_topngrams, text_collocations, text_winnow and
+    * text_winnow_overlap. The other three, pipeline_curate,
+    * pipeline_export and pipeline_rag, have no recorded both-core-count
+    * A/B. Map-only and sub-second queries keep the plain scan: the r14
+    * round proved a blanket floor taxes every cheap query with an Exchange
+    * it cannot amortize and breaks the map-only plan contracts (PlanSpec). */
   private def docsWide(s: SparkSession, d: String): DataFrame =
     Tables.fanOut(Tables.documents(s, d))
 
@@ -133,7 +138,7 @@ object TextQueries {
     * micro-batches, so the final state equals one batch pass and the key
     * shares the batch manifest's oracle. */
   def shardManifestStream(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"shard_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"shard_stream:$d") {
       val (arrivals, stage) = Fixtures.stage(docs(s, d)
         .select(col("doc_id"), col("text")).repartition(3, col("doc_id")))
       Fixtures.drainComplete(graft.sources.Shards.manifest(arrivals,
@@ -152,7 +157,7 @@ object TextQueries {
     * ingest. Arrival order is immaterial — bottom-k of a union is
     * order-free. */
   def sketchStream(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"sketch_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"sketch_stream:$d") {
       val k = 64
       val (arrivals, stage) = Fixtures.stage(docs(s, d)
         .select(col("doc_id"), col("source"), col("text"))
@@ -181,7 +186,7 @@ object TextQueries {
     * score-on-stream split every production quality filter runs,
     * hash-gated end to end. */
   def qualityStreamScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"quality_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"quality_stream:$d") {
       val xs = Seq("x1", "x2", "x3")
       val w = graft.ml.RidgeProbe.fit(
         graft.ml.RidgeProbe.qualityFeatures(docs(s, d)), xs, "y",
@@ -209,7 +214,7 @@ object TextQueries {
     * CTEs — online learning itself is hash-gated, not just spec-pinned.
     * The weights held on the driver are k+1 doubles (metadata-sized). */
   def gdStreamScores(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(Fixtures.once(s"gd_stream:$d") {
+    Tables.parquet(s, Fixtures.once(s"gd_stream:$d") {
       val xs = Seq("x1", "x2", "x3")
       val arrivals = docs(s, d).select(col("doc_id"), col("text"))
       // partition c of the RDD union is chunk c (a Dataset union may zip

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Exact
+import graft.core.{Exact, Tables}
 import graft.dedup.Dedup
 import graft.functions.VectorFunctions
 
@@ -630,7 +630,7 @@ object Ann {
   private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
                             path: String): Array[Array[Array[Double]]] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/codebooks")
+    Tables.parquet(spark, s"$path/codebooks")
       .select(col("book"), col("code"), col("centroid").cast("array<double>"))
       .as[(Int, Int, Array[Double])].collect() // SCALE:ann-pq-codebooks
       .groupBy(_._1).toArray.sortBy(_._1)
@@ -714,7 +714,7 @@ object Ann {
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
                             path: String): Array[Array[Double]] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/centroids")
+    Tables.parquet(spark, s"$path/centroids")
       .select(col("cell"), col("centroid").cast("array<double>"))
       .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2) // SCALE:ann-centroids
   }
@@ -732,7 +732,7 @@ object Ann {
     val probed = queries
       .select(explode(probesOf(cents, col(embCol), nProbe)).as("cell"))
       .distinct().as[Int].collect() // SCALE:ann-probed-cells
-    val scan = spark.read.parquet(s"$path/data")
+    val scan = Tables.parquet(spark, s"$path/data")
       .filter(col("cell").isin(probed.toSeq: _*))
     tombstones(spark, path).fold(scan)(t =>
       scan.join(broadcast(t), Seq("c_id"), "left_anti"))
@@ -756,7 +756,7 @@ object Ann {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) &&
         fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(p.toString).select(col("c_id")))
+      Some(Tables.parquet(spark, p.toString).select(col("c_id")))
     else None
   }
 
@@ -779,7 +779,7 @@ object Ann {
     val tmpP = new org.apache.hadoop.fs.Path(s"$path/data_compacting")
     val oldP = new org.apache.hadoop.fs.Path(s"$path/data_old")
     val fs = dataP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(dataP.toString)
+    Tables.parquet(spark, dataP.toString)
       .join(broadcast(ts), Seq("c_id"), "left_anti")
       // clustered write — see ivfBuild
       .repartition(col("cell"))
@@ -1188,7 +1188,7 @@ object Ann {
                                path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$path/encoding")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && spark.read.parquet(p.toString)
+    fs.exists(p) && Tables.parquet(spark, p.toString)
       .filter(col("encoding") === "residual").count() > 0
   }
 

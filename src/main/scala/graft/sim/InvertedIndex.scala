@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Exact
+import graft.core.{Exact, Tables}
 import graft.functions.TextFunctions
 
 /** Persisted inverted-index lifecycle — SURVEY.md §2D89.
@@ -94,7 +94,7 @@ object InvertedIndex {
   }
 
   private def nBucketsOf(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/meta").head().getInt(0)
+    Tables.parquet(spark, s"$path/meta").head().getInt(0)
 
   /** Incremental add: O(new) postings append into their bucket
     * directories + doclens append + one stats partial. Never rewrites. */
@@ -120,7 +120,7 @@ object InvertedIndex {
     * ledger is scanned once, not twice. */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
              idCol: String = "doc_id"): Unit = {
-    val ledger = spark.read.parquet(s"$path/doclens")
+    val ledger = Tables.parquet(spark, s"$path/doclens")
     // cast caller ids to the ledger's own doc_id type: build/add/query are
     // doc-id-type-agnostic, so a hardcoded long cast would null out string
     // ids and silently no-op the delete
@@ -146,7 +146,7 @@ object InvertedIndex {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) &&
         fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(p.toString).select(col("doc_id")))
+      Some(Tables.parquet(spark, p.toString).select(col("doc_id")))
     else None
   }
 
@@ -163,7 +163,7 @@ object InvertedIndex {
       val tmpP = new org.apache.hadoop.fs.Path(s"$path/${name}_compacting")
       val oldP = new org.apache.hadoop.fs.Path(s"$path/${name}_old")
       val fs = dataP.getFileSystem(conf)
-      rewrite(spark.read.parquet(dataP.toString)
+      rewrite(Tables.parquet(spark, dataP.toString)
         .join(broadcast(ts), Seq("doc_id"), "left_anti"), tmpP.toString)
       if (fs.exists(oldP)) fs.delete(oldP, true)
       fs.rename(dataP, oldP)
@@ -186,7 +186,7 @@ object InvertedIndex {
                  terms: Seq[String]): DataFrame = {
     val nBuckets = nBucketsOf(spark, path)
     val buckets = terms.map(bucketOfTerm(_, nBuckets)).distinct
-    val scan = spark.read.parquet(s"$path/postings")
+    val scan = Tables.parquet(spark, s"$path/postings")
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     tombstones(spark, path).fold(scan)(t =>
@@ -207,7 +207,7 @@ object InvertedIndex {
     // (probedScan/dfTab already dedup via isin)
     val terms = rawTerms.distinct
     val postings = probedScan(spark, path, terms)
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = Tables.parquet(spark, s"$path/stats")
       .agg(sum("n_docs").as("n"), sum("total_len").as("total_len"))
     val dfTab = postings.groupBy("term").agg(count(lit(1)).as("df"))
     val nD = col("n").cast("double")

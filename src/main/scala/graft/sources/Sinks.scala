@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 
+import graft.core.Tables
+
 /** save_result analog (SURVEY.md §2C15; reference:
   * minibackend/custom_processes.py:246 writes netcdf/gtiff/zarr).
   *
@@ -122,7 +124,7 @@ object Sinks {
   /** load_collection analog for results written by saveResult. */
   def loadResult(spark: org.apache.spark.sql.SparkSession, path: String,
                  format: String = "parquet"): DataFrame = format match {
-    case "parquet" => spark.read.parquet(path)
+    case "parquet" => Tables.parquet(spark, path)
     case "json"    => spark.read.json(path)
     case "csv"     => spark.read.option("header", "true")
       .option("inferSchema", "true").csv(path)

@@ -6,6 +6,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** STAC-style catalog source — the analog of the reference's
   * `load_collection`/`load_stac` planning step (minibackend/
   * custom_processes.py:60: select items from a STAC catalog by extent,
@@ -139,7 +141,7 @@ object StacCatalog {
     val hrefs = selectAssets(catalogPath, temporalExtent, properties,
       spatialExtent, spark.sparkContext.hadoopConfiguration)
     require(hrefs.nonEmpty, "no catalog items overlap the requested extent")
-    val df = spark.read.parquet(hrefs: _*)
+    val df = Tables.parquet(spark, hrefs: _*)
     val t = temporalExtent.fold(df) { case (from, to) =>
       df.filter(col(timeCol) >= lit(from).cast("timestamp") &&
         col(timeCol) < lit(to).cast("timestamp"))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.sim.Ann
 
 /** Invariants for the similarity-search operators that the rows-only driver
@@ -131,8 +131,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivf partitioned layout: probe reads ONLY the probed cell dirs") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_").toString
+    val path = Fixtures.dir("ivf")
     Ann.ivfBuild(emb, path, nlist = 16)
     val probed = Ann.ivfProbe(spark, path, qs, k = 5, nProbe = 4).cache()
     // identical answers to the in-memory ivf path (same quantizer seed)
@@ -282,8 +281,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("ivfpq layout: probe equals in-memory plan and prunes partitions") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_").toString
+    val path = Fixtures.dir("ivfpq")
     Ann.ivfPqBuild(emb, path, nlist = 16, m = 4, ksub = 16, dims = 64)
     val probed = Ann.ivfPqProbe(spark, path, qs, k = 5, nProbe = 4)
     val inMem = Ann.ivfPqTopK(qs, emb, k = 5, nlist = 16, nProbe = 4)
@@ -311,8 +309,7 @@ class AnnSpec extends SparkSpec {
     val rest = emb.filter(col("vec_id") % 2 === 1)
     val cents = Ann.seededCentroids(half, nlist = 16)
     val books = Ann.pqCodebooks(half, m = 4, ksub = 16, dims = 64)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_add_").toString
+    val path = Fixtures.dir("ivfpq_add")
     Ann.ivfPqBuild(half, path, nlist = 16, m = 4, ksub = 16, dims = 64,
       coarse = Some(cents), books = Some(books))
     val before = spark.read.parquet(s"$path/data").inputFiles.length
@@ -329,8 +326,7 @@ class AnnSpec extends SparkSpec {
 
   test("residual ivfpq layout: probe equals in-memory plan, prunes " +
        "partitions, rejects raw-space layouts") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpqres_").toString
+    val path = Fixtures.dir("ivfpqres")
     Ann.ivfPqResidualBuild(emb, path, nlist = 16, m = 4, ksub = 16,
       dims = 64)
     val probed = Ann.ivfPqResidualProbe(spark, path, qs, k = 5, nProbe = 4)
@@ -351,8 +347,7 @@ class AnnSpec extends SparkSpec {
       s"residual ivfpq probe must prune partitions: $readFiles of $allFiles")
     // a raw-space layout carries no residual marker — scoring its codes
     // with the residual ADC would silently mis-rank, so the probe refuses
-    val rawPath = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rawonly_").toString
+    val rawPath = Fixtures.dir("ivfpq_rawonly")
     Ann.ivfPqBuild(emb, rawPath, nlist = 16, m = 4, ksub = 16, dims = 64)
     val e = intercept[IllegalArgumentException] {
       Ann.ivfPqResidualProbe(spark, rawPath, qs, k = 5)
@@ -368,8 +363,7 @@ class AnnSpec extends SparkSpec {
     val cents = Ann.seededCentroids(half, nlist = 16)
     val books = Ann.pqResidualCodebooks(half, cents, m = 4, ksub = 16,
       dims = 64)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpqres_add_").toString
+    val path = Fixtures.dir("ivfpqres_add")
     Ann.ivfPqResidualBuild(half, path, nlist = 16, m = 4, ksub = 16,
       dims = 64, coarse = Some(cents), books = Some(books))
     val before = spark.read.parquet(s"$path/data").inputFiles.length
@@ -383,8 +377,7 @@ class AnnSpec extends SparkSpec {
       oneShot.exceptAll(probed).isEmpty,
       "append-then-probe must equal the one-shot residual ranking")
     // a raw layout refuses residual adds too
-    val rawPath = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rawadd_").toString
+    val rawPath = Fixtures.dir("ivfpq_rawadd")
     Ann.ivfPqBuild(half, rawPath, nlist = 16, m = 4, ksub = 16, dims = 64)
     assertThrows[IllegalArgumentException] {
       Ann.ivfPqResidualAdd(rest, rawPath)
@@ -535,7 +528,7 @@ class AnnSpec extends SparkSpec {
   test("ivf delete: tombstoned ids vanish from probes; compaction folds them in") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_del_").toString
+    val idx = Fixtures.dir("ivf_del")
     Ann.ivfBuild(emb, idx, nlist = 8)
     val q = emb.filter($"vec_id" < 5)
     val before = Ann.ivfProbe(spark, idx, q, k = 5, nProbe = 3)
@@ -565,7 +558,7 @@ class AnnSpec extends SparkSpec {
     "prior crash is cleared, answers unchanged") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_cr_").toString
+    val idx = Fixtures.dir("ivf_cr")
     Ann.ivfBuild(emb, idx, nlist = 8)
     val q = emb.filter($"vec_id" < 5)
     Ann.ivfDelete(spark, idx, emb.filter($"vec_id" % 7 === 0)

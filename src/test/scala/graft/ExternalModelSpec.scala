@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.ml.{ExternalModel, MlmModelInput, MlmModelOutput, StacMlm, StacMlmItem, ValueScaling}
 import graft.queries.MlQueries
 
@@ -63,7 +63,7 @@ class ExternalModelSpec extends SparkSpec {
 
   test("validation rejects non-Items, non-MLM items, bad frameworks/indices") {
     def write(s: String): String = {
-      val p = java.nio.file.Files.createTempFile("graft_badmlm_", ".json")
+      val p = java.nio.file.Paths.get(Fixtures.dir("badmlm"), "badmlm.json")
       java.nio.file.Files.write(p, s.getBytes("UTF-8"))
       p.toString
     }
@@ -172,7 +172,7 @@ class ExternalModelSpec extends SparkSpec {
         java.nio.file.Paths.get(MlQueries.externalItemPath)), "UTF-8")
         .replaceAll("(?s)\"value_scaling\": \\[.*?\\]",
           s""""value_scaling": [$vs]""")
-      val p = java.nio.file.Files.createTempFile("graft_scal_", ".json")
+      val p = java.nio.file.Paths.get(Fixtures.dir("scal"), "scal.json")
       java.nio.file.Files.write(p, json.getBytes("UTF-8"))
       p.toString
     }
@@ -230,7 +230,7 @@ class ExternalModelSpec extends SparkSpec {
         .replace(""""result": {"shape": [-1, 8],""",
           s""""post_processing_function": $pp,
              |      "result": {"shape": [-1, 8],""".stripMargin)
-      val p = java.nio.file.Files.createTempFile("graft_pp_", ".json")
+      val p = java.nio.file.Paths.get(Fixtures.dir("pp"), "pp.json")
       java.nio.file.Files.write(p, json.getBytes("UTF-8"))
       p.toString
     }
@@ -264,8 +264,7 @@ class ExternalModelSpec extends SparkSpec {
   test("RF workflow runs as one graph: init → fit → save → load → predict") {
     // the reference's test_rf_class_workflow shape, as a single process
     // graph with model-typed nodes flowing between the ml_* processes
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pgrf_").toString
+    val dir = Fixtures.dir("pgrf")
     val pg = new graft.plans.ProcessGraph(spark, sfDir)
     // only nodes reachable from the result execute (openEO lazy-graph
     // semantics), so predict chains THROUGH save (which returns the model)

@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.Battery.KeyRun
+import graft.core.Fixtures
 
 /** The shared driver harness (Battery) and the mains built on it. */
 class HarnessSpec extends SparkSpec {
@@ -56,7 +57,7 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("Verify deletes a key's old output before building it") {
-    val out = Files.createTempDirectory("graft_verify_spec_")
+    val out = Paths.get(Fixtures.dir("verify_spec"))
     val stale = Files.createDirectories(out.resolve("boom"))
     Files.writeString(stale.resolve("part-00000.parquet"), "earlier run")
     try {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.sim.{InvertedIndex, Retrieval}
 
 /** The D89 persisted inverted-index lifecycle (SURVEY.md §2D89): bucket
@@ -15,12 +15,12 @@ class InvertedIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshIdx(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Fixtures.dir(prefix)
 
   private val terms = Seq("hash", "merge", "window")
 
   test("query reads only the query terms' bucket directories") {
-    val path = freshIdx("graft_inv_prune_")
+    val path = freshIdx("inv_prune")
     InvertedIndex.build(Tables.documents(spark, sfDir), path, nBuckets = 16)
     val pruned = InvertedIndex.probedScan(spark, path, Seq("hash"))
     pruned.collect()
@@ -58,7 +58,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("fresh build ranks identically to the direct BM25 query") {
-    val path = freshIdx("graft_inv_parity_")
+    val path = freshIdx("inv_parity")
     val docs = Tables.documents(spark, sfDir)
     InvertedIndex.build(docs, path, nBuckets = 16)
     val got = InvertedIndex.query(spark, path, terms, topN = 15)
@@ -71,7 +71,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("add + delete + compact equals a direct query over the live corpus") {
-    val path = freshIdx("graft_inv_life_")
+    val path = freshIdx("inv_life")
     val docs = Tables.documents(spark, sfDir)
     InvertedIndex.build(docs.filter($"doc_id" % 3 =!= 2), path, nBuckets = 8)
     InvertedIndex.add(docs.filter($"doc_id" % 3 === 2), path)
@@ -99,7 +99,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("re-submitted delete does not double-subtract the stats") {
-    val path = freshIdx("graft_inv_redel_")
+    val path = freshIdx("inv_redel")
     val docs = Tables.documents(spark, sfDir)
     InvertedIndex.build(docs, path, nBuckets = 8)
     val dead = docs.filter($"doc_id" % 11 === 0).select("doc_id")
@@ -114,7 +114,7 @@ class InvertedIndexSpec extends SparkSpec {
   test("delete matches string doc ids on the ledger's native type") {
     // build/add/query are doc-id-type-agnostic; a hardcoded long cast in
     // delete would null string ids, match nothing, and silently no-op
-    val path = freshIdx("graft_inv_strid_")
+    val path = freshIdx("inv_strid")
     val docs = Tables.documents(spark, sfDir)
       .select(concat(lit("doc-"), $"doc_id").as("doc_id"), $"text")
     InvertedIndex.build(docs, path, nBuckets = 8)
@@ -130,7 +130,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("repeated query terms do not double-count") {
-    val path = freshIdx("graft_inv_dup_")
+    val path = freshIdx("inv_dup")
     val docs = Tables.documents(spark, sfDir)
     InvertedIndex.build(docs, path, nBuckets = 8)
     val once = InvertedIndex.query(spark, path, terms, topN = 10).collect()
@@ -145,7 +145,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("compaction recovers from a leftover _old directory") {
-    val path = freshIdx("graft_inv_crash_")
+    val path = freshIdx("inv_crash")
     val docs = Tables.documents(spark, sfDir)
     InvertedIndex.build(docs, path, nBuckets = 8)
     InvertedIndex.delete(spark, path,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.ml.{MlProcesses, MlmSpec, ValueScaling}
 
 /** Value-level invariants for the ML processes (the driver gate only checks
@@ -52,7 +52,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("save → load roundtrips metadata and predictions exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlm_spec_").toString
+    val dir = Fixtures.dir("mlm_spec")
     MlProcesses.saveMlModel(model, dir)
     val loaded = MlProcesses.loadMlModel(spark, dir)
     assert(loaded.spec == model.spec)
@@ -166,14 +166,14 @@ class MlSpec extends SparkSpec {
     val spec = MlmSpec(name = "t", bands = Seq("a", "b"),
       inputShape = Seq(-1, 2), scaling = Some(ValueScaling("z-score", 0.5, 2.0)),
       outputClasses = Seq(0, 1), pretrained = true, accuracy = 0.9, kappa = 0.8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlm_json_").toString
+    val dir = Fixtures.dir("mlm_json")
     spec.save(dir)
     assert(MlmSpec.load(spark, dir) == spec)
   }
 
   test("load rejects foreign frameworks") {
     val spec = MlmSpec(name = "t", framework = "pytorch")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlm_bad_").toString
+    val dir = Fixtures.dir("mlm_bad")
     spec.save(dir)
     val ex = intercept[IllegalArgumentException] {
       MlmSpec.load(spark, dir)

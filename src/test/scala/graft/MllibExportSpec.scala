@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixtures
 import graft.ml.{MllibExport, ProbeModels, RidgeProbe, SkForest}
 
 /** The MLlib→graft-sk-forest export seam (`ml_rf_score_pinned`):
@@ -61,8 +62,7 @@ class MllibExportSpec extends SparkSpec {
   }
 
   test("save_ml_model ships the sidecar, byte-equal to the direct export") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mllib_save_").toString
+    val dir = Fixtures.dir("mllib_save")
     fitted.save(dir)
     assert(ProbeModels.read(spark, s"$dir/skforest.json") == exported)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixtures
 import graft.ml.{MlpLayer, MlpSession, MlpWeights, SessionRuntime, StacMlm}
 import graft.queries.MlQueries
 
@@ -92,7 +93,7 @@ class MlpSpec extends SparkSpec {
   }
 
   test("load rejects nets whose widths disagree with the MLM item shapes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlp_bad_")
+    val dir = java.nio.file.Paths.get(Fixtures.dir("mlp_bad"))
     val p = dir.resolve("w.json")
     java.nio.file.Files.write(p,
       """{"layers": [{"w": [[1, 2, 3]], "b": [0]}]}""".getBytes("UTF-8"))
@@ -158,7 +159,7 @@ class MlpSpec extends SparkSpec {
     // 2x2 single-band tile -> 4 features in [channel, y, x] order; one
     // dense layer with distinct weights per output so tile assembly order
     // is visible in the result
-    val dir = java.nio.file.Files.createTempDirectory("graft_mlp_tile_")
+    val dir = java.nio.file.Paths.get(Fixtures.dir("mlp_tile"))
     java.nio.file.Files.write(dir.resolve("w.json"),
       """{"layers": [{"w": [[1, 0, 0, 0], [0, 2, 0, 0], [0, 0, 3, 0],
         [0, 0, 0, 4]], "b": [0.5, 0, 0, 0], "activation": "relu"}]}"""

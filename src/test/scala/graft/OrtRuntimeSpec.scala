@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Fixtures
+
 /** Runtime contract for the OPTIONAL ONNX Runtime adapter
   * (src/ort/scala/graft/ml/OrtTensorSession.scala — the real-inference
   * seam the reference reaches through run_pytorch_model.py:52).
@@ -77,7 +79,7 @@ class OrtRuntimeSpec extends AnyFunSuite {
     assert(adapter != null,
       "GRAFT_WITH_ORT is set but the adapter did not compile in")
 
-    val f = java.nio.file.Files.createTempFile("graft_identity_", ".onnx")
+    val f = java.nio.file.Paths.get(Fixtures.dir("identity"), "identity.onnx")
     java.nio.file.Files.write(f, identityModel(3))
     val session = adapter.getConstructor(classOf[String])
       .newInstance(f.toString).asInstanceOf[graft.ml.TensorSession]

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.multimodal.Multimodal
 import graft.plans.ProcessGraph
 import graft.queries.PipelineQueries
@@ -40,8 +40,7 @@ class PipelineSpec extends SparkSpec {
     val df = Tables.nation(spark, sfDir)
       .select("n_nationkey", "n_name", "n_regionkey")
     for (fmt <- Sinks.supported) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_sink_$fmt").toString + "/out"
+      val dir = Fixtures.dir(s"sink_$fmt") + "/out"
       Sinks.saveResult(df, dir, fmt)
       val back = Sinks.loadResult(spark, dir, fmt)
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -64,8 +63,7 @@ class PipelineSpec extends SparkSpec {
         col("l_returnflag").as("band"), col("l_quantity"))
       .groupBy("x", "y", "band")
       .agg(Exact.rnd4(Exact.esum(col("l_quantity"))).as("value")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_gridded_").toString + "/out"
+    val dir = Fixtures.dir("gridded") + "/out"
     Sinks.saveGridded(cube, dir, "csv")
     // the wide file has one row per (band, y) and one column per x label
     val wide = Sinks.loadResult(spark, dir, "csv")
@@ -170,7 +168,7 @@ class PipelineSpec extends SparkSpec {
     // an item without a bbox cannot be pruned and is conservatively kept
     val noBbox = java.nio.file.Files.readString(
       java.nio.file.Paths.get(catalog)).replaceFirst("\"bbox\": \\[[^]]*],", "")
-    val p2 = java.nio.file.Files.createTempFile("graft_stacnb_", ".json")
+    val p2 = java.nio.file.Paths.get(Fixtures.dir("stacnb"), "stacnb.json")
     java.nio.file.Files.writeString(p2, noBbox)
     val kept = StacCatalog.selectAssets(p2.toString, None,
       spatialExtent = Some(StacCatalog.BBox(100, 100, 200, 200)))
@@ -198,7 +196,7 @@ class PipelineSpec extends SparkSpec {
 
     // one tile on a different EPSG → the selection must refuse to mix
     val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(catalog))
-    val mixed = java.nio.file.Files.createTempFile("graft_stacmx_", ".json")
+    val mixed = java.nio.file.Paths.get(Fixtures.dir("stacmx"), "stacmx.json")
     java.nio.file.Files.writeString(mixed,
       txt.replaceFirst("\"proj:epsg\": 32633", "\"proj:epsg\": 4326"))
     val e = intercept[IllegalArgumentException] {
@@ -210,7 +208,7 @@ class PipelineSpec extends SparkSpec {
       spatialExtent = Some(StacCatalog.BBox(33, 33, 63, 63))).isDefined)
 
     // rotation terms are not representable in the axis-aligned Crs
-    val rot = java.nio.file.Files.createTempFile("graft_stacrot_", ".json")
+    val rot = java.nio.file.Paths.get(Fixtures.dir("stacrot"), "stacrot.json")
     java.nio.file.Files.writeString(rot, txt.replace(
       "[10.0, 0.0, 500000.0, 0.0, -10.0, 4650000.0]",
       "[10.0, 0.1, 500000.0, 0.0, -10.0, 4650000.0]"))
@@ -255,8 +253,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("graph save_result writes the gridded raster layout") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pg_grid_").toString + "/out"
+    val dir = Fixtures.dir("pg_grid") + "/out"
     new ProcessGraph(spark, sfDir).run(
       s"""{"l": {"process_id": "load_collection", "arguments": {"id": "grid"}},
          | "s": {"process_id": "save_result",
@@ -269,8 +266,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("graph save_result writes binary rasters (GTiff / netcdf / zarr)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_pg_raster_").toString
+    val base = Fixtures.dir("pg_raster")
     def save(fmt: String, dir: String) =
       new ProcessGraph(spark, sfDir).run(
         s"""{"l": {"process_id": "load_collection", "arguments": {"id": "grid"}},
@@ -409,7 +405,7 @@ class PipelineSpec extends SparkSpec {
 
   test("stac catalog: extent prunes asset FILES, not just rows") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stacspec_")
+    val dir = java.nio.file.Paths.get(Fixtures.dir("stacspec"))
     val ev = graft.core.Tables.events(spark, sfDir)
       .select("event_id", "ts", "value")
     val weeks = Seq(("w1", "2024-01-01", "2024-01-08", 10),
@@ -510,8 +506,7 @@ class PipelineSpec extends SparkSpec {
     // file pruning the scan planner applies on a lake
     val grid = (0 until 256).flatMap(x => (0 until 256).map(y => (x, y)))
       .toDF("x", "y")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_zorder_").toString
+    val base = Fixtures.dir("zorder")
     // AQE may coalesce the range exchange into fewer, wider files when a
     // sibling suite has tuned the shared session — pin it off so the
     // 16-file layout comparison is the one the Scaladoc describes

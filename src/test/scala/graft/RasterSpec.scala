@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixtures
 import graft.cube.{Crs, DataCube}
 import graft.sources.Rasters
 
@@ -23,7 +24,7 @@ class RasterSpec extends SparkSpec {
   }
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_raster_$tag").toString
+    Fixtures.dir(s"raster_$tag")
 
   test("geotiff: one file per band, TIFF magic + EPSG geokey, exact pixels") {
     val dir = tmp("tif")

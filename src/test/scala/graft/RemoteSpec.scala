@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Fixtures
 import graft.ml.StacMlm
 import graft.queries.MlQueries
 import graft.sources.{Remote, StacCatalog}
@@ -15,8 +16,7 @@ class RemoteSpec extends SparkSpec {
   private def asUri(p: String): String = s"file://$p"
 
   test("readString round-trips UTF-8 content through a file:// URI") {
-    val f = java.io.File.createTempFile("graft_remote", ".txt")
-    f.deleteOnExit()
+    val f = new java.io.File(Fixtures.dir("remote"), "remote.txt")
     val text = "snow\u00e9 \u2603 content"
     java.nio.file.Files.write(f.toPath,
       text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -37,11 +37,9 @@ class RemoteSpec extends SparkSpec {
   }
 
   test("cacheToLocal fetches once and reuses the cached copy") {
-    val src = java.io.File.createTempFile("graft_weights", ".onnx")
-    src.deleteOnExit()
+    val src = new java.io.File(Fixtures.dir("weights"), "weights.onnx")
     java.nio.file.Files.write(src.toPath, Array[Byte](1, 2, 3, 4))
-    val cache = java.nio.file.Files.createTempDirectory("graft_cache")
-      .toFile.getAbsolutePath
+    val cache = Fixtures.dir("cache")
 
     val p1 = Remote.cacheToLocal(asUri(src.getAbsolutePath), cache)
     assert(java.nio.file.Files.readAllBytes(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.sources.Shards
 
 /** D90 deterministic corpus sharding (SURVEY.md §2D90): permutation
@@ -44,8 +44,7 @@ class ShardsSpec extends SparkSpec {
   }
 
   test("write lands one directory per shard, rows in permutation order") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_shards_").toString + "/out"
+    val path = Fixtures.dir("shards") + "/out"
     Shards.write(docs, path, nShards = 4, seed = "s1")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

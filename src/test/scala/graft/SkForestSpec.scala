@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Fixtures
 import graft.ml.SkForest
 
 /** The pickled-sklearn interop loop: tools/convert_sklearn.py must turn
@@ -20,7 +21,7 @@ class SkForestSpec extends SparkSpec {
     val py = new java.io.File(repo, "tools/convert_sklearn.py")
     val pkl = new java.io.File(repo, "tools/fixtures/sklearn_rf.pkl")
     assume(py.isFile && pkl.isFile, "converter fixture not present")
-    val out = java.nio.file.Files.createTempFile("sk_conv_", ".json")
+    val out = java.nio.file.Paths.get(Fixtures.dir("sk_conv"), "sk_conv.json")
     // PATH-resolved python3 (pyenv shims etc.); skip if absent or no numpy
     val rc =
       try new ProcessBuilder("python3", py.getPath, pkl.getPath,
@@ -148,7 +149,7 @@ class SkForestSpec extends SparkSpec {
     val py = new java.io.File(repo, "tools/convert_sklearn.py")
     val pkl = new java.io.File(repo, "tools/fixtures/sklearn_rf12.pkl")
     assume(py.isFile && pkl.isFile, "12-class fixture not present")
-    val out = java.nio.file.Files.createTempFile("sk12_", ".json")
+    val out = java.nio.file.Paths.get(Fixtures.dir("sk12"), "sk12.json")
     val rc =
       try new ProcessBuilder("python3", py.getPath, pkl.getPath,
         out.toString).inheritIO().start().waitFor()

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * from [[graft.core.Fixtures]]. Hand-rolled copies leaked their temp dirs
   * and could build a fixture twice, so a new one anywhere fails the build.
   * `MllibExport.toSkForestJson` keeps its own temp dir: it deletes it in a
-  * `finally`. */
+  * `finally`. The specs take their scratch dirs and files from
+  * `Fixtures.dir` too, so a test run leaves nothing in `java.io.tmpdir`. */
 class TempDirSpec extends AnyFunSuite {
 
   private val repo = new java.io.File(".").getCanonicalFile.toPath
@@ -37,6 +38,14 @@ class TempDirSpec extends AnyFunSuite {
     val stray = found.filterNot(f => allowed.exists(f.startsWith))
     assert(stray.isEmpty,
       s"temp dirs outside Fixtures.dir: ${stray.mkString(", ")}")
+  }
+
+  test("src/test creates temp dirs and files only through Fixtures.dir") {
+    val stray = Seq("Directory", "File").flatMap { kind =>
+      sites("src/test", "createTemp" + kind)
+    }
+    assert(stray.isEmpty,
+      s"temp dirs or files outside Fixtures.dir: ${stray.mkString(", ")}")
   }
 
   test("graft/queries holds no cache or stream drain of its own") {
