@@ -1,12 +1,19 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.util.Using
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Exact, Tables}
 import graft.dedup.Dedup
 import graft.functions.VectorFunctions
+
+/** One (query, candidate, similarity) triple — public so Spark's generated
+  * row (de)serializers can instantiate it. */
+case class Scored(q_id: Long, c_id: Long, sim: Double)
 
 /** Similarity search over embedding columns (SURVEY.md §2D6–D7).
   *
@@ -18,11 +25,11 @@ import graft.functions.VectorFunctions
   * sign-random-hyperplane bits (reusable partitioning) and ranks only
   * bucket-mates — the 100 TB path where even one full corpus pass per
   * query batch is too much.
+  *
+  * The IVF family (flat, raw-space PQ and residual PQ) is one code path
+  * over an [[Ann.Encoding]]: one build, add, probe and in-memory top-k,
+  * and one layout marker every on-disk entry point checks.
   */
-/** One (query, candidate, similarity) triple — public so Spark's generated
-  * row (de)serializers can instantiate it. */
-case class Scored(q_id: Long, c_id: Long, sim: Double)
-
 object Ann {
 
   /** Exact cosine top-k: for every query vector the k nearest corpus
@@ -31,13 +38,10 @@ object Ann {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                      idCol: String = "vec_id",
-                     embCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
+                     embCol: String = "embedding"): DataFrame =
     // Per-partition prune in global order (sim desc, c_id asc) shrinks the
     // shuffle from |corpus|·|Q| to ≤ partitions·|Q|·k rows — see rankPruned.
-    rankPruned(exactSims(queries, corpus, idCol, embCol).as[Scored], k)
-  }
+    rankPruned(exactSims(queries, corpus, idCol, embCol), k)
 
   /** D81: Maximal Marginal Relevance diversified re-ranking (Carbonell &
     * Goldstein, SIGIR'98) — the retrieve-then-diversify seam of RAG/search
@@ -68,18 +72,16 @@ object Ann {
     require(kOut >= 1 && kOut <= kCand, s"mmrRerank: need 1 <= kOut <= kCand")
     val top = graft.core.CacheScope.pin(
       bruteForceTopK(queries, corpus, kCand, idCol, embCol))
-    val cvec = corpus
-      .join(broadcast(top.select(col("c_id")).distinct()),
-        corpus(idCol) === col("c_id"))
-      .select(col("c_id"), col(embCol).as("_ce"))
+    val cvec = candidates(corpus, idCol, embCol)
+      .join(broadcast(top.select(col("c_id")).distinct()), Seq("c_id"))
     val pairSims = top.select(col("q_id"), col("c_id"))
       .join(top.select(col("q_id"), col("c_id").as("o_id")), Seq("q_id"))
       .filter(col("c_id") =!= col("o_id"))
       .join(broadcast(cvec), Seq("c_id"))
       .join(broadcast(cvec.select(col("c_id").as("o_id"),
-        col("_ce").as("_oe"))), Seq("o_id"))
+        col("_c_emb").as("_oe"))), Seq("o_id"))
       .select(col("q_id"), col("c_id"), col("o_id"),
-        Exact.rnd4(VectorFunctions.cosine(col("_ce"), col("_oe")))
+        Exact.rnd4(VectorFunctions.cosine(col("_c_emb"), col("_oe")))
           .as("psim"))
     graft.core.CacheScope.pin(pairSims) // persists in place; loop reuses it
     var selected = top.filter(col("rank") === 1)
@@ -129,8 +131,6 @@ object Ann {
   def filteredTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                    attrCol: String = "label", idCol: String = "vec_id",
                    embCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val q = broadcast(queries.select(col(idCol).as("q_id"),
       col(embCol).as("_q_emb"), col(attrCol).as("_q_attr")))
     val sims = corpus.select(col(idCol).as("c_id"),
@@ -139,7 +139,7 @@ object Ann {
         col("_q_attr") === col("_c_attr"))
       .select(col("q_id"), col("c_id"),
         VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
-    rankPruned(sims.as[Scored], k)
+    rankPruned(sims, k)
   }
 
   /** D83: k-NN GRAPH construction over the whole corpus — the backbone
@@ -169,27 +169,22 @@ object Ann {
                coarse: Option[Array[Array[Double]]] = None): DataFrame = {
     val cents = coarse.getOrElse(
       seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val assigned = corpus.select(col(idCol).as("src"),
-      col(embCol).as("_e"), cellOf(cents, col(embCol)).as("cell"))
+    val assigned = coded(corpus, cents, Encoding.Flat, idCol, embCol)
     val other = assigned.select(col("cell").as("_cellb"),
-      col("src").as("dst"), col("_e").as("_eb"))
+      col("c_id").as("dst"), col("_c_emb").as("_eb"))
     val sims = assigned
-      .join(other, col("cell") === col("_cellb") && col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        VectorFunctions.cosine(col("_e"), col("_eb")).as("_sim"))
-    val w = Window.partitionBy("src").orderBy(col("_sim").desc,
-      col("dst").asc)
+      .join(other, col("cell") === col("_cellb") && col("c_id") =!= col("dst"))
+      .select(col("c_id").as("q_id"), col("dst").as("c_id"),
+        VectorFunctions.cosine(col("_c_emb"), col("_eb")).as("sim"))
     // Pinned: the final plan consumes `edges` TWICE (forward + reversed
     // for the mutual flag), and Spark does not CSE duplicate subtrees —
     // unpinned, the O(Σ cell²) self-join and the ranking window run twice
     // per action (and N× under consumer re-execution, the r12 battery's
     // process_graph_knn amplification). Edges are O(n·k) rows — the
     // smallest materialization that caps the self-join at one run.
-    val edges = graft.core.CacheScope.pin(
-      sims.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("src"), col("dst"), col("rank"),
-          Exact.rnd4(col("_sim")).as("sim")))
+    val edges = graft.core.CacheScope.pin(rankPruned(sims, k)
+      .select(col("q_id").as("src"), col("c_id").as("dst"), col("rank"),
+        col("sim")))
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"),
       lit(true).as("_m"))
     edges.join(rev.hint("shuffle_hash"), Seq("src", "dst"), "left")
@@ -210,12 +205,10 @@ object Ann {
                     lo: Double = 0.15, hi: Double = 0.30,
                     idCol: String = "vec_id",
                     embCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     require(lo < hi, s"hardNegatives: empty band [$lo, $hi)")
     val banded = exactSims(queries, corpus, idCol, embCol)
       .where(col("sim") >= lo && col("sim") < hi)
-    rankPruned(banded.as[Scored], n)
+    rankPruned(banded, n)
   }
 
   /** Exact cosine for every (query, candidate) pair: broadcast nested
@@ -224,7 +217,7 @@ object Ann {
                         idCol: String, embCol: String): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("q_id"),
       col(embCol).as("_q_emb")))
-    corpus.select(col(idCol).as("c_id"), col(embCol).as("_c_emb"))
+    candidates(corpus, idCol, embCol)
       .join(q, col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
@@ -265,17 +258,16 @@ object Ann {
     *    nProbe/nlist of the data);
     *  - queries broadcast with their probe list exploded; ranking work is
     *    O(|Q| · nProbe · cell size), never a corpus scan.
+    *
+    * The in-memory [[topK]] of the [[Encoding.Flat]] encoding: the same
+    * plan [[ivfProbe]] runs over a built layout.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int, nlist: Int = 16,
               nProbe: Int = 4, idCol: String = "vec_id",
               embCol: String = "embedding",
-              coarse: Option[Array[Array[Double]]] = None): DataFrame = {
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val assigned = corpus.select(col(idCol).as("c_id"),
-      col(embCol).as("_c_emb"), cellOf(cents, col(embCol)).as("cell"))
-    rankProbed(assigned, queries, cents, k, nProbe, idCol, embCol)
-  }
+              coarse: Option[Array[Array[Double]]] = None): DataFrame =
+    topK(queries, corpus, nlist, coarse, k, nProbe, 0, idCol, embCol)(
+      _ => Encoding.Flat)
 
   /** Deterministic sample-trained coarse quantizer: Lloyd's k-means over
     * the `sampleN` corpus vectors with the smallest `md5(id)` (a
@@ -300,12 +292,7 @@ object Ann {
                       embCol: String = "embedding"): Array[Array[Double]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sample = corpus
-      .select(col(idCol).cast("long").as("id"),
-        col(embCol).cast("array<float>").as("e"),
-        md5(col(idCol).cast("string")).as("_r"))
-      .orderBy(col("_r"), col("id"))
-      .limit(sampleN)
+    val sample = md5Sample(corpus, sampleN, idCol, embCol)
       .select("id", "e")
       .as[(Long, Array[Float])]
       .collect() // SCALE:ann-seed-sample
@@ -343,6 +330,17 @@ object Ann {
     }
     cents
   }
+
+  /** The quantizer trainers' sample: the `sampleN` rows (id, e, _r) of
+    * smallest (md5(id), id) — data-independent and pseudo-random. */
+  private def md5Sample(corpus: DataFrame, sampleN: Int, idCol: String,
+                        embCol: String): DataFrame =
+    corpus
+      .select(col(idCol).cast("long").as("id"),
+        col(embCol).cast("array<float>").as("e"),
+        md5(col(idCol).cast("string")).as("_r"))
+      .orderBy(col("_r"), col("id"))
+      .limit(sampleN)
 
   /** Quantizer-trainer dispatch: the driver Lloyd's for small cell counts
     * (bit-compat with every existing oracle), the distributed Lloyd's
@@ -395,12 +393,7 @@ object Ann {
       embCol: String = "embedding"): Array[Array[Double]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sampleDf = corpus
-      .select(col(idCol).cast("long").as("id"),
-        col(embCol).cast("array<float>").as("e"),
-        md5(col(idCol).cast("string")).as("_r"))
-      .orderBy(col("_r"), col("id"))
-      .limit(sampleN)
+    val sampleDf = md5Sample(corpus, sampleN, idCol, embCol)
       // TakeOrdered lands the sample in ONE partition — spread it back
       // out or every iteration's argmin runs single-task (the exact
       // serialization this trainer exists to remove)
@@ -517,12 +510,18 @@ object Ann {
                  emb: org.apache.spark.sql.Column)
       : Seq[org.apache.spark.sql.Column] =
     cents.zipWithIndex.map { case (c, i) =>
-      var c2 = 0.0
-      var j = 0
-      while (j < c.length) { c2 += c(j) * c(j); j += 1 }
-      struct((lit(c2) - lit(2.0) * VectorFunctions.dotFD(emb, typedlit(c)))
-        .as("d"), lit(i).as("i"))
+      struct((lit(dotSeq(c, c)) - lit(2.0) * VectorFunctions.dotFD(emb,
+        typedlit(c))).as("d"), lit(i).as("i"))
     }
+
+  /** a·b as the sequential i-ascending double fold every plan-time norm
+    * and cross-term literal uses (the oracle's `list_sum` over the same
+    * vectors). */
+  private def dotSeq(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
 
   /** Nearest-cell assignment. Routed through the native
     * [[graft.functions.NearestCentroid]] expression (matrix as a codegen
@@ -547,51 +546,217 @@ object Ann {
     transform(slice(array_sort(array(centScores(cents, emb): _*)), 1, nProbe),
       s => s.getField("i"))
 
-  private def rankProbed(assigned: DataFrame, queries: DataFrame,
-                         cents: Array[Array[Double]], k: Int, nProbe: Int,
-                         idCol: String, embCol: String): DataFrame = {
+  /** An IVF encoding: one inverted-file index with pluggable codes (the
+    * FAISS `IndexIVF` design). [[build]], [[add]], [[probe]] and [[topK]]
+    * run the same steps for every case; the encoding supplies only what
+    * differs:
+    *  - `name`, the layout marker [[requireEncoding]] checks;
+    *  - `books`, the PQ codebooks [[build]] writes beside the centroids;
+    *  - `encode`, the stored rows (c_id, _c_emb, cell[, _code*, _rn2])
+    *    from (c_id, _e, cell);
+    *  - `queryCols`, the broadcast query columns from (q_id, _qe, cell);
+    *  - `sim`, the similarity of a joined (query, stored row) pair. */
+  private[sim] final case class Encoding(name: String,
+      books: Option[Array[Array[Array[Double]]]],
+      encode: DataFrame => DataFrame, queryCols: Seq[Column], sim: Column)
+
+  private[sim] object Encoding {
+    /** Raw vectors as given, exact cosine. */
+    val Flat: Encoding = Encoding("flat", None,
+      _.select(col("c_id"), col("_e").as("_c_emb"), col("cell")),
+      Seq(col("_qe").as("_q_emb")),
+      VectorFunctions.cosine(col("_q_emb"), col("_c_emb")))
+
+    /** Raw-space PQ codes beside the float vector and the reconstruction
+      * norm² `_rn2`, so a consumer scores with m+1 lookups and refines
+      * from the same row; one code table serves every probe list. */
+    def Pq(cbs: Array[Array[Array[Double]]]): Encoding = Encoding("pq",
+      Some(cbs), pqCoded(_, cbs, "_e", pqStored: _*),
+      pqQueryCols(cbs, "_qe"), adcSim(Seq.empty, cbs.length))
+
+    /** PQ codes of the coarse residual e − cent (FAISS IndexIVFPQ), with
+      * ‖cent + r̂‖² = ‖cent‖² + 2·Σ_j (cent_subj·ĉ_j) + Σ_j ‖ĉ_j‖² baked
+      * into `_rn2` from plan-time literal tables, and q·cent of each
+      * probed cell (an element_at over nlist literal dots) leading the ADC
+      * sum. */
+    def ResidualPq(cents: Array[Array[Double]],
+                   cbs: Array[Array[Array[Double]]]): Encoding = {
+      val (cn2, cd) = residualTables(cents, cbs)
+      Encoding("residual", Some(cbs), rows =>
+        pqCoded(rows.withColumn("_res",
+            residualOf(cents, col("_e"), col("cell"))), cbs, "_res",
+            pqStored: _*)
+          .withColumn("_rn2", element_at(typedlit(cn2), col("cell") + 1) +
+            lit(2.0) * cbs.indices.map(j =>
+              element_at(element_at(typedlit(cd(j)), col("cell") + 1),
+                col(s"_code$j") + 1)).reduceLeft(_ + _) + col("_rn2")),
+        element_at(array(cents.map(c =>
+            VectorFunctions.dotFD(col("_qe"), typedlit(c))): _*),
+          col("cell") + 1).as("_qc") +: pqQueryCols(cbs, "_qe"),
+        adcSim(Seq(col("_qc")), cbs.length))
+    }
+
+    /** Every marker: a flat probe reads any layout (it needs only
+      * `_c_emb`), and deletes and compaction never touch codes. */
+    val all: Seq[String] = Seq("flat", "pq", "residual")
+  }
+
+  /** What a PQ layout stores beside its codes: the vector as float. */
+  private def pqStored: Seq[Column] =
+    Seq(col("c_id"), col("_e").cast("array<float>").as("_c_emb"), col("cell"))
+
+  /** The stored rows of `corpus` under `enc`: what [[build]] and [[add]]
+    * write, and what [[topK]] ranks in memory. */
+  private def coded(corpus: DataFrame, cents: Array[Array[Double]],
+                    enc: Encoding, idCol: String, embCol: String): DataFrame =
+    enc.encode(corpus.select(col(idCol).as("c_id"), col(embCol).as("_e"),
+      cellOf(cents, col(embCol)).as("cell")))
+
+  /** The one IVF ranking, over the in-memory coded corpus ([[topK]]) or
+    * a layout's pruned scan ([[probe]]): queries broadcast with their
+    * probe lists exploded and `enc`'s query columns, join the stored rows
+    * on cell, score by `enc.sim` and rank by [[rankPruned]]. A PQ
+    * encoding ranks its ADC top-`rerank` shortlist, which [[refineExact]]
+    * re-scores from the raw vectors of the same `cells` rows. */
+  private def rankCells(cells: DataFrame, queries: DataFrame,
+                        cents: Array[Array[Double]], enc: Encoding, k: Int,
+                        nProbe: Int, rerank: Int, idCol: String,
+                        embCol: String): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("q_id"),
-      col(embCol).as("_q_emb"),
-      explode(probesOf(cents, col(embCol), nProbe)).as("cell")))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id").asc)
-    assigned.join(q, Seq("cell"))
+        col(embCol).as("_qe"),
+        explode(probesOf(cents, col(embCol), nProbe)).as("cell"))
+      .select(col("q_id") +: col("cell") +: enc.queryCols: _*))
+    val sims = cells.join(q, Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("rank"),
-        Exact.rnd4(col("sim")).as("sim"))
+      .select(col("q_id"), col("c_id"), enc.sim.as("sim"))
+    if (enc.books.isEmpty) rankPruned(sims, k)
+    else refineExact(queries, cells, rankPruned(sims, rerank), k, idCol,
+      embCol)
+  }
+
+  /** The one in-memory IVF top-k: the coarse quantizer trains once (or
+    * comes in as `coarse`), `enc` gets its codebooks from it, and
+    * [[rankCells]] ranks the coded corpus. */
+  private def topK(queries: DataFrame, corpus: DataFrame, nlist: Int,
+                   coarse: Option[Array[Array[Double]]], k: Int,
+                   nProbe: Int, rerank: Int, idCol: String, embCol: String)(
+      enc: Array[Array[Double]] => Encoding): DataFrame = {
+    val cents = coarse.getOrElse(
+      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
+    val e = enc(cents)
+    rankCells(coded(corpus, cents, e, idCol, embCol), queries, cents, e, k,
+      nProbe, rerank, idCol, embCol)
+  }
+
+  /** The one IVF build: the coded corpus written PARTITIONED BY its cell
+    * id (one directory per inverted list), the centroid sidecar, the
+    * codebook sidecar of a PQ encoding, and LAST the encoding marker — a
+    * one-line file written through the Hadoop FileSystem API (no Spark
+    * job). A rebuild deletes the old marker first, so a build that dies
+    * at any point leaves no marker and every entry point refuses it. */
+  private def build(corpus: DataFrame, path: String, nlist: Int,
+                    coarse: Option[Array[Array[Double]]], idCol: String,
+                    embCol: String)(
+      enc: Array[Array[Double]] => Encoding): Unit = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val marker = new Path(s"$path/encoding")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(marker, false)
+    val cents = coarse.getOrElse(
+      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
+    val e = enc(cents)
+    writeCells(coded(corpus, cents, e, idCol, embCol), s"$path/data",
+      "overwrite")
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    e.books.foreach(cbs => cbs.zipWithIndex.flatMap { case (book, j) =>
+      book.zipWithIndex.map { case (c, r) => (j, r, c.toSeq) }
+    }.toSeq.toDF("book", "code", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks"))
+    Using.resource(fs.create(marker, true))(_.write(e.name.getBytes("UTF-8")))
+  }
+
+  /** The one incremental ADD — the maintenance half of FAISS's train/add
+    * contract: new vectors are encoded with the STORED quantizers (add
+    * never retrains — retraining would re-key every existing code) and
+    * appended as new files inside their cell directories. The probe path
+    * is untouched: partition pruning, stored codes and in-row refine see
+    * one homogeneous layout, so a daily ingest appends O(new) work to a
+    * 100 TB index without rewriting it. */
+  private def add(newVecs: DataFrame, path: String, op: String,
+                  accepts: String, idCol: String, embCol: String)(
+      enc: Array[Array[Double]] => Encoding): Unit = {
+    val cents = open(newVecs.sparkSession, path, op, Seq(accepts))
+    writeCells(coded(newVecs, cents, enc(cents), idCol, embCol),
+      s"$path/data", "append")
+  }
+
+  /** The one IVF probe: refuse a layout whose marker `op` does not
+    * accept, then [[rankCells]] over the pruned scan. `enc` is built only
+    * after the check, from the stored centroids, so a refused layout
+    * loads no codebooks. */
+  private def probe(spark: SparkSession, path: String, op: String,
+                    accepts: Seq[String], queries: DataFrame, k: Int,
+                    nProbe: Int, rerank: Int, idCol: String, embCol: String)(
+      enc: Array[Array[Double]] => Encoding): DataFrame = {
+    val cents = open(spark, path, op, accepts)
+    rankCells(scanCells(spark, path, queries, cents, nProbe, embCol),
+      queries, cents, enc(cents), k, nProbe, rerank, idCol, embCol)
+  }
+
+  /** The clustered partitioned write of every layout write (build, add,
+    * compaction): rows cluster by cell BEFORE the partitionBy(cell)
+    * write. Without the shuffle every input task writes a file into every
+    * cell dir (tasks x nlist small files — 8128 measured at nlist=256 on
+    * the sf2 replica); clustered, the layout is ~1 file per cell and the
+    * probe IN-filter opens nProbe-proportional files. File SIZE is capped
+    * by spark.sql.files.maxRecordsPerFile when a cell outgrows one file
+    * at lake scale. Logical content is unchanged (hash gates sort rows;
+    * ranking ties are pinned), so oracles are unaffected. */
+  private def writeCells(rows: DataFrame, out: String, mode: String): Unit =
+    rows.repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(out)
+
+  /** Refuse a layout whose encoding marker is missing or not one of
+    * `accepts`, with an IllegalArgumentException naming both. The marker
+    * is read through the Hadoop FileSystem API — no Spark job — so an
+    * unfinished build, a foreign directory and a layout whose codes `op`
+    * would misread are all refused before anything is read or written. */
+  private def requireEncoding(spark: SparkSession, path: String, op: String,
+                              accepts: Seq[String]): Unit = {
+    val p = new Path(s"$path/encoding")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val found =
+      if (!fs.exists(p)) "none (an unfinished build or no layout)"
+      else Using.resource(fs.open(p))(in =>
+        new String(in.readAllBytes(), "UTF-8").trim)
+    require(accepts.contains(found), s"$op reads encodings " +
+      s"${accepts.mkString(", ")}; the layout at $path has encoding $found")
+  }
+
+  /** [[requireEncoding]], then the layout's stored centroids —
+    * O(nlist·dims) sidecar metadata. */
+  private def open(spark: SparkSession, path: String, op: String,
+                   accepts: Seq[String]): Array[Array[Double]] = {
+    import spark.implicits._
+    requireEncoding(spark, path, op, accepts)
+    Tables.parquet(spark, s"$path/centroids")
+      .select(col("cell"), col("centroid").cast("array<double>"))
+      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2) // SCALE:ann-centroids
   }
 
   /** Materialize the IVF layout on disk: the corpus written PARTITIONED BY
     * its cell id (one directory per inverted list) plus a centroid
     * sidecar — the physical realization of "the cell id is the table's
     * partition key". Build is one assignment pass; the layout is reusable
-    * across every future query batch.
+    * across every future query batch. [[build]] with the flat encoding.
     */
   def ivfBuild(corpus: DataFrame, path: String, nlist: Int = 16,
                idCol: String = "vec_id",
-               embCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol)
-    corpus.select(col(idCol).as("c_id"), col(embCol).as("_c_emb"),
-        cellOf(cents, col(embCol)).as("cell"))
-      // cluster rows by cell BEFORE the partitioned write: without the
-      // shuffle every input task writes a file into every cell dir
-      // (tasks x nlist small files — 8128 measured at nlist=256 on the
-      // sf2 replica); clustered, the layout is ~1 file per cell and the
-      // probe IN-filter opens nProbe-proportional files. File SIZE is
-      // capped by spark.sql.files.maxRecordsPerFile when a cell outgrows
-      // one file at lake scale. Logical content is unchanged (hash gates
-      // sort rows; ranking ties are pinned), so oracles are unaffected.
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-  }
+               embCol: String = "embedding"): Unit =
+    build(corpus, path, nlist, None, idCol, embCol)(_ => Encoding.Flat)
 
   /** Materialize the full IVF-PQ layout: the corpus written PARTITIONED
     * BY coarse cell with its PQ codes and reconstruction norm INLINE in
@@ -603,27 +768,9 @@ object Ann {
                  m: Int = 4, ksub: Int = 16, dims: Int = 64,
                  idCol: String = "vec_id", embCol: String = "embedding",
                  coarse: Option[Array[Array[Double]]] = None,
-                 books: Option[Array[Array[Array[Double]]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val cbs = books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))
-    corpus.select(col(idCol).as("c_id") +:
-        col(embCol).cast("array<float>").as("_c_emb") +:
-        (cellOf(cents, col(embCol)).as("cell") +: pqCodeCols(cbs, embCol)): _*)
-      .withColumn("_rn2", pqReconNorm2(cbs))
-      // clustered write — see ivfBuild
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cbs.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, r) => (j, r, c.toSeq) }
-    }.toSeq.toDF("book", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-  }
+                 books: Option[Array[Array[Array[Double]]]] = None): Unit =
+    build(corpus, path, nlist, coarse, idCol, embCol)(_ => Encoding.Pq(
+      books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))))
 
   /** The stored PQ codebooks of a built layout — O(m·ksub·dsub) sidecar
     * metadata, the read half of the train/add separation. */
@@ -637,104 +784,67 @@ object Ann {
       .map(_._2.sortBy(_._2).map(_._3))
   }
 
-  /** Incremental ADD to a built IVF-PQ layout — the maintenance half of
-    * FAISS's train/add contract: new vectors are encoded with the STORED
-    * quantizers (add never retrains — retraining would re-key every
-    * existing code) and appended as new files inside their cell
-    * directories. The probe path is untouched: partition pruning, stored
-    * codes and in-row refine see one homogeneous layout, so a daily
-    * ingest appends O(new) work to a 100 TB index without rewriting it.
-    * Compaction of accumulated small files is the same materialize-then-
-    * swap rewrite the E9 claim store uses. */
+  /** Incremental ADD to a built IVF-PQ layout ([[add]] with raw-space
+    * codes): refuses any layout not marked `pq`. Compaction of
+    * accumulated small files is the same materialize-then-swap rewrite
+    * the E9 claim store uses. */
   def ivfPqAdd(newVecs: DataFrame, path: String,
                idCol: String = "vec_id", embCol: String = "embedding")
-      : Unit = {
-    val spark = newVecs.sparkSession
-    val cents = loadCentroids(spark, path)
-    val cbs = loadCodebooks(spark, path)
-    newVecs.select(col(idCol).as("c_id") +:
-        col(embCol).cast("array<float>").as("_c_emb") +:
-        (cellOf(cents, col(embCol)).as("cell") +: pqCodeCols(cbs, embCol)): _*)
-      .withColumn("_rn2", pqReconNorm2(cbs))
-      // clustered write — see ivfBuild
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/data")
-  }
+      : Unit =
+    add(newVecs, path, "ivfPqAdd", "pq", idCol, embCol)(
+      _ => Encoding.Pq(loadCodebooks(newVecs.sparkSession, path)))
 
   /** Query a built IVF-PQ layout: probed cells become a partition
     * IN-filter (directory pruning — nProbe/nlist of the lake read), the
     * pruned scan ranks from its stored codes, and the refine re-scores
     * the shortlist from the raw vectors already in the scanned rows.
-    * Identical ranking to [[ivfPqTopK]] (same deterministic quantizers),
-    * so the layout round-trip shares its hash oracle. */
+    * Identical ranking to [[ivfPqTopK]] (same deterministic quantizers,
+    * same [[rankCells]] plan), so the layout round-trip shares its hash
+    * oracle. Refuses any layout not marked `pq`. */
   def ivfPqProbe(spark: org.apache.spark.sql.SparkSession, path: String,
                  queries: DataFrame, k: Int, nProbe: Int = 4,
                  rerank: Int = 64, idCol: String = "vec_id",
-                 embCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    val cents = loadCentroids(spark, path)
-    val cbs = loadCodebooks(spark, path)
-    val scan = probedScan(spark, path, queries, cents, nProbe, idCol, embCol)
-    val q = broadcast(queries.select(
-      col(idCol).as("q_id") +:
-        (explode(probesOf(cents, col(embCol), nProbe)).as("cell") +:
-          (pqDtCols(cbs, embCol) :+
-            VectorFunctions.dot(col(embCol), col(embCol)).as("_qn2"))): _*))
-    val adc = scan.join(q, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), pqAdcSim(cbs.length).as("sim"))
-      .as[Scored]
-    val shortlist = rankPruned(adc, rerank).select("q_id", "c_id")
-    val qRaw = broadcast(queries.select(col(idCol).as("q_id"),
-      col(embCol).as("_q_emb")))
-    val exact = scan.select(col("c_id"), col("_c_emb"))
-      .join(broadcast(shortlist), Seq("c_id"))
-      .join(qRaw, Seq("q_id"))
-      .select(col("q_id"), col("c_id"),
-        VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
-      .as[Scored]
-    rankPruned(exact, k)
-  }
+                 embCol: String = "embedding"): DataFrame =
+    probe(spark, path, "ivfPqProbe", Seq("pq"), queries, k, nProbe, rerank,
+      idCol, embCol)(_ => Encoding.Pq(loadCodebooks(spark, path)))
 
   /** Probe a built IVF index: the probed cell ids (O(|Q|·nProbe), driver
     * side — queries are the broadcast-small side by construction) become
     * an IN-filter on the PARTITION column, so the scan reads only the
     * probed directories — nProbe/nlist of the lake, proven via inputFiles
-    * in AnnSpec.
+    * in AnnSpec. Exact cosine over the stored raw vectors, so it reads a
+    * layout of any encoding and equals [[ivfTopK]] on it.
     */
   def ivfProbe(spark: org.apache.spark.sql.SparkSession, path: String,
                queries: DataFrame, k: Int, nProbe: Int = 4,
                idCol: String = "vec_id",
-               embCol: String = "embedding"): DataFrame = {
-    val cents = loadCentroids(spark, path)
-    rankProbed(probedScan(spark, path, queries, cents, nProbe, idCol, embCol),
-      queries, cents, k, nProbe, idCol, embCol)
-  }
-
-  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Array[Array[Double]] = {
-    import spark.implicits._
-    Tables.parquet(spark, s"$path/centroids")
-      .select(col("cell"), col("centroid").cast("array<double>"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2) // SCALE:ann-centroids
-  }
+               embCol: String = "embedding"): DataFrame =
+    probe(spark, path, "ivfProbe", Encoding.all, queries, k, nProbe, 0,
+      idCol, embCol)(_ => Encoding.Flat)
 
   /** The pruned corpus scan a probe performs: probed cell ids → IN-filter
     * on the partition column (directory pruning), minus any tombstoned
-    * ids ([[ivfDelete]]) — every probe path flows through here, so both
-    * the IVF and IVF-PQ layouts honor deletes without a rewrite. Public
-    * so tests can assert the file-level pruning via `inputFiles`. */
+    * ids ([[ivfDelete]]). Every probe ([[probe]]) flows through the same
+    * scan, so all three encodings honor deletes without a rewrite.
+    * Public so tests can assert the file-level pruning via `inputFiles`;
+    * reads a layout of any encoding. */
   def probedScan(spark: org.apache.spark.sql.SparkSession, path: String,
                  queries: DataFrame, cents: Array[Array[Double]], nProbe: Int,
                  idCol: String = "vec_id",
                  embCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
+    requireEncoding(spark, path, "probedScan", Encoding.all)
+    scanCells(spark, path, queries, cents, nProbe, embCol)
+  }
+
+  private def scanCells(spark: SparkSession, path: String, queries: DataFrame,
+                        cents: Array[Array[Double]], nProbe: Int,
+                        embCol: String): DataFrame = {
     val probed = queries
       .select(explode(probesOf(cents, col(embCol), nProbe)).as("cell"))
-      .distinct().as[Int].collect() // SCALE:ann-probed-cells
+      .distinct().collect().map(_.getInt(0)) // SCALE:ann-probed-cells
     val scan = Tables.parquet(spark, s"$path/data")
       .filter(col("cell").isin(probed.toSeq: _*))
-    tombstones(spark, path).fold(scan)(t =>
+    tombstones(spark, path, "c_id").fold(scan)(t =>
       scan.join(broadcast(t), Seq("c_id"), "left_anti"))
   }
 
@@ -746,55 +856,72 @@ object Ann {
     * index maintenance contract: train once, add incrementally (D39b),
     * delete incrementally, compact on maintenance windows. */
   def ivfDelete(spark: org.apache.spark.sql.SparkSession, path: String,
-                ids: DataFrame, idCol: String = "vec_id"): Unit =
+                ids: DataFrame, idCol: String = "vec_id"): Unit = {
+    requireEncoding(spark, path, "ivfDelete", Encoding.all)
     ids.select(col(idCol).cast("long").as("c_id")).distinct()
       .repartition(1).write.mode("append").parquet(s"$path/tombstones")
+  }
 
-  private def tombstones(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) &&
-        fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(Tables.parquet(spark, p.toString).select(col("c_id")))
-    else None
+  /** The tombstoned `key`s of a layout (an IVF layout's `c_id`s, an
+    * [[InvertedIndex]]'s `doc_id`s), or None while it has none. */
+  private[sim] def tombstones(spark: SparkSession, path: String,
+                              key: String): Option[DataFrame] = {
+    val p = new Path(s"$path/tombstones")
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(new Path(p, "*.parquet")) // null or empty: none yet
+    Option(files).filter(_.nonEmpty)
+      .map(_ => Tables.parquet(spark, p.toString).select(col(key)))
   }
 
   /** Maintenance rewrite: fold tombstones into the data files (drop the
     * deleted rows, keep the partitionBy(cell) layout) and clear the
-    * sidecar. Materialize-then-swap like the claim-store compactions —
-    * the maintenance driver is the single writer.
-    *
-    * Swap order is crash-safe: the live directory is renamed ASIDE
-    * (data_old) before the compacted one renames into place, so a failure
-    * at any point leaves a complete directory under a deterministic name
-    * (delete-then-rename would leave NO data directory if the process
-    * died between the two). A leftover data_old from a previous crash is
-    * cleared first; tombstones are deleted last, after the new data is
-    * live, so a crash before that point only re-applies the anti-join. */
+    * sidecar, through [[compactTombstones]]. Materialize-then-swap like
+    * the claim-store compactions — the maintenance driver is the single
+    * writer. */
   def ivfCompactDeletes(spark: org.apache.spark.sql.SparkSession,
                         path: String): Unit = {
-    val ts = tombstones(spark, path).getOrElse(return)
-    val dataP = new org.apache.hadoop.fs.Path(s"$path/data")
-    val tmpP = new org.apache.hadoop.fs.Path(s"$path/data_compacting")
-    val oldP = new org.apache.hadoop.fs.Path(s"$path/data_old")
-    val fs = dataP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Tables.parquet(spark, dataP.toString)
-      .join(broadcast(ts), Seq("c_id"), "left_anti")
-      // clustered write — see ivfBuild
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmpP.toString)
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    fs.rename(dataP, oldP)
-    fs.rename(tmpP, dataP)
-    fs.delete(oldP, true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
+    requireEncoding(spark, path, "ivfCompactDeletes", Encoding.all)
+    compactTombstones(spark, path, "c_id", "data" ->
+      ((rows: DataFrame, out: String) => writeCells(rows, out, "overwrite")))
+  }
+
+  /** The one compaction of a tombstoned layout: each named directory is
+    * rewritten by its writer without the tombstoned `key`s into
+    * `<name>_compacting`, then swapped in. Swap order is crash-safe: the
+    * live directory is renamed ASIDE (`<name>_old`) before the rewrite
+    * renames into place, so a failure at any point leaves a complete
+    * directory under a deterministic name (delete-then-rename would leave
+    * NO directory if the process died between the two). A leftover `_old`
+    * from a prior crash is cleared first. Every rename and delete is
+    * checked, so a failed swap throws before the tombstones are touched
+    * (an unchecked failed rename could land the rewrite INSIDE the live
+    * directory and then drop the tombstones, reviving deleted ids); the
+    * tombstones are deleted last, after every directory is live, so a
+    * crash before that point only re-applies the anti-join. */
+  private[sim] def compactTombstones(spark: SparkSession, path: String,
+      key: String, dirs: (String, (DataFrame, String) => Unit)*): Unit = {
+    val ts = tombstones(spark, path, key).getOrElse(return)
+    val fs = new Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    dirs.foreach { case (name, write) =>
+      val live = new Path(s"$path/$name")
+      val fresh = new Path(s"$path/${name}_compacting")
+      val old = new Path(s"$path/${name}_old")
+      write(Tables.parquet(spark, live.toString)
+        .join(broadcast(ts), Seq(key), "left_anti"), fresh.toString)
+      require(!fs.exists(old) || fs.delete(old, true), s"cannot clear $old")
+      require(fs.rename(live, old), s"cannot move $live aside to $old")
+      require(fs.rename(fresh, live), s"cannot move $fresh to $live")
+      fs.delete(old, true) // a leftover is cleared by the next compaction
+    }
+    fs.delete(new Path(s"$path/tombstones"), true)
   }
 
   /** Convenience overload loading the sidecar centroids. */
   def probedScan(spark: org.apache.spark.sql.SparkSession, path: String,
                  queries: DataFrame, nProbe: Int): DataFrame =
-    probedScan(spark, path, queries, loadCentroids(spark, path), nProbe)
+    scanCells(spark, path, queries,
+      open(spark, path, "probedScan", Encoding.all), nProbe, "embedding")
 
   /** Product-quantization codebooks: one deterministic seeded-k-means
     * codebook per contiguous `dsub`-dim subspace (m = dims / dsub books of
@@ -828,37 +955,26 @@ object Ann {
     */
   def pqEncode(corpus: DataFrame, cbs: Array[Array[Array[Double]]],
                idCol: String = "vec_id",
-               embCol: String = "embedding"): DataFrame = {
-    val codeCols = pqCodeCols(cbs, embCol)
-    corpus.select(col(idCol).as("c_id") +: codeCols: _*)
-      .withColumn("_rn2", pqReconNorm2(cbs))
-  }
+               embCol: String = "embedding"): DataFrame =
+    pqCoded(corpus, cbs, embCol, col(idCol).as("c_id"))
 
-  /** The m PQ code columns `_code0.._codeM-1` for `embCol` — per book an
-    * argmin over ksub plan-time centroid scores on the sliced subvector
-    * (ties to the lower code, the [[cellOf]] rule per subspace). */
-  private def pqCodeCols(cbs: Array[Array[Array[Double]]],
-                         embCol: String): Seq[org.apache.spark.sql.Column] = {
-    val dsub = cbs(0)(0).length
-    cbs.indices.map { j =>
-      cellOf(cbs(j), slice(col(embCol), j * dsub + 1, dsub)).as(s"_code$j")
-    }
-  }
-
-  /** Σ_j |c_j[code_j]|² from the `_code*` columns: |c|² per (book, code)
+  /** The one PQ encode pass (of [[pqEncode]] and both PQ encodings):
+    * the `keep` columns, then the m code columns `_code0.._codeM-1` of
+    * `src` — per book an argmin over ksub plan-time centroid scores on the
+    * sliced subvector (ties to the lower code, the [[cellOf]] rule per
+    * subspace) — and `_rn2` = Σ_j |c_j[code_j]|². |c|² per (book, code)
     * is an exact sequential plan-time double fold (dims ascending — the
     * same fold the oracle's list_sum over the replayed centroid runs);
     * the Σ_j is a left-associative + chain mirrored verbatim in SQL. */
-  private def pqReconNorm2(cbs: Array[Array[Array[Double]]])
-      : org.apache.spark.sql.Column = {
-    val norms: Array[Array[Double]] = cbs.map(_.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      s
-    })
-    norms.indices.map { j =>
+  private def pqCoded(rows: DataFrame, cbs: Array[Array[Array[Double]]],
+                      src: String, keep: Column*): DataFrame = {
+    val dsub = cbs(0)(0).length
+    val norms = cbs.map(_.map(c => dotSeq(c, c)))
+    rows.select(keep ++ cbs.indices.map { j =>
+      cellOf(cbs(j), slice(col(src), j * dsub + 1, dsub)).as(s"_code$j")
+    }: _*).withColumn("_rn2", cbs.indices.map { j =>
       element_at(typedlit(norms(j)), col(s"_code$j") + 1)
-    }.reduceLeft(_ + _)
+    }.reduceLeft(_ + _))
   }
 
   /** PQ asymmetric-distance top-k with exact refine (the FAISS
@@ -881,19 +997,16 @@ object Ann {
              ksub: Int = 16, dims: Int = 64, rerank: Int = 64,
              idCol: String = "vec_id", embCol: String = "embedding",
              books: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     // train/add separation: a pre-trained codebook set (FAISS's train()
     // step, or the ivfPqBuild sidecar) skips the in-plan training
     val cbs = books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))
     val coded = pqEncode(corpus, cbs, idCol, embCol)
     val q = broadcast(queries.select(
-      col(idCol).as("q_id") +: (pqDtCols(cbs, embCol) :+
-        VectorFunctions.dot(col(embCol), col(embCol)).as("_qn2")): _*))
+      col(idCol).as("q_id") +: pqQueryCols(cbs, embCol): _*))
     val adc = coded.join(q, col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), pqAdcSim(cbs.length).as("sim"))
-      .as[Scored]
-    refineExact(queries, corpus, rankPruned(adc, rerank), k, idCol, embCol)
+      .select(col("q_id"), col("c_id"), adcSim(Seq.empty, cbs.length).as("sim"))
+    refineExact(queries, candidates(corpus, idCol, embCol),
+      rankPruned(adc, rerank), k, idCol, embCol)
   }
 
   /** IVF × PQ × refine — the full FAISS-IVFPQ query shape, Spark-native:
@@ -907,32 +1020,19 @@ object Ann {
     * into the PQ codes for tighter quantization; codes here are raw-space
     * so one code table serves every probe list — see
     * [[ivfPqResidualTopK]] for the residual-encoded variant.)
+    *
+    * The in-memory [[topK]] of the [[Encoding.Pq]] encoding: the same
+    * [[rankCells]] plan [[ivfPqProbe]] runs over a built layout.
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 nlist: Int = 16, nProbe: Int = 4, m: Int = 4, ksub: Int = 16,
                 dims: Int = 64, rerank: Int = 64, idCol: String = "vec_id",
                 embCol: String = "embedding",
                 coarse: Option[Array[Array[Double]]] = None,
-                books: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val cbs = books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))
-    val coded = corpus.select(col(idCol).as("c_id") +:
-        (cellOf(cents, col(embCol)).as("cell") +: pqCodeCols(cbs, embCol)): _*)
-      .withColumn("_rn2", pqReconNorm2(cbs))
-    val q = broadcast(queries.select(
-      col(idCol).as("q_id") +:
-        (explode(probesOf(cents, col(embCol), nProbe)).as("cell") +:
-          (pqDtCols(cbs, embCol) :+
-            VectorFunctions.dot(col(embCol), col(embCol)).as("_qn2"))): _*))
-    val adc = coded.join(q, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), pqAdcSim(cbs.length).as("sim"))
-      .as[Scored]
-    refineExact(queries, corpus, rankPruned(adc, rerank), k, idCol, embCol)
-  }
+                books: Option[Array[Array[Array[Double]]]] = None): DataFrame =
+    topK(queries, corpus, nlist, coarse, k, nProbe, rerank, idCol, embCol)(
+      _ => Encoding.Pq(
+        books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))))
 
   /** The float-rounded coarse residual e − cent_{cell} (FAISS's encoding
     * input, faiss IndexIVFPQ::train_residual): double subtraction against
@@ -958,11 +1058,8 @@ object Ann {
                           idCol: String = "vec_id",
                           embCol: String = "embedding")
       : Array[Array[Array[Double]]] = {
-    val res = corpus
-      .withColumn("_cell", cellOf(cents, col(embCol)))
-      .select(col(idCol),
-        residualOf(cents, col(embCol), col("_cell")).as("_res"))
-    pqCodebooks(res, m, ksub, dims, idCol, "_res")
+    pqCodebooks(corpus.select(col(idCol), residualOf(cents, col(embCol),
+      cellOf(cents, col(embCol))).as("_res")), m, ksub, dims, idCol, "_res")
   }
 
   /** Residual-encoded IVF-PQ (the FAISS IndexIVFPQ default, vs
@@ -978,7 +1075,8 @@ object Ann {
     * heap prune and exact refine as the raw-space plan; the corpus never
     * shuffles. All derived literals are i-ascending sequential folds, the
     * exact `list_sum(list_transform(...))` image the oracle replays, so
-    * sims match bit-for-bit.
+    * sims match bit-for-bit. The in-memory [[topK]] of the
+    * [[Encoding.ResidualPq]] encoding.
     */
   def ivfPqResidualTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                         nlist: Int = 16, nProbe: Int = 4, m: Int = 4,
@@ -987,163 +1085,57 @@ object Ann {
                         embCol: String = "embedding",
                         coarse: Option[Array[Array[Double]]] = None,
                         books: Option[Array[Array[Array[Double]]]] = None)
-      : DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val cbs = books.getOrElse(
-      pqResidualCodebooks(corpus, cents, m, ksub, dims, idCol, embCol))
-    val codedRn = residualCoded(corpus, cents, cbs, idCol, embCol,
-      keepEmb = false)
-    val q = residualQuerySide(queries, cents, cbs, nProbe, idCol, embCol)
-    val adc = codedRn.join(q, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        residualAdcSim(cbs.length).as("sim"))
-      .as[Scored]
-    refineExact(queries, corpus, rankPruned(adc, rerank), k, idCol, embCol)
-  }
+      : DataFrame =
+    topK(queries, corpus, nlist, coarse, k, nProbe, rerank, idCol, embCol)(
+      cents => Encoding.ResidualPq(cents, books.getOrElse(
+        pqResidualCodebooks(corpus, cents, m, ksub, dims, idCol, embCol))))
 
-  /** The residual encoding's plan-time literal tables: ‖cent‖² per cell,
-    * ‖codeword‖² per (book, code), and the cross term cent_subj·codeword
-    * per (book, cell, code) — O(nlist·m·ksub) doubles, all i-ascending
-    * sequential folds (the exact `list_sum(list_transform(...))` image
-    * the oracle replays). */
+  /** The residual encoding's plan-time literal tables: ‖cent‖² per cell
+    * and the cross term cent_subj·codeword per (book, cell, code) —
+    * O(nlist·m·ksub) doubles, all i-ascending sequential folds (the exact
+    * `list_sum(list_transform(...))` image the oracle replays). */
   private def residualTables(cents: Array[Array[Double]],
                              cbs: Array[Array[Array[Double]]])
-      : (Array[Double], Array[Array[Double]], Array[Array[Array[Double]]]) = {
+      : (Array[Double], Array[Array[Array[Double]]]) = {
     val dsub = cbs(0)(0).length
-    def fold2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }; s
-    }
-    val cn2 = cents.map(fold2)
-    val rn = cbs.map(_.map(fold2))
     val cd = Array.tabulate(cbs.length) { j =>
-      Array.tabulate(cents.length) { cl =>
-        Array.tabulate(cbs(j).length) { r =>
-          var s = 0.0; var i = 0
-          while (i < dsub) {
-            s += cents(cl)(j * dsub + i) * cbs(j)(r)(i); i += 1
-          }
-          s
-        }
+      Array.tabulate(cents.length, cbs(j).length) { (cl, r) =>
+        dotSeq(cents(cl).slice(j * dsub, (j + 1) * dsub), cbs(j)(r))
       }
     }
-    (cn2, rn, cd)
-  }
-
-  /** Residual-encoded corpus rows `(c_id[, _c_emb], cell, _code*, _rn2)`
-    * — the map-only encode pass shared by [[ivfPqResidualTopK]] and the
-    * at-rest [[ivfPqResidualBuild]]; `_rn2` bakes every cross term in,
-    * so any consumer scores with m+1 lookups and never re-derives the
-    * reconstruction norm. */
-  private def residualCoded(corpus: DataFrame, cents: Array[Array[Double]],
-                            cbs: Array[Array[Array[Double]]], idCol: String,
-                            embCol: String, keepEmb: Boolean): DataFrame = {
-    val dsub = cbs(0)(0).length
-    val (cn2, rn, cd) = residualTables(cents, cbs)
-    val keep =
-      if (keepEmb) Seq(col("_ce").cast("array<float>").as("_c_emb"))
-      else Seq.empty
-    val coded = corpus.select(col(idCol).as("c_id"), col(embCol).as("_ce"))
-      .withColumn("cell", cellOf(cents, col("_ce")))
-      .withColumn("_res", residualOf(cents, col("_ce"), col("cell")))
-      .select(col("c_id") +: col("cell") +: (cbs.indices.map(j =>
-        cellOf(cbs(j), slice(col("_res"), j * dsub + 1, dsub))
-          .as(s"_code$j")) ++ keep): _*)
-    val rn2 = element_at(typedlit(cn2), col("cell") + 1) +
-      lit(2.0) * cbs.indices.map(j =>
-        element_at(element_at(typedlit(cd(j)), col("cell") + 1),
-          col(s"_code$j") + 1)).reduceLeft(_ + _) +
-      cbs.indices.map(j =>
-        element_at(typedlit(rn(j)), col(s"_code$j") + 1)).reduceLeft(_ + _)
-    coded.withColumn("_rn2", rn2)
-  }
-
-  /** Broadcast query side of the residual ADC: per probed cell, q·cent
-    * (an element_at over nlist literal dots, like the `_dt*` tables),
-    * the m distance tables and ‖q‖². */
-  private def residualQuerySide(queries: DataFrame,
-                                cents: Array[Array[Double]],
-                                cbs: Array[Array[Array[Double]]],
-                                nProbe: Int, idCol: String,
-                                embCol: String): DataFrame = {
-    val qpre = queries.select(
-      col(idCol).as("q_id"), col(embCol).as("_qe"),
-      explode(probesOf(cents, col(embCol), nProbe)).as("cell"))
-    broadcast(qpre.select(
-      col("q_id") +: col("cell") +:
-        (element_at(array(cents.map(c =>
-            VectorFunctions.dotFD(col("_qe"), typedlit(c))): _*),
-          col("cell") + 1).as("_qc") +:
-          (pqDtCols(cbs, "_qe") :+
-            VectorFunctions.dot(col("_qe"), col("_qe")).as("_qn2"))): _*))
-  }
-
-  /** Residual ADC cosine from the joined code/table columns:
-    * (q·cent + Σ_j dt_j[code_j]) / (‖q‖·‖recon‖), sums left-associative. */
-  private def residualAdcSim(m: Int): org.apache.spark.sql.Column = {
-    val adot = (col("_qc") +: (0 until m).map(j =>
-      element_at(col(s"_dt$j"), col(s"_code$j") + 1))).reduceLeft(_ + _)
-    adot / (sqrt(col("_qn2")) * sqrt(col("_rn2")))
+    (cents.map(c => dotSeq(c, c)), cd)
   }
 
   /** Materialize the residual-encoded IVF-PQ layout — the FAISS
-    * IndexIVFPQ DEFAULT encoding, at rest through the [[ivfPqBuild]]
-    * physical shape: corpus partitioned by coarse cell with the residual
+    * IndexIVFPQ DEFAULT encoding, at rest through the same [[build]] as
+    * [[ivfPqBuild]]: corpus partitioned by coarse cell with the residual
     * codes, the raw vector AND the cross-term-baked reconstruction norm
-    * inline in each row (scan compressed, refine from the same row),
-    * plus centroid/codebook sidecars and an `encoding` marker so a probe
-    * refuses a layout whose codes it would misread. One encode pass;
-    * every future query batch pays only the probe. */
+    * inline in each row (scan compressed, refine from the same row), plus
+    * centroid/codebook sidecars and the `residual` encoding marker, so a
+    * raw-space entry point refuses codes it would misread. One encode
+    * pass; every future query batch pays only the probe. */
   def ivfPqResidualBuild(corpus: DataFrame, path: String, nlist: Int = 16,
                          m: Int = 4, ksub: Int = 16, dims: Int = 64,
                          idCol: String = "vec_id",
                          embCol: String = "embedding",
                          coarse: Option[Array[Array[Double]]] = None,
                          books: Option[Array[Array[Array[Double]]]] = None)
-      : Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val cbs = books.getOrElse(
-      pqResidualCodebooks(corpus, cents, m, ksub, dims, idCol, embCol))
-    residualCoded(corpus, cents, cbs, idCol, embCol, keepEmb = true)
-      // clustered write — see ivfBuild
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cbs.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, r) => (j, r, c.toSeq) }
-    }.toSeq.toDF("book", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    Seq("residual").toDF("encoding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/encoding")
-  }
+      : Unit =
+    build(corpus, path, nlist, coarse, idCol, embCol)(cents =>
+      Encoding.ResidualPq(cents, books.getOrElse(
+        pqResidualCodebooks(corpus, cents, m, ksub, dims, idCol, embCol))))
 
   /** Incremental ADD to a residual-encoded layout — the [[ivfPqAdd]]
     * contract with residual codes: new vectors encode against the STORED
     * coarse centroids and residual codebooks (add never retrains) and
     * append inside their cell directories; the probe sees one homogeneous
-    * layout. */
+    * layout. Refuses any layout not marked `residual`. */
   def ivfPqResidualAdd(newVecs: DataFrame, path: String,
                        idCol: String = "vec_id",
-                       embCol: String = "embedding"): Unit = {
-    val spark = newVecs.sparkSession
-    require(isResidualLayout(spark, path),
-      s"ivfPqResidualAdd: $path carries no residual encoding marker")
-    val cents = loadCentroids(spark, path)
-    val cbs = loadCodebooks(spark, path)
-    residualCoded(newVecs, cents, cbs, idCol, embCol, keepEmb = true)
-      // clustered write — see ivfBuild
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/data")
-  }
+                       embCol: String = "embedding"): Unit =
+    add(newVecs, path, "ivfPqResidualAdd", "residual", idCol, embCol)(
+      cents => Encoding.ResidualPq(cents,
+        loadCodebooks(newVecs.sparkSession, path)))
 
   /** Query the residual-encoded layout: probed cells → partition
     * IN-filter (directory pruning, nProbe/nlist of the lake read), ADC
@@ -1151,67 +1143,38 @@ object Ann {
     * into the row at build time), exact refine from the raw vectors in
     * the scanned rows. Identical ranking to [[ivfPqResidualTopK]] (same
     * deterministic quantizers), so the at-rest round-trip shares its
-    * hash oracle. Honors [[ivfDelete]] tombstones via [[probedScan]]. */
+    * hash oracle. Honors [[ivfDelete]] tombstones via [[probedScan]].
+    * Refuses any layout not marked `residual`. */
   def ivfPqResidualProbe(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: DataFrame, k: Int,
                          nProbe: Int = 4, rerank: Int = 64,
                          idCol: String = "vec_id",
-                         embCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    require(isResidualLayout(spark, path),
-      s"ivfPqResidualProbe: $path carries no residual encoding marker — " +
-        "its codes are raw-space (use ivfPqProbe) or the layout is foreign")
-    val cents = loadCentroids(spark, path)
-    val cbs = loadCodebooks(spark, path)
-    val scan = probedScan(spark, path, queries, cents, nProbe, idCol, embCol)
-    val q = residualQuerySide(queries, cents, cbs, nProbe, idCol, embCol)
-    val adc = scan.join(q, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        residualAdcSim(cbs.length).as("sim"))
-      .as[Scored]
-    val shortlist = rankPruned(adc, rerank).select("q_id", "c_id")
-    val qRaw = broadcast(queries.select(col(idCol).as("q_id"),
-      col(embCol).as("_q_emb")))
-    val exact = scan.select(col("c_id"), col("_c_emb"))
-      .join(broadcast(shortlist), Seq("c_id"))
-      .join(qRaw, Seq("q_id"))
-      .select(col("q_id"), col("c_id"),
-        VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
-      .as[Scored]
-    rankPruned(exact, k)
-  }
+                         embCol: String = "embedding"): DataFrame =
+    probe(spark, path, "ivfPqResidualProbe", Seq("residual"), queries, k,
+      nProbe, rerank, idCol, embCol)(
+      cents => Encoding.ResidualPq(cents, loadCodebooks(spark, path)))
 
-  /** True iff the layout's `encoding` sidecar says residual — O(1)
-    * metadata read, the guard [[ivfPqResidualProbe]] requires. */
-  private def isResidualLayout(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/encoding")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && Tables.parquet(spark, p.toString)
-      .filter(col("encoding") === "residual").count() > 0
-  }
-
-  /** Query-side ADC distance tables `_dt0.._dtM-1`: dt_j[r] = q_subj ·
-    * c_{j,r}, the dotFD fold — m·ksub dots computed once per query,
-    * broadcast with it. */
-  private def pqDtCols(cbs: Array[Array[Array[Double]]],
-                       embCol: String): Seq[org.apache.spark.sql.Column] = {
+  /** The PQ query side: ADC distance tables `_dt0.._dtM-1` (dt_j[r] =
+    * q_subj · c_{j,r}, the dotFD fold — m·ksub dots computed once per
+    * query, broadcast with it) and ‖q‖² `_qn2`. */
+  private def pqQueryCols(cbs: Array[Array[Array[Double]]],
+                          embCol: String): Seq[Column] = {
     val dsub = cbs(0)(0).length
     cbs.indices.map { j =>
       array(cbs(j).indices.map { r =>
         VectorFunctions.dotFD(slice(col(embCol), j * dsub + 1, dsub),
           typedlit(cbs(j)(r)))
       }: _*).as(s"_dt$j")
-    }
+    } :+ VectorFunctions.dot(col(embCol), col(embCol)).as("_qn2")
   }
 
   /** ADC cosine from the joined code/table columns:
-    * Σ_j dt_j[code_j] / (‖q‖·‖recon‖), sums left-associative. */
-  private def pqAdcSim(m: Int): org.apache.spark.sql.Column = {
-    val adot = (0 until m).map { j =>
+    * (lead… + Σ_j dt_j[code_j]) / (‖q‖·‖recon‖), sums left-associative;
+    * the residual encoding leads with q·cent. */
+  private def adcSim(lead: Seq[Column], m: Int): Column = {
+    val adot = (lead ++ (0 until m).map { j =>
       element_at(col(s"_dt$j"), col(s"_code$j") + 1)
-    }.reduceLeft(_ + _)
+    }).reduceLeft(_ + _)
     adot / (sqrt(col("_qn2")) * sqrt(col("_rn2")))
   }
 
@@ -1260,8 +1223,6 @@ object Ann {
               idCol: String = "vec_id", embCol: String = "embedding",
               stats: Option[(Array[Double], Array[Double])] = None)
       : DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (mn, mx) = stats.getOrElse(sq8Stats(corpus, embCol))
     val sc = mn.indices.map(j => (mx(j) - mn(j)) / 255.0).toArray
     val coded = corpus.select(col(idCol).as("c_id"),
@@ -1275,7 +1236,6 @@ object Ann {
       .select(col("q_id"), col("c_id"),
         (VectorFunctions.dotFD(col("_q_emb"), col("_recon")) /
           (sqrt(col("_qn2")) * sqrt(col("_rn2")))).as("sim"))
-      .as[Scored]
     rankPruned(sims, k)
   }
 
@@ -1295,8 +1255,6 @@ object Ann {
                  embCol: String = "embedding",
                  stats: Option[(Array[Double], Array[Double])] = None)
       : DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (mn, mx) = stats.getOrElse(sq8Stats(corpus, embCol))
     require(mn.length <= 64, s"binaryTopK packs into one Long: ≤64 dims")
     val mid = mn.indices.map(j => (mn(j) + mx(j)) / 2.0).toArray
@@ -1315,36 +1273,40 @@ object Ann {
       .select(col("q_id"), col("c_id"),
         (-bit_count(col("_q_sig").bitwiseXOR(col("_c_sig"))))
           .cast("double").as("sim"))
-      .as[Scored]
-    refineExact(queries, corpus, rankPruned(ham, rerank), k, idCol, embCol)
+    refineExact(queries, candidates(corpus, idCol, embCol),
+      rankPruned(ham, rerank), k, idCol, embCol)
   }
 
+  /** A corpus as (c_id, _c_emb) candidate rows. */
+  private def candidates(corpus: DataFrame, idCol: String,
+                         embCol: String): DataFrame =
+    corpus.select(col(idCol).as("c_id"), col(embCol).as("_c_emb"))
+
   /** Exact-cosine re-scoring of a (q_id, c_id) shortlist: raw vectors are
-    * fetched via a broadcast semi-join (the corpus never reshuffles) and
-    * only O(|Q|·shortlist) exact folds run. */
-  private def refineExact(queries: DataFrame, corpus: DataFrame,
+    * fetched from the (c_id, _c_emb) `cands` rows via a broadcast
+    * semi-join (the corpus never reshuffles) and only O(|Q|·shortlist)
+    * exact folds run. */
+  private def refineExact(queries: DataFrame, cands: DataFrame,
                           shortlist: DataFrame, k: Int, idCol: String,
                           embCol: String): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val qRaw = broadcast(queries.select(col(idCol).as("q_id"),
       col(embCol).as("_q_emb")))
-    val exact = corpus.select(col(idCol).as("c_id"), col(embCol).as("_c_emb"))
+    val exact = cands.select(col("c_id"), col("_c_emb"))
       .join(broadcast(shortlist.select("q_id", "c_id")), Seq("c_id"))
       .join(qRaw, Seq("q_id"))
       .select(col("q_id"), col("c_id"),
         VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
-      .as[Scored]
     rankPruned(exact, k)
   }
 
-  /** Per-partition top-k prune + global rank (shared by the exact and the
-    * PQ scans): the global top-k under (sim DESC, c_id ASC) is a subset of
-    * the union of per-partition top-k under the same total order. */
-  private[sim] def rankPruned(sims: Dataset[Scored], k: Int): DataFrame = {
+  /** The one ranking step of every top-k here: per-partition top-k prune
+    * + global rank of (q_id, c_id, sim) rows. The global top-k under
+    * (sim DESC, c_id ASC) is a subset of the union of per-partition top-k
+    * under the same total order. */
+  private[sim] def rankPruned(sims: DataFrame, k: Int): DataFrame = {
     val spark = sims.sparkSession
     import spark.implicits._
-    val pruned: Dataset[Scored] = sims.mapPartitions { it =>
+    val pruned: Dataset[Scored] = sims.as[Scored].mapPartitions { it =>
       val heaps = scala.collection.mutable.Map.empty[Long,
         scala.collection.mutable.PriorityQueue[Scored]]
       val ord = Ordering.by[Scored, (Double, Long)](s => (-s.sim, s.c_id))
@@ -1421,15 +1383,10 @@ object Ann {
       withBases(queries, col(embCol),
         Seq(col(idCol).as("q_id"), col(embCol).as("_q_emb"))),
       hammingProbes, Seq(col("q_id"), col("_q_emb"))))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id").asc)
-    bucketed.join(q, Seq("t", "bucket"))
+    rankPruned(bucketed.join(q, Seq("t", "bucket"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         VectorFunctions.cosine(col("_q_emb"), col("_c_emb")).as("sim"))
-      .distinct() // a pair colliding in several tables ranks once
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("rank"),
-        Exact.rnd4(col("sim")).as("sim"))
+      .distinct(), k) // a pair colliding in several tables ranks once
   }
 }

@@ -32,11 +32,11 @@ import graft.functions.TextFunctions
   *    — O(deleted) work, so corpus totals stay exact without ever
   *    re-scanning the postings. Queries anti-join the broadcast-small
   *    tombstones until compaction.
-  *  - [[compact]]: fold tombstones into postings + doclens with the
-  *    crash-safe rename-aside swap ([[Ann.ivfCompactDeletes]]'s order: a
-  *    failure at any point leaves a complete directory under a
-  *    deterministic name; a leftover `_old` from a prior crash is cleared
-  *    first; tombstones are removed last).
+  *  - [[compact]]: fold tombstones into postings + doclens through the
+  *    IVF layouts' one compaction ([[Ann.compactTombstones]]: a checked
+  *    crash-safe rename-aside swap — a failure at any point leaves a
+  *    complete directory under a deterministic name; a leftover `_old`
+  *    from a prior crash is cleared first; tombstones are removed last).
   *
   * Stats as batch-partial rows (one per build/add/delete) make corpus
   * totals an O(#batches) aggregate at query time — never an O(docs) scan —
@@ -128,7 +128,7 @@ object InvertedIndex {
     val live = ledger
       .join(broadcast(ids.select(col(idCol).cast(idType).as("doc_id"))
         .distinct()), Seq("doc_id"))
-    val dead = tombstones(spark, path)
+    val dead = Ann.tombstones(spark, path, "doc_id")
       .fold(live)(t => live.join(broadcast(t), Seq("doc_id"), "left_anti"))
       .persist()
     try {
@@ -140,42 +140,18 @@ object InvertedIndex {
     } finally dead.unpersist(false)
   }
 
-  private def tombstones(spark: SparkSession,
-                         path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) &&
-        fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(Tables.parquet(spark, p.toString).select(col("doc_id")))
-    else None
-  }
-
   /** Maintenance rewrite: fold tombstones into postings and doclens,
-    * keeping the bucket layout. Crash-safe rename-aside swap per
-    * directory ([[Ann.ivfCompactDeletes]]'s order); tombstones are
-    * removed last, after both swaps, so a crash at any earlier point only
-    * re-applies the anti-join on the next query. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val ts = tombstones(spark, path).getOrElse(return)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def swap(name: String)(rewrite: (DataFrame, String) => Unit): Unit = {
-      val dataP = new org.apache.hadoop.fs.Path(s"$path/$name")
-      val tmpP = new org.apache.hadoop.fs.Path(s"$path/${name}_compacting")
-      val oldP = new org.apache.hadoop.fs.Path(s"$path/${name}_old")
-      val fs = dataP.getFileSystem(conf)
-      rewrite(Tables.parquet(spark, dataP.toString)
-        .join(broadcast(ts), Seq("doc_id"), "left_anti"), tmpP.toString)
-      if (fs.exists(oldP)) fs.delete(oldP, true)
-      fs.rename(dataP, oldP)
-      fs.rename(tmpP, dataP)
-      fs.delete(oldP, true)
-    }
-    swap("postings")((df, out) =>
-      df.write.mode("overwrite").partitionBy("bucket").parquet(out))
-    swap("doclens")((df, out) => df.write.mode("overwrite").parquet(out))
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-  }
+    * keeping the bucket layout, through the IVF layouts' one compaction
+    * ([[Ann.compactTombstones]]: checked crash-safe rename-aside swap per
+    * directory; tombstones removed last, after both swaps, so a crash or
+    * failed rename at any earlier point only re-applies the anti-join on
+    * the next query). */
+  def compact(spark: SparkSession, path: String): Unit =
+    Ann.compactTombstones(spark, path, "doc_id",
+      "postings" -> ((df: DataFrame, out: String) =>
+        df.write.mode("overwrite").partitionBy("bucket").parquet(out)),
+      "doclens" -> ((df: DataFrame, out: String) =>
+        df.write.mode("overwrite").parquet(out)))
 
   /** The pruned postings scan a query performs: query-term buckets →
     * partition IN-filter (directory pruning, computed driver-side from the
@@ -189,7 +165,7 @@ object InvertedIndex {
     val scan = Tables.parquet(spark, s"$path/postings")
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
-    tombstones(spark, path).fold(scan)(t =>
+    Ann.tombstones(spark, path, "doc_id").fold(scan)(t =>
       scan.join(broadcast(t), Seq("doc_id"), "left_anti"))
   }
 

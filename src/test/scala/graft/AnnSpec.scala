@@ -384,6 +384,80 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  // One layout per encoding, built once with the default quantizers (the
+  // same seeded centroids ivfTopK trains), for the marker tests below.
+  private lazy val flatLayout = {
+    val p = Fixtures.dir("mark_flat"); Ann.ivfBuild(emb, p, nlist = 16); p
+  }
+  private lazy val pqLayout = {
+    val p = Fixtures.dir("mark_pq")
+    Ann.ivfPqBuild(emb, p, nlist = 16, m = 4, ksub = 16, dims = 64); p
+  }
+  private lazy val resLayout = {
+    val p = Fixtures.dir("mark_res")
+    Ann.ivfPqResidualBuild(emb, p, nlist = 16, m = 4, ksub = 16, dims = 64); p
+  }
+
+  /** `body` throws the marker refusal: the entry point's accepted
+    * encodings and the layout's own, both named. */
+  private def refused(accepts: String, found: String)(body: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](body)
+    assert(e.getMessage.contains(s"reads encodings $accepts;") &&
+      e.getMessage.contains(s"has encoding $found"), e.getMessage)
+  }
+
+  test("flat probe over an IVF-PQ and a residual layout equals ivfTopK") {
+    // the flat probe ranks exact cosine over the stored raw vectors, so it
+    // reads a layout of any encoding (perfbench's ivf_probe_0 probes its
+    // IVF-PQ index this way); same quantizer seed, same ranking
+    val inMem = Ann.ivfTopK(qs, emb, k = 5, nlist = 16, nProbe = 4).cache()
+    for (path <- Seq(pqLayout, resLayout)) {
+      val probed = Ann.ivfProbe(spark, path, qs, k = 5, nProbe = 4)
+      assert(probed.exceptAll(inMem).isEmpty &&
+        inMem.exceptAll(probed).isEmpty,
+        s"flat probe of $path must equal the in-memory ivf ranking")
+    }
+    inMem.unpersist(false)
+  }
+
+  test("ivf layouts: each entry point refuses an encoding it would " +
+       "misread, and an unmarked layout") {
+    val half = emb.filter(col("vec_id") % 2 === 1)
+    def files(p: String) = spark.read.parquet(s"$p/data").inputFiles.length
+    // raw-space entry points refuse residual codes (and flat layouts,
+    // which carry no codes at all) — before anything is read or appended
+    val resFiles = files(resLayout)
+    refused("pq", "residual")(Ann.ivfPqProbe(spark, resLayout, qs, k = 5))
+    refused("pq", "residual")(Ann.ivfPqAdd(half, resLayout))
+    assert(files(resLayout) == resFiles, "a refused add appended files")
+    refused("pq", "flat")(Ann.ivfPqProbe(spark, flatLayout, qs, k = 5))
+    refused("pq", "flat")(Ann.ivfPqAdd(half, flatLayout))
+    // and the reverse: residual entry points refuse raw-space and flat
+    for ((path, enc) <- Seq(pqLayout -> "pq", flatLayout -> "flat")) {
+      refused("residual", enc)(
+        Ann.ivfPqResidualProbe(spark, path, qs, k = 5))
+      refused("residual", enc)(Ann.ivfPqResidualAdd(half, path))
+    }
+    // a layout without its marker (a build that died before its last
+    // step) is refused by every entry point, the flat ones included
+    val unmarked = Fixtures.dir("mark_none")
+    Ann.ivfPqBuild(emb, unmarked, nlist = 8, m = 4, ksub = 16, dims = 64)
+    assert(new java.io.File(s"$unmarked/encoding").delete())
+    val any = "flat, pq, residual"
+    refused(any, "none")(Ann.ivfProbe(spark, unmarked, qs, k = 5))
+    refused(any, "none")(Ann.probedScan(spark, unmarked, qs, nProbe = 4))
+    refused(any, "none")(Ann.probedScan(spark, unmarked, qs,
+      Ann.seededCentroids(emb, nlist = 8), nProbe = 4))
+    refused(any, "none")(Ann.ivfDelete(spark, unmarked, qs))
+    refused(any, "none")(Ann.ivfCompactDeletes(spark, unmarked))
+    refused("pq", "none")(Ann.ivfPqProbe(spark, unmarked, qs, k = 5))
+    refused("pq", "none")(Ann.ivfPqAdd(half, unmarked))
+    refused("residual", "none")(
+      Ann.ivfPqResidualProbe(spark, unmarked, qs, k = 5))
+    assert(!new java.io.File(s"$unmarked/tombstones").exists(),
+      "a refused delete wrote tombstones")
+  }
+
   test("sq8: recall vs brute force is near-exact; recon error within grid") {
     val (mn, mx) = Ann.sq8Stats(emb)
     val sq = Ann.sq8TopK(qs, emb, k = 5, stats = Some((mn, mx))).cache()
@@ -581,6 +655,37 @@ class AnnSpec extends SparkSpec {
     val got = Ann.ivfProbe(spark, idx, q, k = 5, nProbe = 3)
       .select("q_id", "c_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(got == expect, "recovery compaction changed probe results")
+  }
+
+  test("ivf compaction: a failed rename raises before the tombstones are " +
+    "touched, answers unchanged") {
+    import spark.implicits._
+    val idx = Fixtures.dir("ivf_failswap")
+    Ann.ivfBuild(emb, idx, nlist = 8)
+    val q = emb.filter($"vec_id" < 5)
+    Ann.ivfDelete(spark, idx, emb.filter($"vec_id" % 7 === 0)
+      .select($"vec_id"))
+    def answers = Ann.ivfProbe(spark, idx, q, k = 5, nProbe = 3)
+      .select("q_id", "c_id", "rank").as[(Long, Long, Int)].collect().toSet
+    val expect = answers
+    // the same layout through a file system whose data -> data_old
+    // rename fails: unchecked, the second rename would land the rewrite
+    // INSIDE the live data and the tombstone delete would revive ids
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failrename.impl", classOf[FailRenameFs].getName)
+    val e = intercept[IllegalArgumentException] {
+      Ann.ivfCompactDeletes(spark, s"failrename://$idx")
+    }
+    assert(e.getMessage.contains("data_old"), e.getMessage)
+    assert(new java.io.File(s"$idx/tombstones").isDirectory,
+      "a failed swap must keep the tombstones")
+    assert(!new java.io.File(s"$idx/data/data_compacting").exists(),
+      "the rewrite must not land inside the live data")
+    assert(answers == expect, "a failed swap changed probe results")
+    // the next compaction overwrites the leftover rewrite and completes
+    Ann.ivfCompactDeletes(spark, idx)
+    assert(!new java.io.File(s"$idx/tombstones").exists())
+    assert(answers == expect, "recovery compaction changed probe results")
   }
 
   test("filtered search: only same-attribute candidates, subset of unfiltered") {
