@@ -1,15 +1,23 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
+  GroupReadSupport}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelationWithTable, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetReadSupport, ParquetToSparkSchemaConverter}
+  ParquetReadSupport, ParquetToSparkSchemaConverter,
+  SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, StructType}
 
 /** Readers for the driver-generated testdata lake (TESTDATA.md).
   *
@@ -69,6 +77,75 @@ object Tables {
         spark.read.schema(schema).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
+  }
+
+  /** Write a sidecar — a few rows of index metadata (centroids, codebooks,
+    * a bucket count) — as ONE parquet file under `dir`, replacing what was
+    * there, on the driver through parquet-hadoop: no Spark job. The file
+    * has the parquet schema Spark's writer derives from `schema` and
+    * carries `schema` in its footer like a Spark-written file, so
+    * [[parquet]] and `spark.read.parquet` read it as before. Columns are
+    * non-null ints, doubles or arrays of them. */
+  def writeSidecar(spark: SparkSession, dir: String, schema: StructType,
+                   rows: Seq[Row]): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val d = new Path(dir)
+    d.getFileSystem(conf).delete(d, true)
+    val message = new SparkToParquetSchemaConverter().convert(schema)
+    val groups = new SimpleGroupFactory(message)
+    val out = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(d, SidecarFile), conf))
+      .withConf(conf).withType(message)
+      .withExtraMetaData(
+        Map(ParquetReadSupport.SPARK_METADATA_KEY -> schema.json).asJava)
+      .build()
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      schema.fields.indices.foreach(i =>
+        put(g, schema(i).name, schema(i).dataType, r.get(i)))
+      out.write(g)
+    } finally out.close()
+  }
+
+  /** The rows of a sidecar dir under `schema`, read on the driver through
+    * parquet-hadoop (no Spark job): the read half of [[writeSidecar]].
+    * Arrays come back as `Seq`s. */
+  def readSidecar(spark: SparkSession, dir: String,
+                  schema: StructType): Seq[Row] = {
+    val in = ParquetReader.builder(new GroupReadSupport(),
+      new Path(dir, SidecarFile)).withConf(spark.sessionState.newHadoopConf())
+      .build()
+    try Iterator.continually(in.read()).takeWhile(_ != null)
+      .map(g => Row.fromSeq(schema.fields.toSeq.map(c =>
+        get(g, c.name, c.dataType))))
+      .toVector
+    finally in.close()
+  }
+
+  private val SidecarFile = "part-00000.parquet"
+
+  /** One sidecar value into `g`, in the standard three-level LIST layout
+    * (`list` / `element`) for arrays, as Spark writes them. */
+  private def put(g: Group, name: String, t: DataType, v: Any): Unit =
+    (t, v) match {
+      case (IntegerType, i: Int) => g.append(name, i)
+      case (DoubleType, x: Double) => g.append(name, x)
+      case (ArrayType(et, _), xs: scala.collection.Seq[_]) =>
+        val list = g.addGroup(name)
+        xs.foreach(x => put(list.addGroup("list"), "element", et, x))
+      case _ => throw new IllegalArgumentException(
+        s"sidecar column $name: cannot write $v as $t")
+    }
+
+  private def get(g: Group, name: String, t: DataType): Any = t match {
+    case IntegerType => g.getInteger(name, 0)
+    case DoubleType => g.getDouble(name, 0)
+    case ArrayType(et, _) =>
+      val list = g.getGroup(name, 0)
+      Vector.tabulate(list.getFieldRepetitionCount("list"))(i =>
+        get(list.getGroup("list", i), "element", et))
+    case _ => throw new IllegalArgumentException(
+      s"sidecar column $name: cannot read $t")
   }
 
   private def firstDataFile(fs: FileSystem,

@@ -3,9 +3,11 @@ package graft.sim
 import scala.util.Using
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  StructField, StructType}
 
 import graft.core.{Exact, Tables}
 import graft.dedup.Dedup
@@ -267,7 +269,7 @@ object Ann {
               embCol: String = "embedding",
               coarse: Option[Array[Array[Double]]] = None): DataFrame =
     topK(queries, corpus, nlist, coarse, k, nProbe, 0, idCol, embCol)(
-      _ => Encoding.Flat)
+      (_, _) => Encoding.Flat)
 
   /** Deterministic sample-trained coarse quantizer: Lloyd's k-means over
     * the `sampleN` corpus vectors with the smallest `md5(id)` (a
@@ -287,15 +289,33 @@ object Ann {
     * shape: quantizer training reads a constant-size sample, never the
     * corpus (FAISS trains IVF coarse quantizers the same way).
     */
-  def seededCentroids(corpus: DataFrame, nlist: Int, sampleN: Int = 256,
-                      iters: Int = 5, idCol: String = "vec_id",
-                      embCol: String = "embedding"): Array[Array[Double]] = {
+  def seededCentroids(corpus: DataFrame, nlist: Int,
+                      sampleN: Int = SampleN, iters: Int = Iters,
+                      idCol: String = "vec_id",
+                      embCol: String = "embedding"): Array[Array[Double]] =
+    lloyd(seedSample(corpus, sampleN, idCol, embCol), nlist, iters)
+
+  /** The trainers' default sample size and iteration count. */
+  private val SampleN = 256
+  private val Iters = 5
+
+  /** The one sample collect of the driver trainers: the [[md5Sample]]
+    * rows (id, e) in (md5(id), id) order, O(sampleN · dims). */
+  private def seedSample(corpus: DataFrame, sampleN: Int, idCol: String,
+                         embCol: String): Array[(Long, Array[Float])] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sample = md5Sample(corpus, sampleN, idCol, embCol)
+    md5Sample(corpus, sampleN, idCol, embCol)
       .select("id", "e")
       .as[(Long, Array[Float])]
       .collect() // SCALE:ann-seed-sample
+  }
+
+  /** The driver Lloyd's of [[seededCentroids]] over a collected sample,
+    * pure: init from the first `nlist` rows, members in ascending id,
+    * |c|² once per centroid per iteration. */
+  private def lloyd(sample: Array[(Long, Array[Float])], nlist: Int,
+                    iters: Int): Array[Array[Double]] = {
     require(sample.nonEmpty, "seededCentroids: empty corpus")
     val k = math.min(nlist, sample.length)
     val dims = sample(0)._2.length
@@ -305,15 +325,16 @@ object Ann {
     while (it < iters) {
       val sums = Array.fill(k)(new Array[Double](dims))
       val counts = new Array[Long](k)
+      val c2 = cents.map(c => dotSeq(c, c))
       members.foreach { case (_, e) =>
         var best = 0
         var bestScore = Double.MaxValue
         var j = 0
         while (j < k) {
           val c = cents(j)
-          var c2 = 0.0; var dp = 0.0; var i = 0
-          while (i < dims) { c2 += c(i) * c(i); dp += e(i).toDouble * c(i); i += 1 }
-          val s = c2 - 2.0 * dp
+          var dp = 0.0; var i = 0
+          while (i < dims) { dp += e(i).toDouble * c(i); i += 1 }
+          val s = c2(j) - 2.0 * dp
           if (s < bestScore) { best = j; bestScore = s } // tie keeps lower j
           j += 1
         }
@@ -341,6 +362,30 @@ object Ann {
         md5(col(idCol).cast("string")).as("_r"))
       .orderBy(col("_r"), col("id"))
       .limit(sampleN)
+
+  /** The quantizer training of one IVF build or in-memory top-k: ONE
+    * sample collect at the default size, shared by the coarse quantizer
+    * and every PQ codebook, each a driver [[lloyd]] over the collected
+    * rows (a book over their `dsub`-wide slice). The rows, their order
+    * and their float values are those a collect per quantizer would
+    * return, so every centroid and codeword is the same double. */
+  private final class Training(corpus: DataFrame, idCol: String,
+                               embCol: String) {
+    private lazy val sample = seedSample(corpus, SampleN, idCol, embCol)
+
+    def centroids(nlist: Int): Array[Array[Double]] =
+      lloyd(sample, nlist, Iters)
+
+    def books(m: Int, ksub: Int, dims: Int): Array[Array[Array[Double]]] = {
+      require(dims % m == 0, s"pq: dims=$dims not divisible by m=$m")
+      val dsub = dims / m
+      Array.tabulate(m) { j =>
+        lloyd(sample.map { case (id, e) =>
+          (id, e.slice(j * dsub, (j + 1) * dsub))
+        }, ksub, Iters)
+      }
+    }
+  }
 
   /** Quantizer-trainer dispatch: the driver Lloyd's for small cell counts
     * (bit-compat with every existing oracle), the distributed Lloyd's
@@ -635,46 +680,60 @@ object Ann {
   }
 
   /** The one in-memory IVF top-k: the coarse quantizer trains once (or
-    * comes in as `coarse`), `enc` gets its codebooks from it, and
-    * [[rankCells]] ranks the coded corpus. */
+    * comes in as `coarse`), `enc` gets its codebooks from it or from the
+    * same [[Training]] sample, and [[rankCells]] ranks the coded corpus. */
   private def topK(queries: DataFrame, corpus: DataFrame, nlist: Int,
                    coarse: Option[Array[Array[Double]]], k: Int,
                    nProbe: Int, rerank: Int, idCol: String, embCol: String)(
-      enc: Array[Array[Double]] => Encoding): DataFrame = {
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val e = enc(cents)
+      enc: (Array[Array[Double]], Training) => Encoding): DataFrame = {
+    val t = new Training(corpus, idCol, embCol)
+    val cents = coarse.getOrElse(t.centroids(nlist))
+    val e = enc(cents, t)
     rankCells(coded(corpus, cents, e, idCol, embCol), queries, cents, e, k,
       nProbe, rerank, idCol, embCol)
   }
 
-  /** The one IVF build: the coded corpus written PARTITIONED BY its cell
-    * id (one directory per inverted list), the centroid sidecar, the
-    * codebook sidecar of a PQ encoding, and LAST the encoding marker — a
-    * one-line file written through the Hadoop FileSystem API (no Spark
-    * job). A rebuild deletes the old marker first, so a build that dies
-    * at any point leaves no marker and every entry point refuses it. */
+  /** The schemas of the centroid and codebook sidecars. */
+  private val CentroidSchema = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(DoubleType, containsNull = false))))
+  private val CodebookSchema = StructType(Seq(
+    StructField("book", IntegerType, nullable = false),
+    StructField("code", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(DoubleType, containsNull = false))))
+
+  /** The one IVF build. A rebuild first deletes the old marker and the
+    * old tombstones (ids deleted from the previous index are not deleted
+    * from this one). The quantizers then train from ONE sample collect
+    * ([[Training]]; a residual encoding adds the residuals' own sample),
+    * and the coded corpus is written PARTITIONED BY its cell id (one
+    * directory per inverted list). The centroid sidecar and a PQ
+    * encoding's codebook sidecar are written on the driver
+    * ([[Tables.writeSidecar]], no Spark job), and LAST the encoding
+    * marker, a one-line file written through the Hadoop FileSystem API.
+    * A build that dies at any point leaves no marker, and every entry
+    * point refuses it. */
   private def build(corpus: DataFrame, path: String, nlist: Int,
                     coarse: Option[Array[Array[Double]]], idCol: String,
                     embCol: String)(
-      enc: Array[Array[Double]] => Encoding): Unit = {
+      enc: (Array[Array[Double]], Training) => Encoding): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val marker = new Path(s"$path/encoding")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(marker, false)
-    val cents = coarse.getOrElse(
-      seededCentroids(corpus, nlist, idCol = idCol, embCol = embCol))
-    val e = enc(cents)
+    fs.delete(new Path(s"$path/tombstones"), true)
+    val t = new Training(corpus, idCol, embCol)
+    val cents = coarse.getOrElse(t.centroids(nlist))
+    val e = enc(cents, t)
     writeCells(coded(corpus, cents, e, idCol, embCol), s"$path/data",
       "overwrite")
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    e.books.foreach(cbs => cbs.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, r) => (j, r, c.toSeq) }
-    }.toSeq.toDF("book", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks"))
+    Tables.writeSidecar(spark, s"$path/centroids", CentroidSchema,
+      cents.indices.map(i => Row(i, cents(i).toSeq)))
+    e.books.foreach(cbs => Tables.writeSidecar(spark, s"$path/codebooks",
+      CodebookSchema, for {
+        (book, j) <- cbs.toSeq.zipWithIndex
+        (c, r) <- book.toSeq.zipWithIndex
+      } yield Row(j, r, c.toSeq)))
     Using.resource(fs.create(marker, true))(_.write(e.name.getBytes("UTF-8")))
   }
 
@@ -737,14 +796,14 @@ object Ann {
   }
 
   /** [[requireEncoding]], then the layout's stored centroids —
-    * O(nlist·dims) sidecar metadata. */
+    * O(nlist·dims) sidecar metadata read on the driver
+    * ([[Tables.readSidecar]]), so opening a layout runs no Spark job. */
   private def open(spark: SparkSession, path: String, op: String,
                    accepts: Seq[String]): Array[Array[Double]] = {
-    import spark.implicits._
     requireEncoding(spark, path, op, accepts)
-    Tables.parquet(spark, s"$path/centroids")
-      .select(col("cell"), col("centroid").cast("array<double>"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2) // SCALE:ann-centroids
+    Tables.readSidecar(spark, s"$path/centroids", CentroidSchema)
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1).map(_._2).toArray
   }
 
   /** Materialize the IVF layout on disk: the corpus written PARTITIONED BY
@@ -756,7 +815,7 @@ object Ann {
   def ivfBuild(corpus: DataFrame, path: String, nlist: Int = 16,
                idCol: String = "vec_id",
                embCol: String = "embedding"): Unit =
-    build(corpus, path, nlist, None, idCol, embCol)(_ => Encoding.Flat)
+    build(corpus, path, nlist, None, idCol, embCol)((_, _) => Encoding.Flat)
 
   /** Materialize the full IVF-PQ layout: the corpus written PARTITIONED
     * BY coarse cell with its PQ codes and reconstruction norm INLINE in
@@ -769,20 +828,18 @@ object Ann {
                  idCol: String = "vec_id", embCol: String = "embedding",
                  coarse: Option[Array[Array[Double]]] = None,
                  books: Option[Array[Array[Array[Double]]]] = None): Unit =
-    build(corpus, path, nlist, coarse, idCol, embCol)(_ => Encoding.Pq(
-      books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))))
+    build(corpus, path, nlist, coarse, idCol, embCol)((_, t) => Encoding.Pq(
+      books.getOrElse(t.books(m, ksub, dims))))
 
   /** The stored PQ codebooks of a built layout — O(m·ksub·dsub) sidecar
-    * metadata, the read half of the train/add separation. */
+    * metadata read on the driver (no Spark job), the read half of the
+    * train/add separation. */
   private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Array[Array[Array[Double]]] = {
-    import spark.implicits._
-    Tables.parquet(spark, s"$path/codebooks")
-      .select(col("book"), col("code"), col("centroid").cast("array<double>"))
-      .as[(Int, Int, Array[Double])].collect() // SCALE:ann-pq-codebooks
+                            path: String): Array[Array[Array[Double]]] =
+    Tables.readSidecar(spark, s"$path/codebooks", CodebookSchema)
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3))
-  }
+      .map(_._2.sortBy(_._2).map(_._3).toArray)
 
   /** Incremental ADD to a built IVF-PQ layout ([[add]] with raw-space
     * codes): refuses any layout not marked `pq`. Compaction of
@@ -929,20 +986,14 @@ object Ann {
     * 2011, "Product quantization for nearest neighbor search") on the
     * [[seededCentroids]] playbook, so every codebook is reproducible from
     * the table alone and the DuckDB oracle replays all m trainings
-    * bit-for-bit (one suffixed k-means CTE chain per subspace).
+    * bit-for-bit (one suffixed k-means CTE chain per subspace). The m
+    * trainings share ONE sample collect, each slicing its subvectors on
+    * the driver.
     */
   def pqCodebooks(corpus: DataFrame, m: Int, ksub: Int, dims: Int,
                   idCol: String = "vec_id",
-                  embCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    require(dims % m == 0, s"pq: dims=$dims not divisible by m=$m")
-    val dsub = dims / m
-    Array.tabulate(m) { j =>
-      seededCentroids(
-        corpus.select(col(idCol),
-          slice(col(embCol), j * dsub + 1, dsub).as(embCol)),
-        nlist = ksub, idCol = idCol, embCol = embCol)
-    }
-  }
+                  embCol: String = "embedding"): Array[Array[Array[Double]]] =
+    new Training(corpus, idCol, embCol).books(m, ksub, dims)
 
   /** PQ-encode map-side: code_j = nearest codebook-j centroid of the j-th
     * subvector (argmin |c|² − 2·e·c, ties to the lower code — the exact
@@ -1031,8 +1082,7 @@ object Ann {
                 coarse: Option[Array[Array[Double]]] = None,
                 books: Option[Array[Array[Array[Double]]]] = None): DataFrame =
     topK(queries, corpus, nlist, coarse, k, nProbe, rerank, idCol, embCol)(
-      _ => Encoding.Pq(
-        books.getOrElse(pqCodebooks(corpus, m, ksub, dims, idCol, embCol))))
+      (_, t) => Encoding.Pq(books.getOrElse(t.books(m, ksub, dims))))
 
   /** The float-rounded coarse residual e − cent_{cell} (FAISS's encoding
     * input, faiss IndexIVFPQ::train_residual): double subtraction against
@@ -1087,7 +1137,7 @@ object Ann {
                         books: Option[Array[Array[Array[Double]]]] = None)
       : DataFrame =
     topK(queries, corpus, nlist, coarse, k, nProbe, rerank, idCol, embCol)(
-      cents => Encoding.ResidualPq(cents, books.getOrElse(
+      (cents, _) => Encoding.ResidualPq(cents, books.getOrElse(
         pqResidualCodebooks(corpus, cents, m, ksub, dims, idCol, embCol))))
 
   /** The residual encoding's plan-time literal tables: ‖cent‖² per cell
@@ -1121,7 +1171,7 @@ object Ann {
                          coarse: Option[Array[Array[Double]]] = None,
                          books: Option[Array[Array[Array[Double]]]] = None)
       : Unit =
-    build(corpus, path, nlist, coarse, idCol, embCol)(cents =>
+    build(corpus, path, nlist, coarse, idCol, embCol)((cents, _) =>
       Encoding.ResidualPq(cents, books.getOrElse(
         pqResidualCodebooks(corpus, cents, m, ksub, dims, idCol, embCol))))
 

@@ -1,7 +1,8 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.core.{Exact, Tables}
 import graft.functions.TextFunctions
@@ -76,11 +77,11 @@ object InvertedIndex {
         lit(0L)) * sign).as("total_len"))
 
   /** Materialize the index: bucket-partitioned postings + doclens ledger +
-    * the first stats partial + an nBuckets meta sidecar. */
+    * the first stats partial + an nBuckets meta sidecar, written on the
+    * driver ([[Tables.writeSidecar]], no Spark job). */
   def build(docs: DataFrame, path: String, nBuckets: Int = 16,
             idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     postingsOf(docs, nBuckets, idCol, textCol)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/postings")
@@ -89,12 +90,15 @@ object InvertedIndex {
       .write.mode("overwrite").parquet(s"$path/doclens")
     statsRow(docs, idCol, textCol, 1)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    Seq(nBuckets).toDF("n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Tables.writeSidecar(spark, s"$path/meta", MetaSchema, Seq(Row(nBuckets)))
   }
 
+  private val MetaSchema =
+    StructType(Seq(StructField("n_buckets", IntegerType, nullable = false)))
+
+  /** The stored bucket count, read on the driver: no Spark job. */
   private def nBucketsOf(spark: SparkSession, path: String): Int =
-    Tables.parquet(spark, s"$path/meta").head().getInt(0)
+    Tables.readSidecar(spark, s"$path/meta", MetaSchema).head.getInt(0)
 
   /** Incremental add: O(new) postings append into their bucket
     * directories + doclens append + one stats partial. Never rewrites. */

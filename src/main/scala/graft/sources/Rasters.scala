@@ -28,8 +28,10 @@ import graft.cube.{Crs, DataCube}
   *   - Zarr is the scale path: the value array is CHUNKED and every chunk
   *     is an independent file, so the write parallelizes WITHIN a slice as
   *     well and a consumer prunes chunks exactly like parquet row groups.
-  *   - Axis labels are collected once, O(axis) driver rows (the resample
-  *     target-grid contract) — never O(cube).
+  *   - Both axes are read in ONE aggregate over the cube: each axis's
+  *     sorted distinct labels, O(axis) driver rows (the resample
+  *     target-grid contract, never O(cube)), and whether any label is
+  *     null, which fails the write before any file is written.
   *
   * All three loaders read back through `binaryFile` sources — one task per
   * file/chunk, distributed parse, no driver funnel — and RasterSpec pins
@@ -46,14 +48,28 @@ object Rasters {
   private case class GridPlan(xd: String, yd: String, sliceDims: Seq[String],
                               xs: Array[Long], ys: Array[Long])
 
+  /** The x and y axes from ONE aggregate over the cube: per axis the
+    * sorted distinct labels and whether any label is null. A cell with a
+    * null label has no pixel, so a null fails with an
+    * IllegalArgumentException naming the dimension, before any file is
+    * written. Every aggregate here ignores duplicates (`collect_set`,
+    * `max`), which lets Spark's RemoveRedundantAggregates drop a cube's
+    * own group-by from this pass (a null COUNT would keep it). */
   private def plan(cube: DataCube): GridPlan = {
     val xd = cube.requireDim(cube.xDim, "x")
     val yd = cube.requireDim(cube.yDim, "y")
     val others = cube.dims.filterNot(d => d == xd || d == yd)
-    def axis(d: String): Array[Long] =
-      cube.df.select(col(d).cast("long")).distinct().orderBy(col(d))
-        .collect().map(_.getLong(0)) // SCALE:raster-slice-keys
-    GridPlan(xd, yd, others, axis(xd), axis(yd))
+    val r = cube.df.select(Seq(xd, yd).flatMap { d =>
+      val label = col(d).cast("long")
+      Seq(array_sort(collect_set(label)), max(label.isNull))
+    }: _*).collect()(0) // SCALE:raster-slice-keys
+    def axis(i: Int, d: String): Array[Long] = {
+      require(r.isNullAt(2 * i + 1) || !r.getBoolean(2 * i + 1),
+        s"raster writers need a label on every cell: dimension $d has " +
+          "null labels")
+      r.getSeq[Long](2 * i).toArray
+    }
+    GridPlan(xd, yd, others, axis(0, xd), axis(1, yd))
   }
 
   private def sliceName(dims: Seq[String], key: Seq[Any]): String =

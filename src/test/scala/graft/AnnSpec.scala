@@ -324,6 +324,48 @@ class AnnSpec extends SparkSpec {
       "append-then-probe must equal the one-shot index ranking")
   }
 
+  test("ivfpq layout: stored centroids and codebooks equal the trainers " +
+       "bit for bit") {
+    val path = Fixtures.dir("ivfpq_sidecars")
+    Ann.ivfPqBuild(emb, path, nlist = 16, m = 4, ksub = 16, dims = 64)
+    def bits(vs: Seq[Array[Double]]): Seq[Seq[Long]] =
+      vs.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits))
+    // read back through Spark's own reader, not the sidecar helper
+    val cents = spark.read.parquet(s"$path/centroids")
+      .select(col("cell"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    assert(cents.map(_._1).toSeq == (0 until 16))
+    assert(bits(cents.map(_._2).toSeq) ==
+      bits(Ann.seededCentroids(emb, nlist = 16).toSeq),
+      "stored centroids differ from seededCentroids")
+    val books = spark.read.parquet(s"$path/codebooks")
+      .select(col("book"), col("code"), col("centroid")).collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
+      .sortBy(_._1)
+    val trained = Ann.pqCodebooks(emb, m = 4, ksub = 16, dims = 64)
+    assert(books.map(_._1).toSeq ==
+      (for (j <- 0 until 4; r <- 0 until 16) yield (j, r)))
+    assert(bits(books.map(_._2).toSeq) == bits(trained.toSeq.flatten),
+      "stored codebooks differ from pqCodebooks")
+  }
+
+  test("ivfpq build collects one quantizer sample; a probe's call runs no " +
+       "sidecar job") {
+    val path = Fixtures.dir("ivfpq_jobs")
+    val (_, built) = jobsRun(
+      Ann.ivfPqBuild(emb, path, nlist = 16, m = 4, ksub = 16, dims = 64))
+    // the build's only collect is the one md5-rank sample of the coarse
+    // quantizer and all four codebooks
+    assert(built.count(_.startsWith("collect at ")) == 1, built.mkString(", "))
+    // before its action, the probe runs only the pruned scan's own job
+    // (the probed-cell ids): no centroid or codebook read
+    val cents = Ann.seededCentroids(emb, nlist = 16)
+    val (_, scan) = jobsRun(Ann.probedScan(spark, path, qs, cents, 4))
+    val (_, probe) = jobsRun(Ann.ivfPqProbe(spark, path, qs, k = 5, nProbe = 4))
+    assert(scan.nonEmpty && probe.sorted == scan.sorted,
+      s"probe jobs [${probe.mkString(", ")}] vs scan jobs [${scan.mkString(", ")}]")
+  }
+
   test("residual ivfpq layout: probe equals in-memory plan, prunes " +
        "partitions, rejects raw-space layouts") {
     val path = Fixtures.dir("ivfpqres")
@@ -626,6 +668,24 @@ class AnnSpec extends SparkSpec {
     // the deleted rows are physically gone
     assert(spark.read.parquet(s"$idx/data")
       .filter($"c_id".isin(victimIds.toSeq: _*)).count() == 0)
+  }
+
+  test("ivf rebuild at the same path clears the old index's tombstones") {
+    import spark.implicits._
+    val idx = Fixtures.dir("ivf_rebuild")
+    Ann.ivfBuild(emb, idx, nlist = 8)
+    val q = emb.filter($"vec_id" < 5)
+    def answers = Ann.ivfProbe(spark, idx, q, k = 5, nProbe = 3)
+      .select("q_id", "c_id", "rank").as[(Long, Long, Int)].collect().toSet
+    val before = answers
+    val victims = before.map(_._2)
+    Ann.ivfDelete(spark, idx, victims.toSeq.toDF("vec_id"))
+    assert(answers.forall(t => !victims(t._2)), "delete had no effect")
+    Ann.ivfBuild(emb, idx, nlist = 8)
+    assert(!new java.io.File(s"$idx/tombstones").exists(),
+      "a rebuild must delete the old tombstones")
+    assert(answers == before,
+      "the rebuilt index must answer with the ids deleted from the old one")
   }
 
   test("ivf compaction is crash-recoverable: a leftover data_old from a " +

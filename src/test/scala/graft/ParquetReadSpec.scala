@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MetadataBuilder, TimestampType}
@@ -17,34 +13,10 @@ import graft.sim.{Ann, InvertedIndex}
   * layouts with appended files and sidecars. */
 class ParquetReadSpec extends SparkSpec {
 
-  private val Marker = "graft.parquet-read-spec"
-
-  /** `body`'s value and the number of Spark jobs it started. Jobs are
-    * counted by a listener that only sees jobs carrying this thread's
-    * marker property; the count is read after the listener has seen one
-    * sentinel job, which the bus delivers after every earlier job. */
+  /** `body`'s value and the number of Spark jobs it started. */
   private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(Marker)) match {
-          case Some("body") => jobs.incrementAndGet()
-          case Some("sentinel") => sentinelSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Marker, "body")
-      val a = try body finally sc.setLocalProperty(Marker, "sentinel")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Marker, null)
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS),
-        "the listener never saw the sentinel job")
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (a, jobs) = jobsRun(body)
+    (a, jobs.size)
   }
 
   /** Same schema as Spark's inference, with 0 jobs against its ≥ 1. */

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.core.Fixtures
@@ -141,6 +143,19 @@ class RasterSpec extends SparkSpec {
     assert(exact.filter(col("value") =!= col("v0")).count() == 0)
     // the hole never materializes a row (NaN-fill dropped on read)
     assert(back.count() == cube.df.count())
+  }
+
+  test("a null x label fails naming the dimension, before any file") {
+    val dir = tmp("null_x")
+    val rows = Seq[(java.lang.Long, Long, String, Double)](
+      (0L, 0L, "red", 1.0), (1L, 0L, "red", 2.0), (null, 1L, "red", 3.0))
+    val cube = DataCube(rows.toDF("x", "y", "band", "value"))
+    val e = intercept[IllegalArgumentException](Rasters.saveGeoTiff(cube, dir))
+    assert(e.getMessage.contains("dimension x"), e.getMessage)
+    val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try assert(!written.iterator().asScala.exists(_.toString.endsWith(".tif")),
+      "a refused write must leave no .tif behind")
+    finally written.close()
   }
 
   test("no slice dims: a bare (x, y) cube exports as a single raster") {
