@@ -630,13 +630,15 @@ object Dedup {
       .groupBy(col(idCol))
       .agg(array_sort(collect_list(col("s"))).as("_starts"))
     val ds = coalesce(col("_starts"), array().cast("array<int>"))
-    val keptIdx = filter(sequence(lit(1), size(toks)),
-      i => !exists(ds, s => s <= i && i <= s + lit(w - 1)))
+    // the token array is the filter's argument (evaluated once per row);
+    // a per-index `element_at(toks, i)` lambda would re-split the document
+    // for every kept token
+    val kept = filter(toks,
+      (_, i) => !exists(ds, s => s <= i + 1 && i + 1 <= s + lit(w - 1)))
     docs.join(dupStarts, Seq(idCol), "left")
       .select(col(idCol), size(toks).as("n_tokens"),
-        (size(toks) - size(keptIdx)).as("n_removed"),
-        concat_ws(" ", transform(keptIdx, i => element_at(toks, i)))
-          .as("clean_text"))
+        (size(toks) - size(kept)).as("n_removed"),
+        concat_ws(" ", kept).as("clean_text"))
   }
 
   /** D55: corpus-order content novelty — for each document, what fraction

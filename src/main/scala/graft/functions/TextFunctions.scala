@@ -25,17 +25,31 @@ object TextFunctions {
   def bpeCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9 ]"), lit(0)))
 
+  /** `f(x)` with `x` evaluated once per row. Spark evaluates a lambda body
+    * once per element and never hoists a subexpression that does not use
+    * the lambda variable, so an array captured from outside a lambda is
+    * rebuilt on every iteration; a higher-order function's ARGUMENT is
+    * evaluated once. Here `x` is the argument of a one-element
+    * `transform`, and `f` sees it as a lambda variable — a reference, not
+    * a re-evaluation, in every lambda nested inside `f`. */
+  private[graft] def let(x: Column)(f: Column => Column): Column =
+    element_at(transform(array(x), f), 1)
+
   /** Word w-shingles ("w consecutive tokens joined by space"). For n tokens
     * produces n-w+1 shingles. DuckDB mirror:
     * `list_transform(generate_series(1, len(toks)-w+1),
     *    i -> array_to_string(toks[i:i+w-1], ' '))`.
+    *
+    * `toks` is bound once through [[let]]: captured directly inside the
+    * per-shingle lambda, the whole token expression (a `split` of the
+    * document, or a normalize-then-split) would re-run once per shingle.
     */
   def shingles(toks: Column, w: Int): Column =
     // short docs: sequence(0, negative) counts DOWN in Spark (DuckDB's
     // generate_series is empty) — guard to an empty shingle set explicitly
-    when(size(toks) < w, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - w),
-        i => concat_ws(" ", slice(toks, i + 1, lit(w)))))
+    let(toks)(t => when(size(t) < w, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(0), size(t) - w),
+        i => concat_ws(" ", slice(t, i + 1, lit(w))))))
 
   /** Repeated-word fraction (Gopher-style repetition signal): the share of
     * tokens that repeat an earlier token. Map-only. DuckDB mirror:
@@ -45,15 +59,27 @@ object TextFunctions {
 
   /** Top-n-gram fraction (Gopher-style): occurrences of the most frequent
     * n-gram over all n-grams — high values flag templated/repetitive text.
-    * Per-document higher-order functions only (O(distinct·total) inside
-    * codegen, document-sized arrays), zero shuffle. */
-  def topNgramFraction(toks: Column, n: Int): Column = {
-    val grams = shingles(toks, n)
-    val counts = transform(array_distinct(grams),
-      g => size(filter(grams, x => x === g)))
-    when(size(grams) > 0,
-      array_max(counts).cast("double") / size(grams)).otherwise(lit(0.0))
-  }
+    * Per-document higher-order functions only, zero shuffle: ONE fold over
+    * the sorted grams, whose accumulator carries the previous gram, the
+    * current run and the best run — O(n log n) per document.
+    *
+    * The gram array is bound once through [[let]] and the sort is the
+    * fold's argument. A per-distinct-gram `filter(grams, _ === g)` count
+    * would capture `grams` inside a lambda and rebuild the whole shingle
+    * array for every distinct gram: O(distinct · total · doc length).
+    * Equal grams are adjacent after the sort and the counts are exact
+    * integers, so the double is the same; the DuckDB mirror keeps its
+    * per-gram count form. */
+  def topNgramFraction(toks: Column, n: Int): Column =
+    let(shingles(toks, n)) { grams =>
+      val zero = struct(lit(null).cast("string").as("prev"),
+        lit(0).as("run"), lit(0).as("best"))
+      val best = aggregate(array_sort(grams), zero, (acc, g) => {
+        val run = when(acc("prev") === g, acc("run") + 1).otherwise(lit(1))
+        struct(g.as("prev"), run.as("run"), greatest(acc("best"), run).as("best"))
+      }, acc => acc("best"))
+      when(size(grams) > 0, best.cast("double") / size(grams)).otherwise(lit(0.0))
+    }
 
   /** Count of tokens found in `stop` (case-sensitive — corpus is
     * lower-case). DuckDB mirror: `len(list_filter(toks, t -> t IN (...)))`.
@@ -132,11 +158,12 @@ object TextFunctions {
     * returns array<struct<pos int, fp bigint>>. DuckDB mirror: the same
     * list_transform over window starts with list_min/list_max slices. */
   def winnowFingerprints(hs: Column, w: Int): Column = {
-    val sel = transform(sequence(lit(0), size(hs) - w), i => {
-      val m = array_min(slice(hs, i + 1, lit(w)))
-      array_max(filter(sequence(i, i + w - 1),
-        p => element_at(hs, p + 1) === m))
-    })
+    // the window minimum is bound once per window: captured inside the
+    // position filter, its slice would be rebuilt once per position
+    val sel = transform(sequence(lit(0), size(hs) - w), i =>
+      let(array_min(slice(hs, i + 1, lit(w))))(m =>
+        array_max(filter(sequence(i, i + w - 1),
+          p => element_at(hs, p + 1) === m))))
     val dedup = array_distinct(sel)
     when(size(hs) < w, array().cast("array<struct<pos:int,fp:bigint>>"))
       .otherwise(transform(dedup, p =>
@@ -219,12 +246,15 @@ object TextFunctions {
     // starts 0, step, 2*step, … until a window REACHES the end: the last
     // start is the smallest k*step with k*step + width >= n, so
     // n_chunks = ceil(max(n - width, 0) / step) + 1 — no redundant tail
-    // window beyond one that already covers the final token
-    val nChunks = ceil(greatest(size(toks) - width, lit(0)).cast("double")
-      / step).cast("int") + 1
-    transform(sequence(lit(0), nChunks - 1), k =>
-      struct((k * step).as("start"),
-        concat_ws(" ", slice(toks, k * step + 1, lit(width))).as("text")))
+    // window beyond one that already covers the final token. `toks` is
+    // bound once ([[let]]), not re-split per chunk
+    let(toks) { t =>
+      val nChunks = ceil(greatest(size(t) - width, lit(0)).cast("double")
+        / step).cast("int") + 1
+      transform(sequence(lit(0), nChunks - 1), k =>
+        struct((k * step).as("start"),
+          concat_ws(" ", slice(t, k * step + 1, lit(width))).as("text")))
+    }
   }
 
   /** Gopher's document-quality stop-word list (Rae et al. 2021, A1.1). */

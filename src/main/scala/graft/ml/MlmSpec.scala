@@ -3,6 +3,9 @@ package graft.ml
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 /** STAC-MLM-style model metadata, re-expressed for Spark.
@@ -78,40 +81,39 @@ final case class ValueScaling(kind: String, p1: Double, p2: Double)
 
 object MlmSpec {
 
+  private val mapper = new ObjectMapper()
+
   /** Load and validate an mlm.json sidecar (reference: load_model.py:21 —
     * unknown framework or inconsistent shapes must fail before any data
-    * moves). Parsed with Spark's JSON reader so no extra dependency.
+    * moves). Read through the Hadoop FS and parsed on the driver with
+    * Jackson, so a load runs no Spark job.
     */
   def load(spark: SparkSession, path: String): MlmSpec = {
-    val df = spark.read.option("multiLine", true).json(s"$path/mlm.json")
-    val row = df.collect()(0) // SCALE:mlm-meta-row
-    def strSeq(field: String): Seq[String] =
-      row.getAs[scala.collection.Seq[String]](field).toSeq
-    def intSeq(field: String): Seq[Int] =
-      row.getAs[scala.collection.Seq[Long]](field).toSeq.map(_.toInt)
-    def optD(field: String): Double =
-      if (row.isNullAt(row.fieldIndex(field))) Double.NaN
-      else row.getAs[Double](field)
-    val scaling = {
-      val i = row.fieldIndex("scaling")
-      if (row.isNullAt(i)) None
-      else {
-        val r = row.getStruct(i)
-        Some(ValueScaling(r.getAs[String]("kind"),
-          r.getAs[Double]("p1"), r.getAs[Double]("p2")))
-      }
+    val root = mapper.readTree(ProbeModels.read(spark, s"$path/mlm.json"))
+    def field(name: String): JsonNode = {
+      val n = root.get(name)
+      require(n != null, s"load_ml_model: mlm.json has no field '$name'")
+      n
+    }
+    def seqOf[A](name: String)(f: JsonNode => A): Seq[A] =
+      field(name).elements().asScala.map(f).toSeq
+    def optD(n: JsonNode): Double = if (n.isNull) Double.NaN else n.asDouble()
+    val scaling = field("scaling") match {
+      case n if n.isNull => None
+      case n => Some(ValueScaling(n.path("kind").asText(),
+        optD(n.path("p1")), optD(n.path("p2"))))
     }
     val spec = MlmSpec(
-      name = row.getAs[String]("mlm:name"),
-      framework = row.getAs[String]("mlm:framework"),
-      inputDims = strSeq("input_dims"),
-      inputShape = intSeq("input_shape"),
-      bands = strSeq("bands"),
+      name = field("mlm:name").asText(),
+      framework = field("mlm:framework").asText(),
+      inputDims = seqOf("input_dims")(_.asText()),
+      inputShape = seqOf("input_shape")(_.asInt()),
+      bands = seqOf("bands")(_.asText()),
       scaling = scaling,
-      outputClasses = intSeq("output_classes"),
-      pretrained = row.getAs[Boolean]("pretrained"),
-      accuracy = optD("accuracy"),
-      kappa = optD("kappa"))
+      outputClasses = seqOf("output_classes")(_.asInt()),
+      pretrained = field("pretrained").asBoolean(),
+      accuracy = optD(field("accuracy")),
+      kappa = optD(field("kappa")))
     require(spec.framework == "spark-mllib",
       s"load_ml_model: unsupported framework '${spec.framework}'")
     require(spec.inputDims.length == spec.inputShape.length,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Exact
-import graft.functions.VectorFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 
 /** SemDeDup — semantic deduplication by embedding clustering (SURVEY.md
   * §2D28; Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -48,12 +48,14 @@ object SemDedup {
   /** Unit-normalize an embedding to array<float>: each component is
     * double(x)/‖e‖ rounded ONCE to float32 — single-rounding in any
     * engine, so the normalized vectors are bit-identical cross-engine.
-    * ‖e‖ folds left-to-right in double via the native DotProduct. */
-  def unitNorm(emb: Column): Column = {
-    val e = emb.cast("array<float>")
-    val nrm = sqrt(VectorFunctions.dot(e, e))
-    transform(e, x => (x.cast("double") / nrm).cast("float"))
-  }
+    * ‖e‖ folds left-to-right in double via the native DotProduct. The
+    * vector and its norm are each bound once ([[TextFunctions.let]]):
+    * captured inside the per-component lambda, both would be re-evaluated
+    * for every component. */
+  def unitNorm(emb: Column): Column =
+    TextFunctions.let(emb.cast("array<float>"))(e =>
+      TextFunctions.let(sqrt(VectorFunctions.dot(e, e)))(nrm =>
+        transform(e, x => (x.cast("double") / nrm).cast("float"))))
 
   /** The SemDeDup sweep. `tau` is the duplicate threshold on the dot of
     * the unit-normalized vectors (the paper's cosine; norms are 1 after

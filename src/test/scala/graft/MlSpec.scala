@@ -171,6 +171,17 @@ class MlSpec extends SparkSpec {
     assert(MlmSpec.load(spark, dir) == spec)
   }
 
+  test("mlm.json load runs no job; no scaling and NaN scores round-trip") {
+    val spec = MlmSpec(name = "t", inputShape = Seq(-1, 3))
+    val dir = Fixtures.dir("mlm_json_nan")
+    spec.save(dir)
+    val (back, jobs) = jobsRun(MlmSpec.load(spark, dir))
+    assert(jobs.isEmpty, s"MlmSpec.load ran jobs: $jobs")
+    assert(back.scaling.isEmpty && back.accuracy.isNaN && back.kappa.isNaN)
+    assert(back.copy(accuracy = 0.0, kappa = 0.0) ==
+      spec.copy(accuracy = 0.0, kappa = 0.0))
+  }
+
   test("load rejects foreign frameworks") {
     val spec = MlmSpec(name = "t", framework = "pytorch")
     val dir = Fixtures.dir("mlm_bad")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -420,5 +421,55 @@ class TextSpec extends SparkSpec {
     // coverage: consecutive selections are at most w apart
     assert(sel.sliding(2).forall(p => p.length < 2 || p(1) - p(0) <= 4),
       "every window of 4 grams must contain a selected position")
+  }
+
+  // The pre-fold forms, verbatim: the shingle lambda captures `toks`, and
+  // the top-n-gram count captures the gram array inside a per-gram filter.
+  private def shinglesRef(toks: Column, w: Int): Column =
+    when(size(toks) < w, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(0), size(toks) - w),
+        i => concat_ws(" ", slice(toks, i + 1, lit(w)))))
+
+  private def topNgramFractionRef(toks: Column, n: Int): Column = {
+    val grams = shinglesRef(toks, n)
+    val counts = transform(array_distinct(grams),
+      g => size(filter(grams, x => x === g)))
+    when(size(grams) > 0,
+      array_max(counts).cast("double") / size(grams)).otherwise(lit(0.0))
+  }
+
+  private val equivalenceDocs: Seq[(String, String)] = Seq(
+    "null text" -> null,
+    "empty text" -> "",
+    "one token" -> "solo",
+    "fewer tokens than n" -> "a b",
+    "all tokens equal" -> Seq.fill(9)("x").mkString(" "),
+    "two grams tied for the top count" -> "a b a b c d c d",
+    "doubled spaces" -> "a  b  a  b c",
+    "CJK tokens" -> "的 了 是 的 了 是 在 的 了",
+    "2000 tokens" -> (0 until 2000).map(i => s"w${i * 7919 % 37}").mkString(" "))
+
+  for (n <- Seq(2, 3)) {
+    test(s"top-n-gram fold and one-split shingles equal the reference forms, n=$n") {
+      import spark.implicits._
+      val docs = equivalenceDocs.toDF("case", "text")
+      val toks = TextFunctions.tokens(col("text"))
+      val rows = docs.select(col("case"),
+        TextFunctions.topNgramFraction(toks, n).as("frac"),
+        topNgramFractionRef(toks, n).as("frac_ref"),
+        TextFunctions.shingles(toks, n).as("sh"),
+        shinglesRef(toks, n).as("sh_ref")).collect()
+      assert(rows.length == equivalenceDocs.length)
+      rows.foreach { r =>
+        val what = s"${r.getString(0)}, n=$n"
+        assert(r.isNullAt(1) == r.isNullAt(2), what)
+        if (!r.isNullAt(1)) assert(
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+          s"$what: ${r.getDouble(1)} vs ${r.getDouble(2)}")
+        assert(r.getAs[collection.Seq[String]]("sh") ==
+          r.getAs[collection.Seq[String]]("sh_ref"), what)
+      }
+    }
   }
 }
