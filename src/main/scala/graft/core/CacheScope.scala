@@ -38,10 +38,6 @@ object CacheScope {
     ds
   }
 
-  /** Register an ALREADY-persisted dataset (e.g. the surviving iterate of
-    * a persist/unpersist loop) for the next [[releaseAll]]. */
-  def adopt[T](ds: Dataset[T]): Dataset[T] = { pinned.add(ds); ds }
-
   /** Unpersist everything pinned since the last release. Safe to call at
     * any barrier; no-ops on an empty scope. */
   def releaseAll(): Unit = {

@@ -89,53 +89,8 @@ final class ExternalModel(
   private def runtime: ModelRuntime =
     runtimeOverride.getOrElse(new StubRuntime(featureWidth, outputWidth))
 
-  /** The mlm:input value scaling as a column expression over the feature
-    * array — declarative (codegen) so Catalyst sees it, exactly like the
-    * reference applies scaling before the tensor leaves numpy
-    * (scaling_utils.py:63). One scaling entry broadcasts to all bands;
-    * per-band entries (len == width) index plan-time literal arrays. */
-  private def scaleExpr(c: Column,
-                        spark: org.apache.spark.sql.SparkSession): Column =
-    input.processing match {
-      // `processing`-type scaling: a whitelisted sql expression over x,
-      // applied per element — the reference declares this type but raises
-      // NotImplemented (scaling_utils.py:95); ProcessExpression IS the
-      // safe implementation of that contract here
-      case Some(exprStr) => transform(c, x =>
-        ProcessExpression.column(spark, exprStr, Map("x" -> x)))
-      case None => input.scaling match {
-        case Nil => c
-        case one :: Nil =>
-          transform(c, x => applyOne(one, x, lit(one.p1), lit(one.p2)))
-        case many =>
-          require(many.length == featureWidth,
-            s"ml_predict: ${many.length} value_scaling entries for " +
-              s"$featureWidth input features")
-          require(many.map(_.kind).distinct.length == 1,
-            "ml_predict: mixed value_scaling kinds are not supported")
-          val p1s = typedlit(many.map(_.p1))
-          val p2s = typedlit(many.map(_.p2))
-          transform(c, (x, i) =>
-            applyOne(many.head, x, element_at(p1s, i + 1),
-              element_at(p2s, i + 1)))
-      }
-    }
-
-  private def applyOne(v: ValueScaling, x: Column, p1: Column, p2: Column): Column =
-    v.kind match {
-      case "z-score" => (x - p1) / p2
-      case "min-max" => (x - p1) / (p2 - p1)
-      case "scale"   => x / p1
-      case "offset"   => x - p1
-      case "clip"     => least(greatest(x, p1), p2)
-      case "clip-min" => greatest(x, p1)
-      case "clip-max" => least(x, p1)
-      case other =>
-        throw new IllegalArgumentException(s"unknown scaling '$other'")
-    }
-
-  /** ml_predict: width guard (execution-time raise_error, like
-    * RfClassModel) → declarative scaling → batched runtime scoring.
+  /** ml_predict: the [[MlmInput]] width guard (execution-time
+    * raise_error) and declarative scaling → batched runtime scoring.
     * Output: (id, embedding array<float>, batch_rows) — `batch_rows`
     * records the actual batch each row rode in, so tests can assert the
     * spec's batch size took effect (same pattern as Multimodal).
@@ -145,14 +100,13 @@ final class ExternalModel(
     val spark = df.sparkSession
     import spark.implicits._
     val w = featureWidth
-    val guarded = when(size(col(featuresCol)) === w, col(featuresCol))
-      .otherwise(raise_error(concat(
-        lit(s"ml_predict: model '${item.name}' expects $w features, got "),
-        size(col(featuresCol)).cast("string"))))
+    val guarded = MlmInput.widthGuard(col(featuresCol), w,
+      s"ml_predict: model '${item.name}' expects $w features, got ")
     val bs = batchSize
     val rt = runtime // local vals only — the closure must not drag `this`
     val scored = df.select(col(idCol).cast("long").as("_id"),
-        scaleExpr(guarded, spark).cast("array<float>").as("_f"))
+        MlmInput.scale(spark, guarded, input.scaling, input.processing, w)
+          .cast("array<float>").as("_f"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         it.grouped(bs).flatMap { batch =>
@@ -256,8 +210,11 @@ final class ExternalModel(
       // reference cuts off partial windows — incomplete tiles drop
       .filter(size(col("_cells")) === tileW)
       .withColumn("_feats",
-        scaleFlat(transform(col("_cells"), c => c.getField("v")), bandExtent,
-          ty * tx, spark).cast("array<float>"))
+        MlmInput.scale(spark, transform(col("_cells"), c => c.getField("v")),
+          input.scaling, input.processing, bandExtent, ty * tx,
+          channelFirst = orderNames.headOption.exists(d =>
+            graft.cube.DimAliases.band.contains(d) || d == "channel"))
+          .cast("array<float>"))
       .drop("_cells")
     val keptCols = others :+ "_tile_x" :+ "_tile_y"
     val prepped = assembled.select((keptCols.map(col) :+ col("_feats")): _*)
@@ -296,33 +253,6 @@ final class ExternalModel(
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
-  /** Scaling over the FLAT tile feature array: single-entry scaling
-    * broadcasts; per-band entries require channel-first dim order and
-    * expand to per-flat-position parameter literals on the driver. */
-  private def scaleFlat(feats: Column, bandExtent: Int, cellsPerBand: Int,
-                        spark: org.apache.spark.sql.SparkSession): Column =
-    input.processing match {
-      case Some(e) => transform(feats, x =>
-        ProcessExpression.column(spark, e, Map("x" -> x)))
-      case None => input.scaling match {
-        case Nil => feats
-        case one :: Nil =>
-          transform(feats, x => applyOne(one, x, lit(one.p1), lit(one.p2)))
-        case many =>
-          require(many.length == bandExtent,
-            s"ml_predict: ${many.length} value_scaling entries for " +
-              s"$bandExtent bands")
-          require(input.dimOrder.filterNot(_ == "batch").headOption.exists(
-            d => graft.cube.DimAliases.band.contains(d) || d == "channel"),
-            "ml_predict: per-band tile scaling requires channel-first input")
-          val p1s = typedlit(many.flatMap(v => Seq.fill(cellsPerBand)(v.p1)))
-          val p2s = typedlit(many.flatMap(v => Seq.fill(cellsPerBand)(v.p2)))
-          transform(feats, (x, i) =>
-            applyOne(many.head, x, element_at(p1s, i + 1),
-              element_at(p2s, i + 1)))
-      }
-    }
-
   /** ml_predict over a datacube: pivot the band dimension into the model's
     * input band order (one shuffle on the non-band dims), score, and
     * explode the output embedding back to long format — the cube → batches
@@ -333,32 +263,19 @@ final class ExternalModel(
   def predictCube(cube: graft.cube.DataCube): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val b = cube.requireDim(cube.bandDim, "bands")
-    val keep = cube.dims.filterNot(_ == b)
-    val vcol = col(cube.valueCol)
     require(input.bands.nonEmpty,
       "ml_predict: the selected mlm:input declares no bands")
     require(featureWidth == input.bands.length,
       s"ml_predict: cube predict supports 1-D feature models; input " +
         s"declares ${input.bands.length} bands but width $featureWidth")
-    // max, not first: deterministic pivot (partition-order-invariant; on
-    // duplicate (dims, band) rows with mixed NaN the NaN wins — the
-    // conservative nodata-ward resolution). See RfClassModel.predictCube.
-    val feats = array(input.bands.map { name =>
-      val alts = graft.cube.BandAliases.alternatives(name).map(_.toLowerCase)
-      max(when(lower(col(b)).isin(alts: _*) || col(b) === name, vcol))
-    }: _*)
-    val guarded = when(exists(feats, _.isNull),
-        raise_error(lit("ml_predict: cube is missing one of bands " +
-          input.bands.mkString("[", ",", "]"))).cast("array<double>"))
-      .otherwise(feats)
+    val (keep, guarded) = MlmInput.bandPivot(cube, input.bands)
     // keep dims first, features LAST — the closure below relies on
     // position. `_allnan` flags the nodata shortcut cells (checked on the
     // RAW features — numpy scaling preserves NaN-ness, so this matches the
     // reference's post-scale isnan(block).all() test, data_model.py:899).
     val prepped = cube.df.groupBy(keep.map(col): _*)
-      .agg(scaleExpr(guarded, cube.df.sparkSession)
-        .cast("array<float>").as("_feats"),
+      .agg(MlmInput.scale(cube.df.sparkSession, guarded, input.scaling,
+          input.processing, featureWidth).cast("array<float>").as("_feats"),
         forall(guarded, x => isnan(x)).as("_allnan"),
         element_at(guarded, 1).as("_nanval"))
       .select((keep.map(col) :+ col("_feats") :+ col("_allnan") :+
@@ -374,10 +291,9 @@ final class ExternalModel(
     val nKeep = keep.length
     val ow = outputWidth
     // ONE pass: the nodata split happens INSIDE the scoring stage —
-    // `prepped` (built on first(...) pivots, non-deterministic under
-    // duplicate (dims, band) rows with mixed NaN) is evaluated exactly
-    // once, so a cell can never land in both or neither branch the way
-    // two complementary filters over separate plan subtrees could.
+    // `prepped` is evaluated exactly once, so a cell can never land in
+    // both or neither branch the way two complementary filters over
+    // separate plan subtrees could.
     // Nodata cells expand to a NaN output vector, the model never called.
     // The NaN is `_nanval` — the RAW first feature (all-NaN by the flag;
     // the scaled `_feats` could have rewritten it, Spark's least/greatest

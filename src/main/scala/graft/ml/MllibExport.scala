@@ -1,9 +1,11 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.RandomForestClassificationModel
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
 
-import graft.core.Tables
+import org.apache.spark.ml.GraftMlBridge
+import org.apache.spark.ml.classification.RandomForestClassificationModel
+import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, Node}
+import org.apache.spark.sql.SparkSession
 
 /** Export an MLlib [[RandomForestClassificationModel]] to the
   * `graft-sk-forest` JSON format (the A29 interop format), closing the
@@ -16,13 +18,12 @@ import graft.core.Tables
   * SQL-replayable (SURVEY §6): fit once, export at save time, pin the
   * artifact, hash-gate every score against it (`ml_rf_score_pinned`).
   *
-  * The tree walk uses MLlib's OWN persisted representation — `model.write
-  * .save` then the `data/` parquet (treeID, nodeData{id, impurityStats,
-  * leftChild, rightChild, split}) — not the in-memory `Node` graph, whose
-  * `impurityStats` member is `private[ml]`. The on-disk node tables are
-  * the stable public format every MLlib version can reload, and node ids
-  * are contiguous preorder per tree, so they map 1:1 onto the JSON's
-  * index-addressed node arrays.
+  * The export walks the fitted in-memory trees (`model.trees`) and numbers
+  * each tree's nodes in preorder, exactly as MLlib's own `model.write`
+  * numbers its node tables (`NodeData.build`), so node ids map 1:1 onto
+  * the JSON's index-addressed node arrays. A leaf's class counts are
+  * `private[ml]`; they come through [[org.apache.spark.ml.GraftMlBridge]].
+  * Nothing is written or read, and no Spark job runs.
   *
   * Semantics parity with MLlib `transform`:
   *  - split: `features(f) <= threshold` → left child — MLlib's
@@ -46,60 +47,39 @@ object MllibExport {
   private def d(x: Double) = x.toString // round-trips bit-exactly
 
   /** Serialize `model` as graft-sk-forest JSON; `classes(i)` is the
-    * original value MLlib class index `i` decodes to. Saves the model into
-    * a temp directory, deleted before returning, to read its node tables;
-    * a caller that has already saved the model uses [[savedToSkForestJson]]
-    * instead. */
-  def toSkForestJson(spark: SparkSession,
-                     model: RandomForestClassificationModel,
+    * original value MLlib class index `i` decodes to. */
+  def toSkForestJson(model: RandomForestClassificationModel,
                      classes: Seq[Double]): String = {
-    val tmp = new org.apache.hadoop.fs.Path(java.nio.file.Files
-      .createTempDirectory("graft_mllib_export_").toUri)
-    try {
-      model.write.overwrite().save(tmp.toString)
-      savedToSkForestJson(spark, model, tmp.toString, classes)
-    } finally
-      tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tmp, true)
-  }
-
-  /** [[toSkForestJson]] over the node tables of `model` as already saved
-    * under `savedDir` (`model.write.save(savedDir)`), so nothing is written.
-    * Driver-side work is model-sized (the node tables), never data-sized. */
-  private[ml] def savedToSkForestJson(spark: SparkSession,
-                                      model: RandomForestClassificationModel,
-                                      savedDir: String,
-                                      classes: Seq[Double]): String = {
     require(classes.size == model.numClasses,
       s"export: ${classes.size} class values for ${model.numClasses} classes")
-    val rows = Tables.parquet(spark, s"$savedDir/data")
-      .select("treeID", "nodeData.id", "nodeData.impurityStats",
-        "nodeData.leftChild", "nodeData.rightChild",
-        "nodeData.split.featureIndex",
-        "nodeData.split.leftCategoriesOrThreshold",
-        "nodeData.split.numCategories")
-      .collect() // SCALE:mllib-export-nodes
-    val trees = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map {
-      case (_, nodes) =>
-        val byId = nodes.sortBy(_.getInt(1))
-        require(byId.zipWithIndex.forall { case (r, i) => r.getInt(1) == i },
-          "export: MLlib node ids are not contiguous 0..n-1 within a tree")
-        byId.map { r =>
-          val (l, rr) = (r.getInt(3), r.getInt(4))
-          if (l < 0) {
-            val stats = r.getSeq[Double](2)
+    val trees = model.trees.map { t =>
+      val nodes = ArrayBuffer.empty[String]
+      // preorder: a node's id is its position, left subtree before right
+      def walk(node: Node): Int = {
+        val id = nodes.length
+        nodes += null
+        nodes(id) = node match {
+          case n: InternalNode =>
+            val split = n.split match {
+              case s: ContinuousSplit => s
+              case _ => throw new IllegalArgumentException("export: " +
+                "categorical splits are not representable in " +
+                "graft-sk-forest (continuous features only)")
+            }
+            val (l, r) = (walk(n.leftChild), walk(n.rightChild))
+            s"""{"l":$l,"r":$r,"f":${split.featureIndex},"t":${d(split.threshold)}}"""
+          case leaf =>
+            val stats = GraftMlBridge.impurityStats(leaf)
             val tot = stats.sum
             require(tot > 0, "export: leaf with zero impurityStats total")
-            require(stats.size == classes.size,
-              s"export: leaf stats width ${stats.size} != ${classes.size}")
+            require(stats.length == classes.size,
+              s"export: leaf stats width ${stats.length} != ${classes.size}")
             s"""{"l":-1,"r":-1,"p":[${stats.map(s => d(s / tot)).mkString(",")}]}"""
-          } else {
-            require(r.getInt(7) == -1,
-              "export: categorical splits are not representable in " +
-                "graft-sk-forest (continuous features only)")
-            val t = r.getSeq[Double](6).head
-            s"""{"l":$l,"r":$rr,"f":${r.getInt(5)},"t":${d(t)}}"""
-          }
-        }.mkString("""{"nodes":[""", ",", "]}")
+        }
+        id
+      }
+      walk(t.rootNode)
+      nodes.mkString("""{"nodes":[""", ",", "]}")
     }
     s"""{"framework":"graft-sk-forest","n_features":${model.numFeatures},""" +
       s""""classes":[${classes.map(d).mkString(",")}],""" +
@@ -126,7 +106,7 @@ object MllibExport {
   def fitAndExport(spark: SparkSession, sfDir: String): String = {
     val m = fitPinned(spark, sfDir).model.get
     // decode = mlIndex - 1 (the +1 R-compat shift ml_fit applies)
-    toSkForestJson(spark, m, (0 until m.numClasses).map(_ - 1.0))
+    toSkForestJson(m, (0 until m.numClasses).map(_ - 1.0))
   }
 
   def main(args: Array[String]): Unit = {

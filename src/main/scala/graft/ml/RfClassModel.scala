@@ -27,7 +27,7 @@ final class RfClassModel(
 
   def pretrained: Boolean = model.isDefined
 
-  /** ml_predict: validate input width → apply the spec's value scaling →
+  /** ml_predict: the [[MlmInput]] width guard and value scaling →
     * assemble the MLlib vector → transform. The width check is an
     * execution-time raise_error guard, so it costs no extra pass and fails
     * on the first bad row (reference: data_model.py:222 dim checks).
@@ -36,26 +36,10 @@ final class RfClassModel(
     val m = model.getOrElse(
       throw new IllegalStateException("ml_predict: model is not trained"))
     val n = spec.featureWidth
-    val guarded = when(size(col(featuresCol)) === n, col(featuresCol))
-      .otherwise(raise_error(concat(
-        lit(s"ml_predict: expected $n features, got "),
-        size(col(featuresCol)).cast("string"))))
-    val scaled = spec.scaling match {
-      case Some(ValueScaling("min-max", lo, hi)) =>
-        transform(guarded, x => (x - lit(lo)) / lit(hi - lo))
-      case Some(ValueScaling("z-score", mu, sd)) =>
-        transform(guarded, x => (x - lit(mu)) / lit(sd))
-      case Some(ValueScaling("scale", s, _))  => transform(guarded, x => x / lit(s))
-      case Some(ValueScaling("offset", o, _)) => transform(guarded, x => x - lit(o))
-      case Some(ValueScaling("clip", lo, hi)) =>
-        transform(guarded, x => least(greatest(x, lit(lo)), lit(hi)))
-      case Some(ValueScaling("clip-min", lo, _)) =>
-        transform(guarded, x => greatest(x, lit(lo)))
-      case Some(ValueScaling("clip-max", hi, _)) =>
-        transform(guarded, x => least(x, lit(hi)))
-      case Some(v) => throw new IllegalArgumentException(s"unknown scaling ${v.kind}")
-      case None    => guarded
-    }
+    val scaled = MlmInput.scale(df.sparkSession,
+      MlmInput.widthGuard(col(featuresCol), n,
+        s"ml_predict: expected $n features, got "),
+      spec.scaling.toList)
     // Reserved-name hygiene: assemble into uniquely-named temp columns (a
     // caller's own `features`/`rawPrediction`/`probability` must survive);
     // `prediction` IS the public output, so an existing one fails fast
@@ -75,36 +59,16 @@ final class RfClassModel(
   }
 
   /** ml_predict on a datacube (reference: data_model.py:438,666 — cube →
-    * batches → cube reshaping): pivot the band dimension into the model's
-    * feature order (spec.bands, resolved through the cube's labels), run
-    * the vector predict, return a cube keyed by the remaining dimensions.
-    * The pivot is one conditional aggregation — a single shuffle on the
-    * non-band dims; prediction itself stays map-only.
+    * batches → cube reshaping): the [[MlmInput]] band pivot into the
+    * model's feature order (spec.bands, resolved through the cube's
+    * labels), the vector predict, and a cube keyed by the remaining
+    * dimensions. The pivot is one conditional aggregation — a single
+    * shuffle on the non-band dims; prediction itself stays map-only.
     */
   def predictCube(cube: graft.cube.DataCube): graft.cube.DataCube = {
-    val b = cube.requireDim(cube.bandDim, "bands")
-    val keep = cube.dims.filterNot(_ == b)
-    val vcol = col(cube.valueCol)
-    // max, not first: a deterministic pivot. first() re-evaluated across
-    // the two nodata branches below could disagree on a cell holding
-    // duplicate (dims, band) rows with mixed NaN/non-NaN values (the cell
-    // would land in both or neither branch), and its pick depends on
-    // partition order. max ignores nulls the same way, is identical on
-    // well-formed cubes (one row per (dims, band)), and on poisoned
-    // duplicates resolves NaN-dominant (Spark orders NaN greatest) — the
-    // conservative choice, routing the cell to the nodata path.
-    val feats = array(spec.bands.map { name =>
-      val alts = graft.cube.BandAliases.alternatives(name).map(_.toLowerCase)
-      max(when(lower(col(b)).isin(alts: _*) || col(b) === name, vcol))
-    }: _*)
-    // missing band for a cell-group → null element → fail at execution time
-    // (reference raises on dimension/band mismatch before predicting)
-    val guarded = when(exists(feats, _.isNull),
-        raise_error(lit(s"ml_predict: cube is missing one of bands " +
-          spec.bands.mkString("[", ",", "]"))).cast("array<double>"))
-      .otherwise(feats)
+    val (keep, feats) = MlmInput.bandPivot(cube, spec.bands)
     val assembled = cube.df.groupBy(keep.map(col): _*)
-      .agg(guarded.as("_features"))
+      .agg(feats.as("_features"))
     // nodata shortcut (reference data_model.py:899 save_blocks): a cell
     // whose features are ALL NaN never reaches the model and predicts NaN
     // — the empty-block sentinel of the dask path, per-row here.
@@ -134,10 +98,9 @@ final class RfClassModel(
     // chains), which is how the pinned-forest gate fixture
     // (ml_rf_score_pinned) is produced. classes(i) = i - 1 undoes
     // ml_fit's +1 R-compat label shift.
-    val spark = org.apache.spark.sql.SparkSession.active
-    ProbeModels.write(spark, s"$path/skforest.json",
-      MllibExport.savedToSkForestJson(spark, m, s"$path/model",
-        (0 until m.numClasses).map(_ - 1.0)))
+    ProbeModels.write(org.apache.spark.sql.SparkSession.active,
+      s"$path/skforest.json",
+      MllibExport.toSkForestJson(m, (0 until m.numClasses).map(_ - 1.0)))
   }
 }
 

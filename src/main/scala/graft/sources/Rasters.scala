@@ -31,7 +31,8 @@ import graft.cube.{Crs, DataCube}
   *   - Both axes are read in ONE aggregate over the cube: each axis's
   *     sorted distinct labels, O(axis) driver rows (the resample
   *     target-grid contract, never O(cube)), and whether any label is
-  *     null, which fails the write before any file is written.
+  *     null, which fails the write before any file is written. The Zarr
+  *     writer takes its O(slices) slice keys from that same aggregate.
   *
   * All three loaders read back through `binaryFile` sources — one task per
   * file/chunk, distributed parse, no driver funnel — and RasterSpec pins
@@ -44,32 +45,45 @@ object Rasters {
   // ---- shared slicing -----------------------------------------------------
 
   /** (sliceDims, xs, ys, slice-key → dense row-major Array[Double]) plumbing
-    * shared by the per-slice writers. Missing cells are NaN (nodata). */
+    * shared by the per-slice writers. Missing cells are NaN (nodata).
+    * `slices` holds the sorted distinct slice keys when [[plan]] was asked
+    * for them, else nothing. */
   private case class GridPlan(xd: String, yd: String, sliceDims: Seq[String],
-                              xs: Array[Long], ys: Array[Long])
+                              xs: Array[Long], ys: Array[Long],
+                              slices: Seq[Seq[Any]] = Nil)
 
   /** The x and y axes from ONE aggregate over the cube: per axis the
     * sorted distinct labels and whether any label is null. A cell with a
     * null label has no pixel, so a null fails with an
     * IllegalArgumentException naming the dimension, before any file is
-    * written. Every aggregate here ignores duplicates (`collect_set`,
-    * `max`), which lets Spark's RemoveRedundantAggregates drop a cube's
-    * own group-by from this pass (a null COUNT would keep it). */
-  private def plan(cube: DataCube): GridPlan = {
+    * written. With `withSlices` the same aggregate also collects the
+    * sorted distinct slice keys. Every aggregate here ignores duplicates
+    * (`collect_set`, `max`), which lets Spark's RemoveRedundantAggregates
+    * drop a cube's own group-by from this pass (a null COUNT would keep
+    * it). */
+  private def plan(cube: DataCube, withSlices: Boolean = false): GridPlan = {
     val xd = cube.requireDim(cube.xDim, "x")
     val yd = cube.requireDim(cube.yDim, "y")
     val others = cube.dims.filterNot(d => d == xd || d == yd)
-    val r = cube.df.select(Seq(xd, yd).flatMap { d =>
+    val keys =
+      if (withSlices && others.nonEmpty)
+        Seq(array_sort(collect_set(struct(others.map(col): _*))))
+      else Nil
+    val r = cube.df.select((Seq(xd, yd).flatMap { d =>
       val label = col(d).cast("long")
       Seq(array_sort(collect_set(label)), max(label.isNull))
-    }: _*).collect()(0) // SCALE:raster-slice-keys
+    } ++ keys): _*).collect()(0) // SCALE:raster-grid-labels
     def axis(i: Int, d: String): Array[Long] = {
       require(r.isNullAt(2 * i + 1) || !r.getBoolean(2 * i + 1),
         s"raster writers need a label on every cell: dimension $d has " +
           "null labels")
       r.getSeq[Long](2 * i).toArray
     }
-    GridPlan(xd, yd, others, axis(0, xd), axis(1, yd))
+    val slices =
+      if (!withSlices) Nil
+      else if (others.isEmpty) Seq(Seq.empty[Any])
+      else r.getSeq[Row](4).map(_.toSeq)
+    GridPlan(xd, yd, others, axis(0, xd), axis(1, yd), slices)
   }
 
   private def sliceName(dims: Seq[String], key: Seq[Any]): String =
@@ -442,7 +456,7 @@ object Rasters {
     * (fill_value "NaN" in the metadata). */
   def saveZarr(cube: DataCube, path: String, chunkY: Int = 256,
                chunkX: Int = 256): Unit = {
-    val gp = plan(cube)
+    val gp = plan(cube, withSlices = true)
     val spark = cube.df.sparkSession
     freshDir(spark, path)
     val w = gp.xs.length; val h = gp.ys.length
@@ -461,18 +475,14 @@ object Rasters {
       s"""{"zarr_format":2,"shape":[$h,$w],"chunks":[$ch,$cw],
          |"dtype":"<f8","compressor":null,"fill_value":"NaN",
          |"order":"C","filters":null}""".stripMargin.replace("\n", "")
-    val sliceKeys =
-      if (gp.sliceDims.isEmpty) Seq(Seq.empty[Any])
-      else cube.df.select(sliceCols: _*).distinct().collect() // SCALE:raster-axis-labels
-        .map(_.toSeq).toSeq
-    sliceKeys.foreach { k =>
+    gp.slices.foreach { k =>
       writeFile(spark, s"$path/${sliceName(gp.sliceDims, k)}/.zarray",
         meta.getBytes("UTF-8"))
     }
     // consolidated metadata (zarr v2 convention): every .zarray inlined
     // under one key map, so a consumer opens the store with ONE read
     // instead of listing slice directories — O(slices) driver-side JSON
-    val entries = sliceKeys.map { k =>
+    val entries = gp.slices.map { k =>
       s""""${sliceName(gp.sliceDims, k)}/.zarray":$meta"""
     }.mkString(",")
     writeFile(spark, s"$path/.zmetadata",

@@ -270,8 +270,9 @@ object DedupStreams {
         gramSchema)
   }
 
-  /** One micro-batch novelty decision: given this batch's distinct
-    * (doc, gram) rows and the gram store, return (scores, newGrams).
+  /** (scores, newGrams) of a gram [[storeJoin]] ([[dedupSplit]]'s shape):
+    * one micro-batch novelty decision over the batch's distinct (doc, gram)
+    * rows and the gram store.
     *
     * A gram counts as "seen" for a document when its first carrier — the
     * store owner, or the batch's min id for store-misses — is an EARLIER
@@ -281,11 +282,6 @@ object DedupStreams {
     * .noveltyScores]]'s order-free min-carrier aggregate, evaluated
     * incrementally. StreamingSpec pins micro-batch-split ≡ whole-corpus.
     */
-  def noveltyStep(grams: DataFrame, store: DataFrame,
-                  idCol: String = "doc_id"): (DataFrame, DataFrame) =
-    noveltySplit(storeJoin(grams, store, Seq("gram"), idCol), idCol)
-
-  /** (scores, newGrams) of a gram [[storeJoin]] ([[dedupSplit]]'s shape). */
   private def noveltySplit(joined: DataFrame,
                            idCol: String): (DataFrame, DataFrame) = {
     val first = coalesce(col("_old"), col("_bmin"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.{Fixtures, Tables}
-import graft.ml.{MlProcesses, MlmSpec, ValueScaling}
+import graft.ml.{MlProcesses, MlmSpec, RfClassModel, ValueScaling}
 
 /** Value-level invariants for the ML processes (the driver gate only checks
   * rows): the forest must beat chance by a wide margin on the 10-class
@@ -149,6 +149,32 @@ class MlSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("expected 64 features") ||
       ex.getCause != null)
+  }
+
+  test("predict applies the spec's value scaling: z-score, min-max and " +
+       "clip equal the unscaled trees on pre-scaled features") {
+    import spark.implicits._
+    val raw = emb.select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().toSeq
+    // the documented formulas (scaling_utils.py), applied on the driver
+    val cases = Seq[(ValueScaling, Double => Double)](
+      ValueScaling("z-score", 0.05, 0.2) -> (x => (x - 0.05) / 0.2),
+      ValueScaling("min-max", -0.5, 0.5) -> (x => (x - -0.5) / (0.5 - -0.5)),
+      ValueScaling("clip", -0.05, 0.05) -> (x => math.min(math.max(x, -0.05), 0.05)))
+    val plain = MlProcesses.mlPredict(model, emb).select("vec_id", "prediction")
+    for ((v, f) <- cases) {
+      val scaled = new RfClassModel(model.spec.copy(scaling = Some(v)), model.model)
+      val viaSpec = MlProcesses.mlPredict(scaled, emb)
+        .select("vec_id", "prediction")
+      val prescaled = raw.map { case (id, e) => (id, e.map(x => f(x.toDouble))) }
+        .toDF("vec_id", "embedding")
+      val viaData = MlProcesses.mlPredict(model, prescaled)
+        .select("vec_id", "prediction")
+      assert(viaSpec.exceptAll(viaData).isEmpty && viaData.exceptAll(viaSpec).isEmpty,
+        s"${v.kind}: the spec's scaling must predict as the pre-scaled features")
+      assert(!viaSpec.exceptAll(plain).isEmpty,
+        s"${v.kind}: the scaling changes no prediction, so it shows nothing")
+    }
   }
 
   test("fit rejects a training set with unequal feature widths") {

@@ -23,7 +23,7 @@ class MllibExportSpec extends SparkSpec {
   private lazy val fitted = MllibExport.fitPinned(spark, sfDir)
   private lazy val exported = {
     val m = fitted.model.get
-    MllibExport.toSkForestJson(spark, m, (0 until m.numClasses).map(_ - 1.0))
+    MllibExport.toSkForestJson(m, (0 until m.numClasses).map(_ - 1.0))
   }
 
   test("re-fit + export reproduces the committed resource byte-for-byte") {

@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every build-once fixture takes its dirs, its cache and its stream drain
   * from [[graft.core.Fixtures]]. Hand-rolled copies leaked their temp dirs
-  * and could build a fixture twice, so a new one anywhere fails the build.
-  * `MllibExport.toSkForestJson` keeps its own temp dir: it deletes it in a
-  * `finally`. The specs take their scratch dirs and files from
-  * `Fixtures.dir` too, so a test run leaves nothing in `java.io.tmpdir`. */
+  * and could build a fixture twice, so a new one anywhere fails the build:
+  * `Fixtures` is the one place in src/main that creates a temp dir. The
+  * specs take their scratch dirs and files from `Fixtures.dir` too, so a
+  * test run leaves nothing in `java.io.tmpdir`. */
 class TempDirSpec extends AnyFunSuite {
 
   private val repo = new java.io.File(".").getCanonicalFile.toPath
@@ -29,13 +29,12 @@ class TempDirSpec extends AnyFunSuite {
     finally stream.close()
   }
 
-  test("src/main creates temp dirs only in Fixtures and MllibExport") {
-    val allowed = Seq("src/main/scala/graft/core/Fixtures.scala:",
-      "src/main/scala/graft/ml/MllibExport.scala:")
+  test("src/main creates temp dirs only in Fixtures") {
+    val allowed = "src/main/scala/graft/core/Fixtures.scala:"
     val found = sites("src/main", "createTemp" + "Directory")
-    assert(allowed.forall(a => found.exists(_.startsWith(a))),
-      s"expected a temp dir call in each of ${allowed.mkString(", ")}")
-    val stray = found.filterNot(f => allowed.exists(f.startsWith))
+    assert(found.exists(_.startsWith(allowed)),
+      s"expected a temp dir call in $allowed")
+    val stray = found.filterNot(_.startsWith(allowed))
     assert(stray.isEmpty,
       s"temp dirs outside Fixtures.dir: ${stray.mkString(", ")}")
   }
